@@ -14,6 +14,9 @@ Contract preserved from the reference:
   ``operation``), ``row_count`` and ``last_refreshed_at``, updated only
   after a successful materialization
   (``backend/app/processor/spark_processor.py:139-167``);
+- ``schema`` (an addition: the written table's Spark schema as JSON) is
+  recorded in the same step as ``row_count``, so a segment scan never
+  needs a schema-inference job;
 - lineage is a DAG traversed driver-side (``backend/app/api/segments.py:
   127-157``).
 """
@@ -69,13 +72,16 @@ class SegmentMeta:
     last_refreshed_at: str | None = None
     # which intersection semantics produced the table (quirk Q5 bookkeeping)
     combine_keys: list | None = None
+    # StructType.jsonValue() of the materialized table; None until the
+    # first refresh (readers then infer it from the parquet footers)
+    schema: dict | None = None
 
 
 def _now() -> str:
     return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%fZ")
 
 
-CATALOG_VERSION = 2
+CATALOG_VERSION = 3
 
 # Schema-evolution chain (the reference carries Alembic migrations plus
 # hand-rolled fixups, ``backend/migrations/versions/ff9aab17097a_*.py``,
@@ -90,7 +96,14 @@ def _migrate_v2(doc: dict[str, Any]) -> None:
         raw.setdefault("next_run_at", None)
 
 
-MIGRATIONS: dict[int, Any] = {2: _migrate_v2}
+def _migrate_v3(doc: dict[str, Any]) -> None:
+    """v2 -> v3: segments gained ``schema``; existing tables have none
+    recorded, so their readers keep inferring until the next refresh."""
+    for raw in doc["segments"].values():
+        raw.setdefault("schema", None)
+
+
+MIGRATIONS: dict[int, Any] = {2: _migrate_v2, 3: _migrate_v3}
 
 
 class Catalog:
@@ -215,11 +228,12 @@ class Catalog:
         raw = self._doc["segments"].get(str(rule_id))
         return SegmentMeta(**raw) if raw else None
 
-    def record_refresh(self, rule_id: int, row_count: int) -> None:
-        """Row-count + refresh-stamp upkeep (M6) — only called after the
-        parquet write succeeded, so failures leave the catalog unchanged."""
+    def record_refresh(self, rule_id: int, row_count: int, schema: dict) -> None:
+        """Row-count, schema + refresh-stamp upkeep (M6) — only called after
+        the parquet write succeeded, so failures leave the catalog unchanged."""
         seg = self._doc["segments"][str(rule_id)]
         seg["row_count"] = row_count
+        seg["schema"] = schema
         seg["last_refreshed_at"] = _now()
         self._save()
 

@@ -25,11 +25,13 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .catalog import Catalog, Rule, SegmentMeta
 from .operators.segments import combine_segments
-from .plans.dependency_finder import find_best_dependency
+from .plans.dependency_finder import conditions_to_set, find_best_dependency
 from .plans.rule_compiler import RuleCompiler
 from .sources.transactions import TRANSACTION_COLUMNS  # noqa: F401 (re-export)
 
@@ -60,8 +62,7 @@ class AudienceEngine:
         """Entry point A (SURVEY.md §3.1): validate -> dependency rewrite ->
         compile -> persist. No data touched."""
         self.compiler.compile(conditions)  # validate early (strict by default)
-        existing = [(r.rule_id, r.conditions) for r in self.catalog.active_rules()]
-        rewrite = find_best_dependency(conditions, existing)
+        rewrite = find_best_dependency(conditions, self._planner_candidates())
         if rewrite:
             rule = self.catalog.add_rule(
                 name,
@@ -72,37 +73,17 @@ class AudienceEngine:
             )
         else:
             rule = self.catalog.add_rule(name, conditions=conditions, schedule=schedule)
-        query = self.compiler.compile(rule.conditions)
-        self.catalog.upsert_segment(
-            SegmentMeta(
-                rule_id=rule.rule_id,
-                segment_name=f"Segment for rule: {name}",
-                table_name=f"segment_output_{rule.rule_id}",
-                path=self.catalog.segment_path(rule.rule_id),
-                sql_query=(
-                    query.to_sql("SELECT * FROM all_transactions", dialect="spark")
-                    if rule.conditions or not rule.depends_on
-                    else None
-                ),
-                depends_on=rule.depends_on,
-                operation=rule.operation,
-                combine_keys=self.combine_keys,
-            )
-        )
+        self.catalog.upsert_segment(self._new_segment(rule))
         return rule
 
     def update_rule(self, rule_id: int, conditions: list) -> Rule:
         """Rule update (reference ``backend/app/api/rules.py:108-225``):
         re-validate, re-run the dependency planner EXCLUDING the rule
-        itself (no self-dependency), rewrite catalog metadata. The segment
-        is stale until the next execute."""
+        itself and every rule built on it (no self-dependency, no cycle),
+        rewrite catalog metadata. The segment is stale until the next
+        execute."""
         self.compiler.compile(conditions)
-        existing = [
-            (r.rule_id, r.conditions)
-            for r in self.catalog.active_rules()
-            if r.rule_id != rule_id
-        ]
-        rewrite = find_best_dependency(conditions, existing, rule_id_to_exclude=rule_id)
+        rewrite = find_best_dependency(conditions, self._planner_candidates(exclude=rule_id))
         if rewrite:
             rule = self.catalog.update_rule(
                 rule_id,
@@ -116,12 +97,7 @@ class AudienceEngine:
             )
         meta = self.catalog.get_segment(rule_id)
         if meta:
-            query = self.compiler.compile(rule.conditions)
-            meta.sql_query = (
-                query.to_sql("SELECT * FROM all_transactions", dialect="spark")
-                if rule.conditions or not rule.depends_on
-                else None
-            )
+            meta.sql_query = self._direct_sql(rule)
             meta.depends_on = rule.depends_on
             meta.operation = rule.operation
             self.catalog.upsert_segment(meta)
@@ -137,34 +113,42 @@ class AudienceEngine:
         rule = self.catalog.add_rule(
             name, conditions=[], schedule=schedule, depends_on=depends_on, operation=operation
         )
-        self.catalog.upsert_segment(
-            SegmentMeta(
-                rule_id=rule.rule_id,
-                segment_name=f"Segment for rule: {name}",
-                table_name=f"segment_output_{rule.rule_id}",
-                path=self.catalog.segment_path(rule.rule_id),
-                depends_on=depends_on,
-                operation=operation,
-                combine_keys=self.combine_keys,
-            )
-        )
+        self.catalog.upsert_segment(self._new_segment(rule))
         return rule
 
-    # ------------------------------------------- batch reclassification
-    def effective_conditions(self, rule_id: int) -> list:
-        """A rule's FULL condition payload with dependency rewrites
-        undone: its stored (possibly reduced) conditions plus the
-        effective conditions of everything it depends on, recursively.
-        Cycle-safe; duplicates collapse by the canonical condition set."""
-        from .plans.dependency_finder import conditions_to_set
+    def _direct_sql(self, rule: Rule) -> str | None:
+        """The rule's own query text; None for a pure compound (parents
+        only, no conditions of its own)."""
+        if rule.depends_on and not rule.conditions:
+            return None
+        return self.compiler.compile(rule.conditions).to_sql(
+            "SELECT * FROM all_transactions", dialect="spark"
+        )
 
+    def _new_segment(self, rule: Rule) -> SegmentMeta:
+        return SegmentMeta(
+            rule_id=rule.rule_id,
+            segment_name=f"Segment for rule: {rule.name}",
+            table_name=f"segment_output_{rule.rule_id}",
+            path=self.catalog.segment_path(rule.rule_id),
+            sql_query=self._direct_sql(rule),
+            depends_on=rule.depends_on,
+            operation=rule.operation,
+            combine_keys=self.combine_keys,
+        )
+
+    # ------------------------------------------- dependency planning
+    def _expand(self, rule_id: int) -> tuple[list | None, set[int]]:
+        """(effective conditions, ids of every rule in the tree). The
+        conditions are None when the tree holds a UNION/DIFFERENCE
+        compound: such a segment is not the AND of any condition list."""
         out: list = []
         seen_keys: set = set()
         visited: set[int] = set()
 
-        def visit(rid: int) -> None:
+        def visit(rid: int) -> bool:
             if rid in visited:
-                return
+                return True
             visited.add(rid)
             rule = self.catalog.get_rule(rid)
             for cond in rule.conditions or []:
@@ -173,10 +157,35 @@ class AudienceEngine:
                 if key not in seen_keys:
                     seen_keys.add(key)
                     out.append(cond)
-            for pid in rule.depends_on or []:
-                visit(pid)
+            if not (rule.depends_on and rule.operation):
+                return True  # a base segment (segment_dataframe's rule)
+            if rule.operation.lower() != "intersection":
+                return False
+            return all(visit(pid) for pid in rule.depends_on)
 
-        visit(rule_id)
+        return (out if visit(rule_id) else None), visited
+
+    def effective_conditions(self, rule_id: int) -> list | None:
+        """A rule's FULL condition payload with dependency rewrites
+        undone: its stored (possibly reduced) conditions plus the
+        effective conditions of every intersection parent, recursively.
+        None for a rule whose tree holds a UNION/DIFFERENCE compound.
+        Cycle-safe; duplicates collapse by the canonical condition set."""
+        return self._expand(rule_id)[0]
+
+    def _planner_candidates(self, exclude: int | None = None) -> list[tuple[int, list]]:
+        """(rule_id, effective conditions) of every active rule a new or
+        updated rule may be rewritten onto. Matching on effective, not
+        stored residual, conditions keeps a rewrite from inheriting a
+        parent's hidden conditions; UNION/DIFFERENCE compounds are never
+        offered, and on update neither is any rule built on ``exclude``."""
+        out = []
+        for rule in self.catalog.active_rules():
+            if rule.rule_id == exclude:
+                continue
+            conditions, tree = self._expand(rule.rule_id)
+            if conditions is not None and exclude not in tree:
+                out.append((rule.rule_id, conditions))
         return out
 
     def reclassify_catalog(self) -> dict[int, dict]:
@@ -196,40 +205,26 @@ class AudienceEngine:
         create-time would have produced had the rules arrived in that
         order (pinned by ``tests/test_engine.py``). Rules already
         rewritten are first expanded back to their effective conditions,
-        making the pass idempotent.
+        making the pass idempotent. Explicit UNION/DIFFERENCE compounds
+        (and anything built on one) have no condition list to re-analyze
+        and are left as they are.
 
         Returns {rule_id: {"operation", "depends_on", "conditions"}} for
         inspection/logging."""
         rules = list(self.catalog.active_rules())
         effective = {r.rule_id: self.effective_conditions(r.rule_id) for r in rules}
-        order = sorted(rules, key=lambda r: (len(effective[r.rule_id]), r.rule_id))
+        order = sorted(rules, key=lambda r: (len(effective[r.rule_id] or ()), r.rule_id))
         report: dict[int, dict] = {}
         for r in order:
-            updated = self.update_rule(r.rule_id, effective[r.rule_id])
+            if effective[r.rule_id] is None:
+                updated = r
+            else:
+                updated = self.update_rule(r.rule_id, effective[r.rule_id])
             if self.catalog.get_segment(r.rule_id) is None:
                 # a pre-planner catalog may hold rules with no segment
                 # row at all (raw inserts); create it like create_rule
                 # does so the classification lands somewhere visible
-                query = self.compiler.compile(updated.conditions)
-                self.catalog.upsert_segment(
-                    SegmentMeta(
-                        rule_id=updated.rule_id,
-                        segment_name=f"Segment for rule: {updated.name}",
-                        table_name=f"segment_output_{updated.rule_id}",
-                        path=self.catalog.segment_path(updated.rule_id),
-                        sql_query=(
-                            query.to_sql(
-                                "SELECT * FROM all_transactions",
-                                dialect="spark",
-                            )
-                            if updated.conditions or not updated.depends_on
-                            else None
-                        ),
-                        depends_on=updated.depends_on,
-                        operation=updated.operation,
-                        combine_keys=self.combine_keys,
-                    )
-                )
+                self.catalog.upsert_segment(self._new_segment(updated))
             report[r.rule_id] = {
                 "operation": updated.operation,
                 "depends_on": list(updated.depends_on),
@@ -257,6 +252,11 @@ class AudienceEngine:
     def execute_rule(self, rule_id: int, now=None) -> int:
         """Materialize ``segment_output_<rule_id>`` and update the catalog.
 
+        One Spark write, nothing around it: the rows are counted by a
+        :class:`~pyspark.sql.Observation` on the write itself, and the
+        written schema is recorded next to the count so later reads of
+        the segment skip parquet schema inference (:meth:`read_segment`).
+
         Concurrency: the result is written to a unique temp directory
         and swapped in under an exclusive flock — two concurrent
         ``execute_rule`` calls on the same rule id serialize at the swap
@@ -264,9 +264,9 @@ class AudienceEngine:
         reference has the same race on its DROP TABLE + JDBC rewrite
         two-step, S6; a warehouse engine should not). The lock also
         orders the catalog bookkeeping with the swap, so the recorded
-        row count always describes the directory a reader sees next. On
-        an object store the swap becomes a manifest/metastore pointer
-        flip, the lock a metastore transaction.
+        row count and schema always describe the directory a reader sees
+        next. On an object store the swap becomes a manifest/metastore
+        pointer flip, the lock a metastore transaction.
 
         An empty result still writes a typed empty table (S8 contract).
         Catalog is updated only after a successful write; returns the
@@ -280,10 +280,10 @@ class AudienceEngine:
         df = self.segment_dataframe(rule_id)
         path = self.catalog.segment_path(rule_id)
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(tmp)
-        # count from the written files: one extra cheap job, avoids
-        # recomputing the whole plan just for the count (A9)
-        row_count = self.spark.read.parquet(tmp).count()
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+        row_count = rows.get["rows"]
+        schema = df.schema.jsonValue()
         with open(path + ".lock", "w") as lk:
             fcntl.flock(lk, fcntl.LOCK_EX)
             try:
@@ -294,7 +294,7 @@ class AudienceEngine:
                     shutil.rmtree(old, ignore_errors=True)
                 else:
                     os.rename(tmp, path)
-                self.catalog.record_refresh(rule_id, row_count)
+                self.catalog.record_refresh(rule_id, row_count, schema)
                 self.catalog.mark_run(rule_id, now=now)
             finally:
                 fcntl.flock(lk, fcntl.LOCK_UN)
@@ -305,8 +305,14 @@ class AudienceEngine:
         return {rid: self.execute_rule(rid) for rid in self.catalog.topological_order()}
 
     def read_segment(self, rule_id: int) -> DataFrame:
-        """S2: scan a materialized segment (schema travels with parquet)."""
-        return self.spark.read.parquet(self.catalog.segment_path(rule_id))
+        """S2: scan a materialized segment with the schema recorded at its
+        last refresh, so the scan runs no inference job; a catalog entry
+        without one (written before schemas were recorded) infers it."""
+        reader = self.spark.read
+        meta = self.catalog.get_segment(rule_id)
+        if meta is not None and meta.schema:
+            reader = reader.schema(StructType.fromJson(meta.schema))
+        return reader.parquet(self.catalog.segment_path(rule_id))
 
     def sample_segment(self, rule_id: int, n: int = 10):
         """S10: bounded preview for API display."""

@@ -11,6 +11,23 @@ At 100 TB these tables would be directories of many parquet files
 (optionally partitioned by date); ``spark.read.parquet`` handles both a
 single file and a partitioned directory tree identically, so nothing in the
 engine assumes single-file inputs.
+
+Schema memo: ``spark.read.parquet`` without a schema runs one Spark job
+per call to infer the schema from the footers. :func:`read_parquet` keeps
+each path's inferred schema in a process-wide memo, one entry per
+absolute path, and scans with ``spark.read.schema(...)`` on a hit, so a
+repeated scan of an unchanged table runs no job. An entry is valid while
+both halves of its fingerprint hold:
+
+- the file snapshot: relative name, size and ``mtime_ns`` of every data
+  file under the path (names starting with ``_`` or ``.`` are skipped, as
+  Spark skips them);
+- the session confs that change parquet inference (``_INFERENCE_CONFS``).
+
+Any difference re-infers and replaces the entry, so a rewritten table
+(new columns, new files) is never scanned with a stale schema. A path
+that is not a local file or directory (an object-store URI) bypasses the
+memo.
 """
 
 from __future__ import annotations
@@ -18,6 +35,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Tables the driver fixtures provide (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -40,6 +58,52 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Session confs that change the schema parquet inference produces.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# absolute path -> (fingerprint, inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _snapshot(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every data file under ``path``."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for f in filenames:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(dirpath, f)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only when the
+    schema memo (module docstring) has no valid entry for ``path``."""
+    try:
+        snapshot = _snapshot(path)
+    except OSError:  # missing, or a store URI: Spark resolves (and reports) it
+        return spark.read.parquet(path)
+    fingerprint = (snapshot, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    key = os.path.abspath(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Catalyst prunes columns / pushes filters into the
     parquet reader from the enclosing plan (SURVEY.md S3)."""
@@ -49,7 +113,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +129,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read_parquet(spark, table_path(sf_dir, "events"))
     if dict(df.dtypes).get("ts") == "bigint":
         # integer DIV, not /1000.0: epoch-nanos (~1.7e18) overflow double's
         # 53-bit mantissa and float division lands ±1µs off

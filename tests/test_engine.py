@@ -316,3 +316,63 @@ def test_effective_conditions_expand_dependencies(engine):
         frozenset(AMT.items()),
         frozenset(COUNT.items()),
     }
+
+
+def test_planner_matches_effective_not_residual_conditions(engine):
+    """A rule is matched against what another rule's segment means, not
+    against the residual it stores: [B, C] must not build on [A, B]
+    (stored as its residual [B] over [A]) and silently inherit A."""
+    B = TIER
+    C = COUNT
+    r1 = engine.create_rule("a", [AMT])
+    r2 = engine.create_rule("a_b", [AMT, B])
+    assert r2.depends_on == [r1.rule_id] and r2.conditions == [B]
+    r3 = engine.create_rule("b_c", [B, C])
+    assert r3.depends_on == [] and r3.operation is None
+    assert r3.conditions == [B, C]
+    assert {frozenset(c.items()) for c in engine.effective_conditions(r3.rule_id)} == {
+        frozenset(B.items()),
+        frozenset(C.items()),
+    }
+    # the same holds on update
+    r4 = engine.create_rule("c", [C])
+    updated = engine.update_rule(r4.rule_id, [B, C])
+    assert r3.rule_id in updated.depends_on and r2.rule_id not in updated.depends_on
+
+
+def test_reclassify_leaves_set_compounds_untouched(engine):
+    """An explicit UNION compound is not the AND of its parents:
+    reclassify_catalog leaves it as it is, and the planner never offers it
+    (or any rule built on it) as a parent."""
+    r1 = engine.create_rule("amt", [AMT])
+    r2 = engine.create_rule("tier", [TIER])
+    r3 = engine.create_rule("tier_count", [TIER, COUNT])
+    assert r3.depends_on == [r2.rule_id]
+    u = engine.create_compound_rule("amt_or_tier_count", [r1.rule_id, r3.rule_id], "UNION")
+    d = engine.create_compound_rule("amt_not_tier", [r1.rule_id, r2.rule_id], "DIFFERENCE")
+    assert engine.effective_conditions(u.rule_id) is None
+
+    report = engine.reclassify_catalog()
+
+    for rule in (u, d):
+        after = engine.catalog.get_rule(rule.rule_id)
+        assert (after.operation, after.depends_on, after.conditions) == (
+            rule.operation,
+            rule.depends_on,
+            [],
+        )
+        assert report[rule.rule_id]["operation"] == rule.operation
+    # a new conjunction covering the UNION's parents builds on them, not on it
+    r6 = engine.create_rule("amt_tier_count", [AMT, TIER, COUNT])
+    assert sorted(r6.depends_on) == sorted([r1.rule_id, r3.rule_id])
+
+
+def test_reclassify_duplicate_rules_stays_acyclic(engine):
+    """Two rules with the same conditions: the second builds on the first,
+    and re-planning the first must not build it on the second."""
+    r1 = engine.create_rule("amt", [AMT])
+    r2 = engine.create_rule("amt_again", [AMT])
+    assert r2.depends_on == [r1.rule_id] and r2.conditions == []
+    engine.reclassify_catalog()
+    assert engine.catalog.get_rule(r1.rule_id).depends_on == []
+    assert engine.catalog.topological_order() == [r1.rule_id, r2.rule_id]
