@@ -1703,9 +1703,10 @@ def canary_scan(
     string ops, identical on both engines. Shape: ONE corpus scan
     against the broadcast |canaries| probe list (bounded fan-out per
     row); the report is |canaries| rows, zero-hit probes included."""
-    spark = docs.sparkSession
-    probe_df = spark.createDataFrame(
-        [(c,) for c in canaries], "canary string"
+    from .partitioning import local_table
+
+    probe_df = local_table(
+        docs.sparkSession, [(c,) for c in canaries], "canary string"
     )
     hits = (
         docs.crossJoin(F.broadcast(probe_df))

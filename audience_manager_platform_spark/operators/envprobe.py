@@ -56,9 +56,9 @@ PROBE_VECTOR: list[tuple[str, float]] = [
 
 
 def _probe_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        PROBE_VECTOR, "case_name string, x double"
-    )
+    from .partitioning import local_table
+
+    return local_table(spark, PROBE_VECTOR, "case_name string, x double")
 
 
 def _values_sql() -> str:

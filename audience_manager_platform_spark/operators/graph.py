@@ -719,7 +719,7 @@ def bfs_distances(
     = ``max_depth``, a constant — at 100 TB each round is one shuffle
     keyed on node id.
     """
-    from .partitioning import materialize
+    from .partitioning import local_table, materialize
 
     if edges is None:
         edges = cooccurrence_edges(pairs, ctx_col, item_col, min_cooc)
@@ -735,15 +735,8 @@ def bfs_distances(
 
     # levels[d] = the distance-d frontier. Only each round's NEW frontier
     # is materialized; the visited set is the lazy union of the already-
-    # materialized levels (k tiny columnar scans), so the former
-    # per-round `materialize(visited ∪ nxt)` rewrite — which re-wrote
-    # every earlier level to disk once per remaining round — is gone
-    # (r10 optimization: 2·depth+2 materialize round-trips → depth).
-    # The 1-row seed is a local relation; materializing it bought
-    # nothing.
-    seed = spark.createDataFrame(
-        [(int(source), 0)], "node bigint, distance int"
-    )
+    # materialized levels (k tiny columnar scans).
+    seed = local_table(spark, [(int(source), 0)], "node bigint, distance int")
     levels = [seed]
     frontier = seed
     for d in range(1, max_depth + 1):

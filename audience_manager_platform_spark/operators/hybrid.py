@@ -445,8 +445,8 @@ def chunk_maxsim_ivf_topk(
     :func:`chunk_cell_index` (the registry memoizes one build per
     corpus — production trains the index once and serves many query
     sets; without it this function builds the index inline first)."""
-    from .partitioning import spread
-    from .similarity import _d, _values_relation
+    from .partitioning import local_table, spread
+    from .similarity import _model_df
     from .text import hash_embed
 
     if index is None:
@@ -464,16 +464,7 @@ def chunk_maxsim_ivf_topk(
         .select("query_id", "qv", _norm_dim("qv", dim).alias("qn"))
         .filter(F.col("qn") > 0)
     )
-    # the centroid table is driver state; inline it as a VALUES
-    # LocalRelation (zero jobs per action — see similarity._values_relation)
-    cents = _values_relation(
-        spark,
-        [
-            f"({int(cid)}L, array({','.join(_d(float(x)) for x in cv)}))"
-            for cid, cv in sorted(cell_model)
-        ],
-        "cent_id, cv",
-    )
+    cents = _model_df(spark, cell_model)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("qsim"), F.asc("cent_id")
     )
@@ -499,21 +490,10 @@ def chunk_maxsim_ivf_topk(
         .select("query_id", "qv", "qn", "cent_id")
         .collect()
     )
-    if not probe_rows:
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, doc_id bigint, maxsim double, "
-            "best_chunk_idx bigint, rank int",
-        )
-    probes = _values_relation(
+    probes = local_table(
         spark,
-        [
-            f"({int(r['query_id'])}L, "
-            f"array({','.join(_d(float(x)) for x in r['qv'])}), "
-            f"{_d(float(r['qn']))}, {int(r['cent_id'])}L)"
-            for r in probe_rows
-        ],
-        "query_id, qv, qn, cent_id",
+        probe_rows,
+        "query_id bigint, qv array<double>, qn double, cent_id bigint",
     )
     cells = sorted({int(r["cent_id"]) for r in probe_rows})
     # spread: the materialized index reads back in O(file-count)

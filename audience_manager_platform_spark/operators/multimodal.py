@@ -581,7 +581,10 @@ PHASH_DCT = 8     # low-frequency block edge
 # clears the median by >=1.2e-4 (5 orders above the epsilon) and every
 # tie sits below 5e-13 (4 orders below), and the resulting 500
 # fingerprints are bit-identical under four different matmul summation
-# orders (left/right dgemm association, einsum, longdouble). See
+# orders (left/right dgemm association, einsum, longdouble). This is a
+# deliberate departure from classic pHash (bit = coefficient > median):
+# a coefficient within the epsilon of the median reads 0 here, so such
+# fingerprints need not match a standard pHash implementation. See
 # registry/phash_pins.py for the regeneration history.
 PHASH_TIE_EPS = 1e-9
 TEX_W = TEX_H = 32

@@ -11,7 +11,7 @@ case) the scan already yields hundreds of partitions sized by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -145,6 +145,26 @@ def materialize(df: DataFrame) -> DataFrame:
     _MATERIALIZED.append(path)
     df.write.parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def local_table(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-side rows (a model, a probe set, a spine) as a Spark table
+    — the package's one way to turn Python values into a DataFrame.
+
+    The rows travel as an Arrow table and land JVM-side as a
+    ``LocalRelation``: no Spark job on build or on any later action
+    (a plain ``createDataFrame(rows)`` is a pickled RDD that re-runs a
+    deserialize job inside every consumer action), and every value is
+    exact — NaN, ±Infinity, NULL and arbitrary strings included, with
+    no SQL literal rendering. ``schema`` is a DDL string; zero ``rows``
+    give a typed empty table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.table(cols, schema=arrow_schema))
 
 
 # When not None, materialize() appends each stage's physical-plan string

@@ -850,7 +850,8 @@ def ivfpq_residual_topk(
     (narrow), then broadcast(probes) ⋈ assigned ⋈ codes and a top-k
     window — the only wide ops are the cent_id candidate join and the
     final window, identical to the raw-vector layout."""
-    from .similarity import IVF_PROBES, KMEANS_K, _model_df, _values_relation
+    from .partitioning import local_table
+    from .similarity import IVF_PROBES, KMEANS_K, _model_df
     from ..functions import cosine_similarity
 
     n_probes = IVF_PROBES if n_probes is None else n_probes
@@ -894,12 +895,8 @@ def ivfpq_residual_topk(
             f"THEN {' + '.join(luts)}"
         )
     adc = F.expr(f"CASE {' '.join(branches)} END")
-    # VALUES LocalRelation, not a pickled-RDD frame (see
-    # similarity._values_relation): the probe set is |q| x n_probes rows
-    probes_df = _values_relation(
-        emb.sparkSession,
-        [f"({qid}L, {cid}L)" for qid, cid in sorted(probe_rows)],
-        "query_id, cent_id",
+    probes_df = local_table(
+        emb.sparkSession, sorted(probe_rows), "query_id bigint, cent_id bigint"
     )
     cand = (
         F.broadcast(probes_df)

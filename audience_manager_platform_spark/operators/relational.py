@@ -98,8 +98,10 @@ def range_join_bands(
     [lo, hi). The band table is tiny → broadcast nested-loop join, which
     is exactly right; for a LARGE range side, bucketize both sides to an
     equi-join key first (documented scale path)."""
-    spark = df.sparkSession
-    band_df = spark.createDataFrame(
+    from .partitioning import local_table
+
+    band_df = local_table(
+        df.sparkSession,
         [(name, float(lo), float(hi)) for name, lo, hi in bands],
         "band string, lo double, hi double",
     )

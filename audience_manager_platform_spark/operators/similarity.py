@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
-from .partitioning import materialize, spread
+from .partitioning import local_table, materialize, spread
 
 # --------------------------------------------------- hyperplane constants
 LSH_TABLES = 8
@@ -710,28 +710,7 @@ def kmeans_fit(
 def _model_df(
     spark: SparkSession, model: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    # A SQL VALUES LocalRelation, not createDataFrame (r11): the model
-    # is driver state, and a pickled-RDD frame re-ran a
-    # defaultParallelism-task deserialize job plus the repartition(1)
-    # shuffle inside EVERY consumer action (measured 0.3-0.6 s per
-    # action under contention; the r6 repartition(1) note chronicles
-    # the previous round of this same cost). A VALUES list parses
-    # JVM-side in milliseconds into a single-partition local relation:
-    # zero jobs, zero shuffles, broadcast-ready, and the K x K
-    # self-cross-join stays a handful of tasks. Literals round-trip
-    # exactly (repr doubles / L-suffixed bigints — see
-    # _values_relation), so values are bit-identical to the
-    # createDataFrame path.
-    if not model:
-        return spark.createDataFrame([], "cent_id bigint, cv array<double>")
-    return _values_relation(
-        spark,
-        [
-            f"({int(cid)}L, array({','.join(_d(float(x)) for x in cv)}))"
-            for cid, cv in model
-        ],
-        "cent_id, cv",
-    )
+    return local_table(spark, model, "cent_id bigint, cv array<double>")
 
 
 def kmeans_fit_model(
@@ -3364,28 +3343,6 @@ def graph_knn_edges(
     )
 
 
-def _values_relation(spark: SparkSession, rows: list[str], cols: str) -> DataFrame:
-    """Model-scale literal table as a SQL ``VALUES`` LocalRelation.
-
-    ``createDataFrame(rows)`` ships the rows as a PICKLED RDD sliced
-    across defaultParallelism — every downstream action re-runs a
-    32-task deserialize job (plus the repartition(1) shuffle the
-    _model_df note documents), which dominated the driver-orchestrated
-    beam search (profiled: 0.3–0.6 s PER ACTION for a 40-row table). A
-    ``VALUES`` list parses JVM-side in milliseconds into a
-    LocalRelation: zero jobs, zero shuffles, broadcast-ready. Literals
-    are rendered by the CALLER with exact round-trips (``repr`` for
-    doubles — shortest-roundtrip in Python, correctly-rounded re-parse
-    in Java — ``str`` + ``L`` suffix for bigints), so values are
-    bit-identical to the collected originals."""
-    return spark.sql(f"SELECT * FROM VALUES {','.join(rows)} AS t({cols})")
-
-
-def _d(x: float | None) -> str:
-    """Exact double literal for :func:`_values_relation` rows."""
-    return "CAST(NULL AS DOUBLE)" if x is None else f"{x!r}D"
-
-
 def graph_beam_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -3467,25 +3424,11 @@ def graph_beam_topk(
         "query_id bigint, neighbor_id bigint, csim double, rank int"
     )
     if not q_rows:
-        return spark.createDataFrame([], out_schema)
-    qdf = _values_relation(
-        spark,
-        [
-            f"({int(r['vec_id'])}L, "
-            f"array({','.join(_d(float(x)) for x in r['v'])}), "
-            f"{_d(float(r['nq']))})"
-            for r in q_rows
-        ],
-        "query_id, qv, nq",
+        return local_table(spark, [], out_schema)
+    qdf = local_table(
+        spark, q_rows, "query_id bigint, qv array<double>, nq double"
     )
-    cents = _values_relation(
-        spark,
-        [
-            f"({int(cid)}L, array({','.join(_d(float(x)) for x in cv)}))"
-            for cid, cv in sorted(model)
-        ],
-        "cent_id, cv",
-    )
+    cents = _model_df(spark, model)
     probe_rows = (
         qdf.crossJoin(F.broadcast(cents.withColumn("nc", _norm_expr("cv"))))
         .select(
@@ -3536,10 +3479,8 @@ def graph_beam_topk(
             # bound is a measured number, not prose
             superstep_rows.append(len(pairs))
         cand_nodes = sorted({n for _, n in pairs})
-        pair_df = _values_relation(
-            spark,
-            [f"({qid}L, {n}L)" for qid, n in sorted(pairs)],
-            "query_id, node",
+        pair_df = local_table(
+            spark, sorted(pairs), "query_id bigint, node bigint"
         )
         scored_rows = (
             assigned.filter(F.col("vec_id").isin(cand_nodes))
@@ -3572,15 +3513,11 @@ def graph_beam_topk(
             cur.update((qid, n) for _, n in lst[:beam])
         last_scored = by_q
     out = [
-        f"({qid}L, {n}L, {_d(c)}, {rank})"
+        (qid, n, c, rank)
         for qid, lst in last_scored.items()
         for rank, (c, n) in enumerate(lst[:k], start=1)
     ]
-    if not out:
-        return spark.createDataFrame([], out_schema)
-    return _values_relation(
-        spark, out, "query_id, neighbor_id, csim, rank"
-    )
+    return local_table(spark, out, out_schema)
 
 
 def graph_beam_topk_sql(

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import local_table
+
 
 def salted_sum_count(
     df: DataFrame, key: str, value_col: str, salt_buckets: int = 16
@@ -332,7 +334,8 @@ def cms_estimate(
         .groupBy("r", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         [
             (int(k), r, _cms_bucket_py(int(k), r))
             for k in query_keys
@@ -627,8 +630,10 @@ def quantile_from_histogram(
     )
     total = hist.agg(F.sum("cnt").alias("n"))
     spark = hist.sparkSession
-    probes = spark.createDataFrame(
-        [(f"p{p}", p) for p in quantile_pcts], "q_label string, q_pct int"
+    probes = local_table(
+        spark,
+        [(f"p{p}", p) for p in quantile_pcts],
+        "q_label string, q_pct int",
     )
     ranks = probes.crossJoin(F.broadcast(total)).select(
         "q_label",
@@ -795,8 +800,10 @@ def quantile_rollup(
     )
     totals = hist.groupBy("day").agg(F.sum("cnt").alias("n"))
     spark = events.sparkSession
-    probes = spark.createDataFrame(
-        [(f"p{p}", p) for p in quantile_pcts], "q_label string, q_pct int"
+    probes = local_table(
+        spark,
+        [(f"p{p}", p) for p in quantile_pcts],
+        "q_label string, q_pct int",
     )
     ranks = totals.crossJoin(F.broadcast(probes)).select(
         "day", "q_label", F.expr("(q_pct * n + 99) div 100").alias("rank")
@@ -1124,7 +1131,8 @@ def cms_heavy_change(
         .groupBy("period", "r", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         [
             (int(k), r, _cms_bucket_py(int(k), r))
             for k in query_keys
@@ -1138,7 +1146,7 @@ def cms_heavy_change(
     # cms_estimate's zero-bucket semantics. Grouping by the counter-side
     # period instead (r8 advice) silently dropped those zeros and could
     # report a large est for a key inactive in a period.
-    periods = spark.createDataFrame([(1,), (2,)], "period int")
+    periods = local_table(spark, [(1,), (2,)], "period int")
     ests = (
         probes.crossJoin(F.broadcast(periods))
         .join(F.broadcast(counters), ["r", "bucket", "period"], "left")

@@ -1421,8 +1421,12 @@ def bpe_train(
     merges, _ = state if state is not None else _bpe_supersteps(
         docs, n_merges
     )
-    return docs.sparkSession.createDataFrame(
-        merges, "merge_rank int, left_sym string, right_sym string, pair_count bigint"
+    from .partitioning import local_table
+
+    return local_table(
+        docs.sparkSession,
+        merges,
+        "merge_rank int, left_sym string, right_sym string, pair_count bigint",
     )
 
 

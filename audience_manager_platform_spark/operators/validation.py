@@ -34,6 +34,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import local_table
+
 
 def _agg_and_verdicts(constraints: Sequence[tuple]) -> tuple[list, list]:
     """Compile constraints into (aggregate expressions, stack rows).
@@ -1126,9 +1128,8 @@ def benford_digit_audit(df: "DataFrame", amount_col: str) -> "DataFrame":
 
     Shape: one map-side-combinable 9-group aggregate + a broadcast
     9-row digit spine (zero-count digits still report)."""
-    spark = df.sparkSession
-    spine = spark.createDataFrame(
-        [(d, e9) for d, e9 in BENFORD_E9.items()], "digit int, exp_ppb long"
+    spine = local_table(
+        df.sparkSession, list(BENFORD_E9.items()), "digit int, exp_ppb long"
     )
     counts = (
         df.filter(F.col(amount_col) >= 1)
@@ -2278,8 +2279,7 @@ def kanon_utility_sweep(
         F.count("*").cast("long").alias("class_size")
     )
     total = classes.agg(F.sum("class_size").alias("_tot"))
-    spark = df.sparkSession
-    kdf = spark.createDataFrame([(int(k),) for k in ks], "k int")
+    kdf = local_table(df.sparkSession, [(int(k),) for k in ks], "k int")
     return (
         classes.crossJoin(F.broadcast(kdf))
         .groupBy("k")
@@ -2433,8 +2433,8 @@ def schema_contract_audit(
     for name in actual:
         if name not in {c for c, _ in contract}:
             rows.append((name, None, actual[name], "unexpected"))
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_table(
+        df.sparkSession,
         rows,
         "column string, expected_type string, actual_type string,"
         " status string",
@@ -2487,8 +2487,8 @@ def subject_access_report(
 
     ``tables``: (table_name, df, id_column) triples."""
     ids = [int(u) for u in user_ids]
-    spark = tables[0][1].sparkSession
-    spine = spark.createDataFrame(
+    spine = local_table(
+        tables[0][1].sparkSession,
         [(u, name) for u in ids for name, _, _ in tables],
         "user_id long, table_name string",
     )

@@ -113,32 +113,13 @@ def deferred_queue() -> list[str]:
     ]
 
 
-# Names whose EXPECTED values (pinned fingerprint constants) changed
-# after their last driver credit, so that credit is stale regardless of
-# recency (r10 verdict #5): `multimodal_phash_neardup`'s doc-105 pin was
-# regenerated in r10 (f7984db — BLAS-drift tie, see registry/phash_pins
-# .py) after its last credit in r7, and `multimodal_bmp_resize`'s
-# resize/DCT kernels were numpy-vectorized in r10 (cc8e4d3, last credit
-# r6). Front them into the next 50-entry driver window ahead of the
-# stalest-credit ordering; drop each name from this set once a
-# CORRECTNESS_r{N}.json newer than the pin change credits it.
-_REVERIFY_FIRST: tuple[str, ...] = tuple(
-    n
-    for n in ("multimodal_phash_neardup", "multimodal_bmp_resize")
-    if _DRIVER_CREDITED.get(n, 0) <= 10
-)
-
-
 def _rotate(entries: dict) -> dict:
-    fronted = [k for k in _REVERIFY_FIRST if k in entries]
-    uncredited = [
-        k for k in entries if k not in _DRIVER_CREDITED and k not in fronted
-    ]
+    uncredited = [k for k in entries if k not in _DRIVER_CREDITED]
     credited = sorted(
-        (k for k in entries if k in _DRIVER_CREDITED and k not in fronted),
+        (k for k in entries if k in _DRIVER_CREDITED),
         key=lambda k: (_DRIVER_CREDITED[k], k),
     )
-    return {k: entries[k] for k in (*fronted, *uncredited, *credited)}
+    return {k: entries[k] for k in (*uncredited, *credited)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

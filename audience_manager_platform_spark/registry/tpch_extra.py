@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import local_table
 from ..sources import load_table
 from .tpch import DEC, _revenue_col
 
@@ -146,8 +147,8 @@ def exact_group_percentiles(
     gdt = vals.schema[group_col].dataType.simpleString()
     lo_hi = vals.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
     if lo_hi["lo"] is None:  # empty input: keep the output schema
-        return spark.createDataFrame(
-            [], f"{group_col} {gdt}, p25 double, p50 double, p75 double"
+        return local_table(
+            spark, [], f"{group_col} {gdt}, p25 double, p50 double, p75 double"
         )
     lo, hi = float(lo_hi["lo"]), float(lo_hi["hi"])
     width = (hi - lo) / n_buckets or 1.0
@@ -209,8 +210,8 @@ def exact_group_percentiles(
                 ),
             ),
         ).cast("int")
-        over_df = spark.createDataFrame(
-            sorted(oversized), f"{group_col} {gdt}, bkt int"
+        over_df = local_table(
+            spark, sorted(oversized), f"{group_col} {gdt}, bkt int"
         )
         subhist = (
             vals.withColumn("bkt", bkt)
@@ -258,9 +259,10 @@ def exact_group_percentiles(
         )
 
     ep_schema = f"{group_col} {gdt}, pct string, end string, frac double, v double"
-    pieces = [spark.createDataFrame(resolved_rows, ep_schema)]
+    pieces = [local_table(spark, resolved_rows, ep_schema)]
 
-    need = spark.createDataFrame(
+    need = local_table(
+        spark,
         [(g, b, off, pct, end, frac) for g, pct, end, frac, b, off in targets],
         f"{group_col} {gdt}, bkt int, rk long, pct string, end string, frac double",
     )
@@ -293,7 +295,8 @@ def exact_group_percentiles(
                 ),
             ),
         ).cast("int")
-        sneed = spark.createDataFrame(
+        sneed = local_table(
+            spark,
             sub_targets,
             f"{group_col} {gdt}, bkt int, sub int, rk long, pct string,"
             " end string, frac double",

@@ -35,3 +35,27 @@ def test_no_duplicate_top_level_definitions():
             else:
                 seen[name] = lineno
     assert not offenders, "\n".join(offenders)
+
+
+def test_create_dataframe_only_inside_local_table():
+    """Driver-side rows become a DataFrame through exactly one helper,
+    ``partitioning.local_table`` (an Arrow-built LocalRelation: no job
+    per action, exact values, typed when empty). Any other
+    ``.createDataFrame(`` call is a second literal-table path."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == PKG / "operators" / "partitioning.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "local_table":
+                    allowed = set(range(node.lineno, node.end_lineno + 1))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)

@@ -103,22 +103,9 @@ def test_credited_tail_is_stalest_credit_first():
     by name — so the driver's 50-entry window always re-verifies the
     oldest evidence first, with zero hand-kept pin state."""
     names = list(e.queries())
-    credited = [
-        n
-        for n in names
-        if n in registry._DRIVER_CREDITED and n not in registry._REVERIFY_FIRST
-    ]
+    credited = [n for n in names if n in registry._DRIVER_CREDITED]
     keys = [(registry._DRIVER_CREDITED[n], n) for n in credited]
     assert keys == sorted(keys)
-
-
-def test_reverify_fronted_names_lead_the_window():
-    """r10 verdict #5: names whose pinned expected values changed after
-    their last driver credit are fronted into the next 50-entry window
-    ahead of the stalest-credit ordering."""
-    names = list(e.queries())
-    for n in registry._REVERIFY_FIRST:
-        assert names.index(n) < 50
 
 
 def test_uncredited_queries_fit_in_driver_window():
@@ -146,15 +133,8 @@ def test_new_names_lead_the_rotation():
     rotated = list(registry._rotate(raw))
     fake_at = rotated.index("zz_brand_new_query")
     credited_at = [
-        i
-        for i, n in enumerate(rotated)
-        if n in registry._DRIVER_CREDITED
-        and n not in registry._REVERIFY_FIRST
+        i for i, n in enumerate(rotated) if n in registry._DRIVER_CREDITED
     ]
     assert not credited_at or fake_at < min(credited_at)
-    # and everything ahead of it is likewise uncredited (a real new
-    # wave) or explicitly fronted for re-verification (stale pin credit)
-    assert all(
-        n not in registry._DRIVER_CREDITED or n in registry._REVERIFY_FIRST
-        for n in rotated[:fake_at]
-    )
+    # and everything ahead of it is likewise uncredited (a real new wave)
+    assert all(n not in registry._DRIVER_CREDITED for n in rotated[:fake_at])
