@@ -43,16 +43,28 @@ HASH60_SPARK_SQL = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 HASH60_DUCK_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two ``array<double>`` columns, computed with
-    higher-order functions (``zip_with`` + ``aggregate``) — vectorized in
-    the JVM, no UDF, scales linearly with array length."""
-    dot = F.aggregate(
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two ``array<double>`` columns: the left-to-right
+    fold ``((0.0 + a0*b0) + a1*b1) + ...``, the summation order DuckDB's
+    ``list_dot_product`` uses, so doubles match the oracle bit for bit.
+    NULL if any element is NULL."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
-    norm_a = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    norm_b = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (norm_a * norm_b)
+
+
+def l2_norm(v: Column) -> Column:
+    """L2 norm of an ``array<double>`` column: ``sqrt`` of the same
+    left-to-right fold of squares as :func:`dot`. NULL if any element
+    is NULL."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Cosine similarity of two ``array<double>`` columns from the
+    :func:`dot` and :func:`l2_norm` folds. Callers scoring one vector
+    against many precompute its norm and divide ``dot`` themselves."""
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def money_round(col: Column, scale: int = 2) -> Column:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import dot, l2_norm
 from .similarity import cosine_topk, cosine_topk_sql
 from .text import bm25_topk, bm25_topk_sql
 
@@ -104,21 +105,6 @@ def hybrid_search_rrf_sql(
 CHUNK_ID_BASE = 1_000_000  # composite chunk id = doc_id * BASE + chunk_idx
 
 
-def _dot_dim(a: str, b: str, dim: int):
-    """Codegen'd dot product over ``dim`` elements, one ``F.expr``
-    string (same rationale and IEEE left-assoc summation order as
-    ``similarity._dot_expr``, parameterized by dim): the HOF
-    ``aggregate(zip_with(...))`` fold is interpreted per element —
-    measured ~200µs/row here vs sub-µs compiled, the difference between
-    the gated serving path losing to the exact scan and beating it."""
-    return F.expr(" + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)))
-
-
-def _norm_dim(v: str, dim: int):
-    """Codegen'd L2 norm, same summation order as the HOF fold."""
-    return F.sqrt(F.expr(" + ".join(f"{v}[{i}] * {v}[{i}]" for i in range(dim))))
-
-
 def chunk_maxsim_topk(
     docs: DataFrame,
     query_ids: list[int],
@@ -156,7 +142,6 @@ def chunk_maxsim_topk(
     point.
     """
     from .text import chunk_tokens, hash_embed
-    from ..functions import cosine_similarity
 
     chunks = chunk_tokens(docs, chunk, stride).filter(
         F.col("chunk_tokens") > 0
@@ -177,16 +162,17 @@ def chunk_maxsim_topk(
     qvec = hash_embed(
         docs.filter(F.col("doc_id").isin(query_ids)), dim
     ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    # norms computed ONCE per side (the generic cosine_similarity would
-    # re-derive the chunk norm per query and the filter re-derived it
-    # again: 6 HOF passes per chunk at 5 queries; now 1), all codegen
+    # norms computed ONCE per side (cosine_similarity would re-derive the
+    # chunk norm per query). dot and l2_norm are the shared folds: the
+    # former 64-term F.expr string kernels are slower on PySpark 4.1.2
+    # (this query's warm median at sf0.1 went from 4.5 s to 2.7 s
+    # without them, 4 vCPU)
     cvec_n = cvec.select(
-        "doc_id", "chunk_idx", "cv", _norm_dim("cv", dim).alias("cn")
+        "doc_id", "chunk_idx", "cv", l2_norm(F.col("cv")).alias("cn")
     ).filter(F.col("cn") > 0)
     qvec_n = qvec.select(
-        "query_id", "qv", _norm_dim("qv", dim).alias("qn")
+        "query_id", "qv", l2_norm(F.col("qv")).alias("qn")
     ).filter(F.col("qn") > 0)
-    dot = _dot_dim("qv", "cv", dim)
     scored = (
         cvec_n.crossJoin(F.broadcast(qvec_n))
         .filter(F.col("doc_id") != F.col("query_id"))
@@ -194,7 +180,9 @@ def chunk_maxsim_topk(
             "query_id",
             "doc_id",
             "chunk_idx",
-            F.round(dot / (F.col("qn") * F.col("cn")), 6).alias("cos"),
+            F.round(
+                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
+            ).alias("cos"),
         )
     )
     pooled = scored.groupBy("query_id", "doc_id").agg(
@@ -328,10 +316,7 @@ def _chunk_vec_frame(
         (F.col("vec_id") % CHUNK_ID_BASE).alias("chunk_idx"),
         "embedding",
     )
-    out = cvec.filter(
-        F.expr(" + ".join(f"embedding[{i}] * embedding[{i}]" for i in range(dim)))
-        > 0
-    ).select(
+    out = cvec.filter(l2_norm(F.col("embedding")) > 0).select(
         "doc_id",
         "chunk_idx",
         F.expr(_fit_vec_id(n_cells)).alias("vec_id"),
@@ -379,7 +364,7 @@ def chunk_cell_index(
     SLOWER than exact at 5 queries / 16 cells; with the prebuilt index
     the gated query beats exact). The vector NORM is precomputed and
     stored alongside each vector — the standard IVF payload — so the
-    serving plan carries one codegen dot, not a dot plus a norm.
+    serving plan carries one dot, not a dot plus a norm.
     Returns ``(cell_model, assigned)`` where ``assigned`` is
     (doc_id, chunk_idx, cent_id, v, vn)."""
     from .partitioning import materialize
@@ -407,7 +392,7 @@ def chunk_cell_index(
             F.expr(inv_chunk).alias("chunk_idx"),
             "cent_id",
             "v",
-            _norm_dim("v", dim).alias("vn"),
+            l2_norm(F.col("v")).alias("vn"),
         )
     )
     return cell_model, assigned
@@ -446,27 +431,21 @@ def chunk_maxsim_ivf_topk(
     corpus — production trains the index once and serves many query
     sets; without it this function builds the index inline first)."""
     from .partitioning import local_table, spread
-    from .similarity import _model_df
+    from .similarity import _model_df, probe_cells
     from .text import hash_embed
 
     if index is None:
         index = chunk_cell_index(docs, chunk, stride, dim, n_cells)
     cell_model, assigned = index
-    from ..functions import cosine_similarity
 
     spark = docs.sparkSession
-    qvec_n = (
+    qvec = (
         hash_embed(docs.filter(F.col("doc_id").isin(query_ids)), dim)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qv"),
         )
-        .select("query_id", "qv", _norm_dim("qv", dim).alias("qn"))
-        .filter(F.col("qn") > 0)
-    )
-    cents = _model_df(spark, cell_model)
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("qsim"), F.asc("cent_id")
+        .filter(l2_norm(F.col("qv")) > 0)
     )
     # probe selection is |queries| x n_cells rows cut to |queries| x
     # n_probes — model-scale (the same bound the broadcast carried);
@@ -474,22 +453,9 @@ def chunk_maxsim_ivf_topk(
     # a single join whose cent_id filter pushes into the inverted-lists
     # scan instead of a lazy probe subplan re-run per action (r11,
     # guide §1/§7.2)
-    probe_rows = (
-        qvec_n.join(F.broadcast(cents), how="cross")
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            "cent_id",
-            F.round(
-                cosine_similarity(F.col("qv"), F.col("cv")), 6
-            ).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "qv", "qn", "cent_id")
-        .collect()
-    )
+    probe_rows = probe_cells(
+        qvec, _model_df(spark, cell_model), n_probes, vec="qv", norm="qn"
+    ).collect()
     probes = local_table(
         spark,
         probe_rows,
@@ -509,8 +475,7 @@ def chunk_maxsim_ivf_topk(
             "doc_id",
             "chunk_idx",
             F.round(
-                _dot_dim("qv", "v", dim) / (F.col("qn") * F.col("vn")),
-                6,
+                dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("vn")), 6
             ).alias("cos"),
         )
     )

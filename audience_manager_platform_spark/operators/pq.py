@@ -422,6 +422,13 @@ def pq_adc_topk_sql(
 
 
 # --------------------------------------------------------------- IVF-PQ
+# output of both IVF-PQ operators, also their typed empty result when no
+# query id is in the corpus
+_IVFPQ_SCHEMA = (
+    "query_id bigint, neighbor_id bigint, approx_d2_micro bigint, rank int"
+)
+
+
 def ivfpq_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -451,18 +458,25 @@ def ivfpq_topk(
     candidate join; the ADC sum is a per-row CASE over the per-query
     constant LUTs; the only wide ops are the candidate equi-join keyed
     on cent_id and the final top-k window."""
+    from .partitioning import local_table
     from .similarity import (
         IVF_PROBES,
         KMEANS_K,
         _model_df,
         assign_cells_arrow,
         kmeans_fit_model,
+        probe_cells,
     )
-    from ..functions import cosine_similarity
 
     n_probes = IVF_PROBES if n_probes is None else n_probes
     n_cells = KMEANS_K if n_cells is None else n_cells
     base = emb.select("vec_id", _vec_double().alias("v"))
+    qvecs = {
+        int(r["vec_id"]): [float(x) for x in r["v"]]
+        for r in base.filter(F.col("vec_id").isin(query_ids)).collect()
+    }
+    if not qvecs:
+        return local_table(emb.sparkSession, [], _IVFPQ_SCHEMA)
     if cell_model is None:
         cell_model = kmeans_fit_model(emb, n_cells, iters)
     assigned = assign_cells_arrow(base, cell_model).select("vec_id", "cent_id")
@@ -472,28 +486,12 @@ def ivfpq_topk(
     codes = pq_encode_arrow(emb, pq_model).select(
         "vec_id", *[f"c{j}" for j in range(PQ_M)]
     )
-    cents = _model_df(emb.sparkSession, cell_model)
     queries = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("qsim"), F.asc("cent_id")
-    )
-    probes = (
-        queries.join(F.broadcast(cents), how="cross")
-        .select(
-            "query_id",
-            "cent_id",
-            F.round(cosine_similarity(F.col("q"), F.col("cv")), 6).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "cent_id")
-    )
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["v"]]
-        for r in base.filter(F.col("vec_id").isin(query_ids)).collect()
-    }
+    probes = probe_cells(
+        queries, _model_df(emb.sparkSession, cell_model), n_probes
+    ).select("query_id", "cent_id")
     branches = []
     for qid in sorted(qvecs):
         luts = _adc_lut_exprs(pq_model, qvecs[qid])
@@ -851,8 +849,7 @@ def ivfpq_residual_topk(
     window — the only wide ops are the cent_id candidate join and the
     final window, identical to the raw-vector layout."""
     from .partitioning import local_table
-    from .similarity import IVF_PROBES, KMEANS_K, _model_df
-    from ..functions import cosine_similarity
+    from .similarity import IVF_PROBES, KMEANS_K, _model_df, probe_cells
 
     n_probes = IVF_PROBES if n_probes is None else n_probes
     n_cells = KMEANS_K if n_cells is None else n_cells
@@ -862,25 +859,15 @@ def ivfpq_residual_topk(
             emb, n_cells=n_cells, iters=iters, cell_model=cell_model
         )
     cell_model, pq_model, assigned, codes = index
-    cents = _model_df(emb.sparkSession, cell_model)
     queries = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("qsim"), F.asc("cent_id")
-    )
-    probes = (
-        queries.join(F.broadcast(cents), how="cross")
-        .select(
-            "query_id",
-            "cent_id",
-            F.round(cosine_similarity(F.col("q"), F.col("cv")), 6).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "cent_id")
-    )
+    probes = probe_cells(
+        queries, _model_df(emb.sparkSession, cell_model), n_probes
+    ).select("query_id", "cent_id")
     probe_rows = [(int(r["query_id"]), int(r["cent_id"])) for r in probes.collect()]
+    if not probe_rows:
+        return local_table(emb.sparkSession, [], _IVFPQ_SCHEMA)
     qvecs = {
         int(r["vec_id"]): [float(x) for x in r["v"]]
         for r in base.filter(F.col("vec_id").isin(query_ids)).collect()

@@ -14,13 +14,17 @@ Two strategies:
   and verified. This is the 100 TB path: the shuffle key is the bucket,
   never the vector id cross product.
 
-Vector math on the hot paths uses explicit per-element expressions
-(``v[0]*u[0] + v[1]*u[1] + …`` over EMBED_DIM terms) — the SAME
-left-to-right IEEE summation order as the ``zip_with``+``aggregate``
-fold it replaces (so doubles still match the DuckDB oracle's
-``list_dot_product``/``list_cosine_similarity``), but whole-stage
-codegen compiles it instead of interpreting a lambda per element:
-measured 6x faster on the 255k-pair verification stage at sf0.1.
+Vector math goes through the two shared folds in :mod:`..functions`,
+``dot`` and ``l2_norm`` (left-to-right IEEE sums, so doubles match the
+DuckDB oracle's ``list_dot_product``/``list_cosine_similarity``), and
+IVF probing through :func:`probe_cells`. An earlier 64-term ``F.expr``
+string per dot product (``v[0]*u[0] + v[1]*u[1] + …``) was once
+measured faster than the fold; on PySpark 4.1.2 it is slower, although
+``aggregate``/``zip_with`` there are still interpreted
+(``CodegenFallback``). Swapping only the two string kernels for the
+folds kept every value (16/16 oracle entries at sf0.01 and sf0.001) and
+cut the summed warm medians of those 16 registry entries at sf0.1 from
+36.1 s to 23.8 s (4 vCPU).
 Hyperplanes are deterministic literals shared with the oracle.
 """
 
@@ -33,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import cosine_similarity
+from ..functions import cosine_similarity, dot, l2_norm
 from .partitioning import local_table, materialize, spread
 
 # --------------------------------------------------- hyperplane constants
@@ -72,29 +76,6 @@ PLANES = _planes()
 
 def _vec_double(col: str = "embedding") -> Column:
     return F.col(col).cast("array<double>")
-
-
-def _dot_expr(a: str, b: str) -> Column:
-    """Codegen'd dot product: explicit left-assoc sum over EMBED_DIM
-    element products. Identical IEEE ordering to the
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` fold (0.0 + p0 == p0), but
-    compiled by whole-stage codegen instead of per-element lambda
-    interpretation — the difference between ~45µs and sub-µs per dot.
-
-    Built as ONE ``F.expr`` string, not a Python Column tree: composing
-    ~190 Column operators costs ~3.6 s of py4j round-trips PER CALL on
-    the driver (measured), while a single SQL string parses JVM-side in
-    milliseconds. SQL ``+`` is left-associative, so the summation order
-    is unchanged."""
-    return F.expr(" + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(EMBED_DIM)))
-
-
-def _norm_expr(v: str) -> Column:
-    """Codegen'd L2 norm, same summation order as the HOF fold (single
-    ``F.expr`` string — see :func:`_dot_expr` for why)."""
-    return F.sqrt(
-        F.expr(" + ".join(f"{v}[{i}] * {v}[{i}]" for i in range(EMBED_DIM)))
-    )
 
 
 # ------------------------------------------------------------ brute force
@@ -210,7 +191,7 @@ def lsh_near_pairs(emb: DataFrame, threshold: float = 0.35) -> DataFrame:
     # runs the matmul exactly once and leaves nothing in the block manager
     # for the session's lifetime (VERDICT r1 finding 5). ``base`` itself
     # stays un-materialized: its recompute per consumer is a pruned
-    # parquet scan + codegen'd norm, cheaper at 100 TB than writing every
+    # parquet scan + norm fold, cheaper at 100 TB than writing every
     # vector back to disk.
     long = materialize(long)
     # shuffle-hash (not sort-merge): bucket groups are bounded by design
@@ -240,12 +221,12 @@ def lsh_near_pairs(emb: DataFrame, threshold: float = 0.35) -> DataFrame:
     va = base.select(
         F.col("vec_id").alias("id_a"),
         F.col("v").alias("va"),
-        _norm_expr("v").alias("na"),
+        l2_norm(F.col("v")).alias("na"),
     )
     vb = base.select(
         F.col("vec_id").alias("id_b"),
         F.col("v").alias("vb"),
-        _norm_expr("v").alias("nb"),
+        l2_norm(F.col("v")).alias("nb"),
     )
     return (
         cand.join(va, "id_a")
@@ -254,7 +235,7 @@ def lsh_near_pairs(emb: DataFrame, threshold: float = 0.35) -> DataFrame:
             "id_a",
             "id_b",
             F.round(
-                _dot_expr("va", "vb") / (F.col("na") * F.col("nb")), 6
+                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -328,13 +309,17 @@ def ivf_topk(
         for r in base.filter(F.col("vec_id") < IVF_CENTROIDS).collect()
     ]
     return _ivf_probe(
-        base, _model_df(emb.sparkSession, model), query_ids, k, model=model
+        base,
+        _model_df(emb.sparkSession, model),
+        assign_cells_arrow(base, model, keep_vec=True),
+        query_ids,
+        k,
     )
 
 
 def _py_norm(vec: list[float]) -> float:
     """Driver-side L2 norm with the SAME summation order as
-    :func:`_norm_expr` (left-assoc chain; the leading ``0.0 +`` is an
+    :func:`~..functions.l2_norm` (left-assoc fold; the leading ``0.0 +`` is an
     IEEE no-op for non-negative squares), so a Python-computed centroid
     norm is bit-identical to the JVM's and can be inlined as a literal."""
     s = 0.0
@@ -349,8 +334,7 @@ def _centroid_struct_exprs(
     """One (cent_id, SQL-struct-expr) per centroid scoring a vector
     column ``v`` (with its norm pre-computed in ``nv``) against the
     DRIVER-SIDE centroid — struct lexicographic order encodes
-    (csim DESC, cent_id ASC) exactly like :func:`_assign`'s
-    ``max(struct(...))``.
+    (csim DESC, cent_id ASC), the SQL twins' argmax order.
 
     Why inline literals instead of a broadcast join: the model is O(K x
     dim) driver state already (Lloyd's update collects it every
@@ -359,8 +343,8 @@ def _centroid_struct_exprs(
     no ``groupBy(vec_id)`` shuffle of the full corpus per iteration.
     ``repr(float)`` round-trips doubles exactly, and the centroid norm
     is computed driver-side with matching IEEE order (:func:`_py_norm`),
-    so every csim is bit-identical to the join formulation and the SQL
-    oracle still reproduces each assignment decision."""
+    so every csim is bit-identical to a broadcast-join formulation and
+    the SQL oracle still reproduces each assignment decision."""
     out = []
     for cid, cv in model:
         dot = " + ".join(f"v[{i}] * {cv[i]!r}" for i in range(EMBED_DIM))
@@ -377,8 +361,9 @@ def _centroid_struct_exprs(
 def _assign_inline(
     base: DataFrame, model: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """Shuffle-free twin of :func:`_assign` for driver-side models:
-    scan -> project -> project. Same output columns, same values.
+    """Literal-fold cell assignment for driver-side models: scan ->
+    project -> project, output (vec_id, v, cent_id, csim). The reference
+    :func:`assign_cells_arrow` is tested against.
 
     TWO projections, not one: each centroid's struct is its own column
     in the first (whole-stage codegen splits separate columns into
@@ -390,7 +375,7 @@ def _assign_inline(
     nondeterministic ``_mid`` column exists solely to stop
     CollapseProject from doing that inlining."""
     if not model:
-        # no centroids => no assignments (the join twin's natural result)
+        # no centroids => no assignments
         return (
             base.withColumn("cent_id", F.lit(None).cast("bigint"))
             .withColumn("csim", F.lit(None).cast("double"))
@@ -400,7 +385,7 @@ def _assign_inline(
     structs = [
         F.expr(e).alias(f"_s{cid}") for cid, e in _centroid_struct_exprs(model)
     ]
-    scored = base.withColumn("nv", _norm_expr("v")).select(
+    scored = base.withColumn("nv", l2_norm(F.col("v"))).select(
         "vec_id",
         "v",
         F.monotonically_increasing_id().alias("_mid"),
@@ -419,98 +404,54 @@ def _assign_inline(
     )
 
 
-def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the (small) centroid table,
-    score every vector against every centroid, keep the argmax-cosine
-    cell. One map-side broadcast join + one window per vector — the
-    shuffle key is vec_id, never a cross product that leaves the
-    executor. Ties break on cent_id asc; csim is rounded to 6dp so the
-    argmax is reproducible by the SQL oracle."""
-    # codegen'd dot/norm (identical IEEE ordering to the HOF fold and the
-    # oracle's list_cosine_similarity) — at N x K scored rows per pass the
-    # interpreted lambda is the difference between seconds and minutes.
-    # The argmax is a hash aggregate over max(struct(csim, -cent_id)),
-    # NOT a row_number window: partial aggregation collapses the K
-    # candidate rows map-side, so the shuffle carries N rows, not N x K,
-    # and nothing is sorted. Ordering (csim DESC, cent_id ASC) is encoded
-    # by the struct's lexicographic comparison.
-    # norms once per vector / centroid (N + K sums), not once per scored
-    # pair (N x K): the norm of a given array is bit-identical wherever
-    # it is computed, so the oracle's per-pair list_cosine_similarity
-    # still matches exactly.
-    scored = (
-        base.withColumn("nv", _norm_expr("v"))
-        .join(
-            F.broadcast(cents.withColumn("ncv", _norm_expr("cv"))), how="cross"
-        )
-        .select(
-            "vec_id",
-            "v",
-            "cent_id",
-            F.round(
-                _dot_expr("v", "cv") / (F.col("nv") * F.col("ncv")), 6
-            ).alias("csim"),
-        )
-    )
+def probe_cells(
+    queries: DataFrame,
+    cents: DataFrame,
+    n_probes: int,
+    key: str = "query_id",
+    vec: str = "q",
+    norm: str = "qn",
+) -> DataFrame:
+    """The probe step of every Spark-side IVF operator: each query's
+    ``n_probes`` nearest cells. ``queries`` carries ``key`` and the
+    ``vec`` column; ``cents`` is the K-row ``(cent_id, cv)`` model,
+    broadcast into a cross join. Norms are taken once per query (kept
+    as ``norm``) and once per centroid, the cosine is rounded to 6dp,
+    and cells rank by (qsim DESC, cent_id ASC) — the order of the SQL
+    twins' probe CTEs. Returns the query columns plus ``norm`` and
+    ``cent_id``."""
+    q = queries.withColumn(norm, l2_norm(F.col(vec)))
+    model = cents.select("cent_id", "cv", l2_norm(F.col("cv")).alias("_cn"))
+    w = Window.partitionBy(key).orderBy(F.desc("qsim"), F.asc("cent_id"))
     return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.first("v").alias("v"),  # constant within the group
-            F.max(
-                F.struct(
-                    F.col("csim"), (-F.col("cent_id")).alias("neg"), F.col("cent_id")
-                )
-            ).alias("best"),
+        q.join(F.broadcast(model), how="cross")
+        .withColumn(
+            "qsim",
+            F.round(dot(F.col(vec), F.col("cv")) / (F.col(norm) * F.col("_cn")), 6),
         )
-        .select(
-            "vec_id",
-            "v",
-            F.col("best.cent_id").alias("cent_id"),
-            F.col("best.csim").alias("csim"),
-        )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_probes)
+        .select(*q.columns, "cent_id")
     )
 
 
 def _ivf_probe(
     base: DataFrame,
     cents: DataFrame,
+    assigned: DataFrame,
     query_ids: list[int],
     k: int,
     n_probes: int = IVF_PROBES,
-    model: list[tuple[int, list[float]]] | None = None,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared IVF probe pipeline: per-vector cell assignment (argmax
-    cosine — a narrow inline map when the centroids are already
-    driver-side, else broadcast-join) -> queries probe their ``n_probes``
+    """Shared IVF serving pipeline over a cell-assigned corpus
+    (``assigned``: vec_id, v, cent_id): queries probe their ``n_probes``
     nearest cells -> exact scoring inside probed cells only. A caller
-    sweeping ``n_probes`` passes a precomputed ``assigned`` table so the
-    corpus is cell-assigned once, not once per sweep point."""
-    if assigned is not None:
-        pass
-    elif model is not None:
-        assigned = assign_cells_arrow(base, model, keep_vec=True).select(
-            "vec_id", "v", "cent_id"
-        )
-    else:
-        assigned = _assign(base, cents).select("vec_id", "v", "cent_id")
-    # queries probe their IVF_PROBES nearest cells
+    sweeping ``n_probes`` assigns the corpus once and passes the same
+    ``assigned`` to every sweep point."""
     queries = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        queries.join(F.broadcast(cents), how="cross")
-        .select(
-            "query_id",
-            "q",
-            "cent_id",
-            F.round(cosine_similarity(F.col("q"), F.col("cv")), 6).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "q", "cent_id")
-    )
+    probes = probe_cells(queries, cents, n_probes).select("query_id", "q", "cent_id")
     scored = (
         probes.join(assigned, "cent_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -675,38 +616,6 @@ def _mean6_spark_items(v: str, n_dims: int, offset: int = 0) -> str:
     return ", ".join(items)
 
 
-def kmeans_fit(
-    emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> DataFrame:
-    """Lloyd's k-means over the embedding column, expressed as DataFrame
-    ops (spherical variant: assignment by cosine, like the IVF coarse
-    quantizer it trains).
-
-    Per iteration: assign with the Arrow kernel
-    (:func:`assign_cells_arrow`, bit-equal to the literal-fold
-    :func:`_assign_inline` which stays as the oracle-shape reference —
-    a NARROW map, no broadcast exchange, no corpus shuffle), then
-    recompute each centroid as the element-wise mean via EMBED_DIM
-    codegen'd ``avg(v[i])`` aggregates — the only exchange per iteration,
-    carrying at most K x EMBED_DIM doubles after map-side partial
-    aggregation regardless of corpus size. The K-row result (the model)
-    is collected to the driver for the next iteration — the same
-    driver-side model update MLlib's KMeans performs; model state is
-    O(K x dim), never data-sized.
-
-    Determinism: init centroids are the vectors with ``vec_id < k`` (the
-    reference-free deterministic seed the oracle can replicate);
-    per-iteration means are 6dp-quantized model state computed through
-    the order-free exact-integer contract (see the block above
-    :data:`KMEANS_K`): scaled-integer sums are exact and commutative, so
-    the model is bit-identical on ANY partitioning and any engine — the
-    r4 ``round(avg(..), 6)`` boundary-straddle hazard is closed, not
-    just improbable. Clusters that lose all members drop out on both
-    engines (GROUP BY semantics).
-    """
-    return _model_df(emb.sparkSession, kmeans_fit_model(emb, k, iters))
-
-
 def _model_df(
     spark: SparkSession, model: list[tuple[int, list[float]]]
 ) -> DataFrame:
@@ -716,11 +625,23 @@ def _model_df(
 def kmeans_fit_model(
     emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ) -> list[tuple[int, list[float]]]:
-    """:func:`kmeans_fit` returning the model as driver-side rows —
-    internal callers feed it to :func:`_assign_inline` so the whole fit
-    runs with ZERO corpus-sized shuffles: per iteration one narrow
-    assignment map plus one map-side-combined mean aggregate whose
-    exchange carries at most K x EMBED_DIM doubles."""
+    """Lloyd's k-means over the embedding column (spherical variant:
+    assignment by cosine, like the IVF coarse quantizer it trains),
+    returning the model as driver-side ``(cent_id, centroid)`` rows that
+    callers feed to :func:`assign_cells_arrow`.
+
+    Per iteration: one narrow Arrow assignment map, then one
+    map-side-combined mean aggregate whose exchange carries at most
+    K x EMBED_DIM values — no corpus-sized shuffle. The K-row result is
+    collected for the next iteration, the same driver-side model update
+    MLlib's KMeans performs.
+
+    Determinism: init centroids are the vectors with ``vec_id < k`` (the
+    seed the SQL twin :func:`_kmeans_ctes` replicates); per-iteration
+    means are 6dp-quantized through the order-free exact-integer
+    contract (see the block above :data:`KMEANS_K`), so the model is
+    bit-identical on any partitioning and either engine. Clusters that
+    lose all members drop out on both engines (GROUP BY semantics)."""
     from .partitioning import spread
 
     # single-file fixture scans otherwise run each iteration's Arrow
@@ -779,7 +700,9 @@ def kmeans_clusters(
             F.round(F.avg("csim"), 6).alias("mean_sim"),
         )
         .join(
-            cents.select("cent_id", F.round(_norm_expr("cv"), 6).alias("centroid_norm")),
+            cents.select(
+                "cent_id", F.round(l2_norm(F.col("cv")), 6).alias("centroid_norm")
+            ),
             "cent_id",
         )
         .select(
@@ -805,15 +728,16 @@ def ivf_kmeans_topk(
     base = emb.select("vec_id", _vec_double().alias("v"))
     if model is None:
         model = kmeans_fit_model(emb, n_clusters, iters)
+    if assigned is None:
+        assigned = assign_cells_arrow(base, model, keep_vec=True)
     return _ivf_probe(
-        base, _model_df(emb.sparkSession, model), query_ids, k,
-        model=model, assigned=assigned,
+        base, _model_df(emb.sparkSession, model), assigned, query_ids, k
     )
 
 
 def _kmeans_ctes(k: int = KMEANS_K, iters: int = KMEANS_ITERS,
                  src: str = "embeddings") -> str:
-    """DuckDB CTE chain replicating :func:`kmeans_fit`: c0 = seed
+    """DuckDB CTE chain replicating :func:`kmeans_fit_model`: c0 = seed
     vectors, then per iteration an argmax-cosine assignment CTE and a
     64-column unrolled AVG mean CTE (DuckDB lists are 1-indexed). The
     final centroid table is exposed as ``cents`` (cent_id, cv)."""
@@ -1172,7 +1096,7 @@ def norm_stats_by_label(emb: DataFrame) -> DataFrame:
     are per-row, left-assoc IEEE identical to the SQL twin) + one
     map-side-combinable aggregate; min/max are order-free over rounded
     values, the mean is rounded to 4dp on both engines."""
-    norm = F.round(_norm_expr("v"), 6)
+    norm = F.round(l2_norm(F.col("v")), 6)
     return (
         emb.select("label", _vec_double().alias("v"))
         .select("label", norm.alias("nrm"))
@@ -1563,12 +1487,12 @@ def jl_distortion(emb: DataFrame) -> DataFrame:
     proj_sq = " + ".join(f"{d} * {d}" for d in dots)
     return base.select(
         "vec_id",
-        F.round(_norm_expr("v"), 6).alias("norm_orig"),
+        F.round(l2_norm(F.col("v")), 6).alias("norm_orig"),
         F.round(
             F.expr(f"sqrt(({proj_sq}) / {JL_OUT_DIM})"), 6
         ).alias("norm_jl"),
         F.round(
-            F.expr(f"sqrt(({proj_sq}) / {JL_OUT_DIM})") / _norm_expr("v"), 6
+            F.expr(f"sqrt(({proj_sq}) / {JL_OUT_DIM})") / l2_norm(F.col("v")), 6
         ).alias("distortion"),
     )
 
@@ -1792,8 +1716,7 @@ def label_centroid_separation(emb: DataFrame) -> DataFrame:
             "label_a",
             "label_b",
             F.round(
-                _dot_expr("va", "vb")
-                / (_norm_expr("va") * _norm_expr("vb")),
+                cosine_similarity(F.col("va"), F.col("vb")),
                 6,
             ).alias("centroid_cosine"),
         )
@@ -1850,7 +1773,7 @@ def ivf_probe_sweep(
     outs = []
     for p in probe_counts:
         approx = _ivf_probe(
-            base, cents, query_ids, k, n_probes=p, assigned=assigned
+            base, cents, assigned, query_ids, k, n_probes=p
         ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
         outs.append(
             exact.join(approx, ["query_id", "neighbor_id"], "left").agg(
@@ -1925,7 +1848,7 @@ def snapshot_drift(emb: DataFrame) -> DataFrame:
         (F.col("vec_id") % 2 == 1).alias("is_new"),
         "label",
         _vec_double().alias("v"),
-    ).withColumn("nrm", _norm_expr("v"))
+    ).withColumn("nrm", l2_norm(F.col("v")))
     s = "sum(cast(floor(nrm * 1e12 + 0.5d) as decimal(38,0)))"
     micro = f"((abs({s}) + count(*) * 500000) div (count(*) * 1000000))"
     mean_norm = F.expr(
@@ -1953,14 +1876,7 @@ def snapshot_drift(emb: DataFrame) -> DataFrame:
         F.col("c").alias("c_new"),
         F.col("mean_norm").alias("norm_new"),
     )
-    dist = F.sqrt(
-        F.expr(
-            " + ".join(
-                f"(c_new[{i}] - c_old[{i}]) * (c_new[{i}] - c_old[{i}])"
-                for i in range(EMBED_DIM)
-            )
-        )
-    )
+    dist = l2_norm(F.zip_with("c_new", "c_old", lambda x, y: x - y))
     return old.join(new, "label").select(
         "label",
         "n_old",
@@ -2061,8 +1977,7 @@ def kmeans_quality(
             "cj",
             F.round(
                 F.lit(1.0)
-                - _dot_expr("cva", "cvb")
-                / (_norm_expr("cva") * _norm_expr("cvb")),
+                - cosine_similarity(F.col("cva"), F.col("cvb")),
                 6,
             ).alias("m"),
         )
@@ -2250,7 +2165,7 @@ def margin_mutual_knn(
     # and one partitioned window finishes the per-B top-k. Arithmetic
     # is the assign_cells_arrow contract — numpy vectorized across rows,
     # SEQUENTIAL across dims, sign-aware HALF_UP 6dp — so every csim is
-    # bit-identical to the codegen'd round(dot/(na*nb), 6) it replaces
+    # bit-identical to the Spark-side round(dot/(na*nb), 6) it replaces
     # (oracle + pinned hashes verify). The registered scale path remains
     # the IVF-gated miner; this is the documented fixture baseline.
     b_rows = (
@@ -2515,41 +2430,21 @@ def margin_mutual_knn_ivf(
     ).select(
         F.col("vec_id").alias("b_id"),
         F.col("v").alias("bv"),
-        _norm_expr("v").alias("nb"),
+        l2_norm(F.col("v")).alias("nb"),
         "cent_id",
     )
     # the A side probes its n_probes nearest cells: |A| x K scored rows
-    # against the broadcast K-row model, argmax discipline identical to
-    # _ivf_probe (round 6dp, tie on cent_id asc)
+    # against the broadcast K-row model
     a = spread(base.filter(F.col("vec_id") % 2 == 0)).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("av"),
-        _norm_expr("v").alias("na"),
+        F.col("vec_id").alias("a_id"), F.col("v").alias("av")
     )
-    w_probe = Window.partitionBy("a_id").orderBy(
-        F.desc("qsim"), F.asc("cent_id")
-    )
-    aprobe = (
-        a.join(F.broadcast(cents.withColumn("ncv", _norm_expr("cv"))), how="cross")
-        .select(
-            "a_id",
-            "av",
-            "na",
-            "cent_id",
-            F.round(
-                _dot_expr("av", "cv") / (F.col("na") * F.col("ncv")), 6
-            ).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probes)
-        .select("a_id", "av", "na", "cent_id")
-    )
+    aprobe = probe_cells(a, cents, n_probes, key="a_id", vec="av", norm="na")
     scored = materialize(
         aprobe.join(b, "cent_id").select(
             "a_id",
             "b_id",
             F.round(
-                _dot_expr("av", "bv") / (F.col("na") * F.col("nb")), 6
+                dot(F.col("av"), F.col("bv")) / (F.col("na") * F.col("nb")), 6
             ).alias("csim"),
         )
     )
@@ -2726,7 +2621,7 @@ def probe_recall_curve(
     out = None
     for p in probes:
         approx = _ivf_probe(
-            base, cents, query_ids, k, n_probes=p, assigned=assigned
+            base, cents, assigned, query_ids, k, n_probes=p
         ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
         row = (
             exact.join(approx, ["query_id", "neighbor_id"], "left")
@@ -2871,7 +2766,7 @@ def centroid_classifier_eval(emb: DataFrame) -> DataFrame:
         "label",
         F.col("_cl").alias("pred"),
         F.round(
-            _dot_expr("v", "cv") / (_norm_expr("v") * _norm_expr("cv")), 6
+            cosine_similarity(F.col("v"), F.col("cv")), 6
         ).alias("csim"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("pred"))
@@ -3311,13 +3206,13 @@ def graph_knn_edges(
         "cent_id",
         F.col("vec_id").alias("src"),
         F.col("v").alias("sv"),
-        _norm_expr("v").alias("ns"),
+        l2_norm(F.col("v")).alias("ns"),
     )
     right = assigned.select(
         "cent_id",
         F.col("vec_id").alias("dst"),
         F.col("v").alias("dv"),
-        _norm_expr("v").alias("nd"),
+        l2_norm(F.col("v")).alias("nd"),
     )
     scored = (
         left.join(right, "cent_id")
@@ -3326,7 +3221,7 @@ def graph_knn_edges(
             "src",
             "dst",
             F.round(
-                _dot_expr("sv", "dv") / (F.col("ns") * F.col("nd")), 6
+                dot(F.col("sv"), F.col("dv")) / (F.col("ns") * F.col("nd")), 6
             ).alias("csim"),
         )
     )
@@ -3341,6 +3236,16 @@ def graph_knn_edges(
             top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
     )
+
+
+def _desc_key(x: float | None) -> tuple[int, float]:
+    """Sort key placing doubles in Spark's ``DESC`` order: NaN first
+    (Spark ranks NaN above every number), NULL last."""
+    if x is None:
+        return (2, 0.0)
+    if math.isnan(x):
+        return (0, 0.0)
+    return (1, -x)
 
 
 def graph_beam_topk(
@@ -3361,7 +3266,7 @@ def graph_beam_topk(
     """NSW-style beam search over the prebuilt kNN graph: each query
     enters at the min-id seed node of its ``entries`` nearest coarse
     cells, then ``steps`` bounded supersteps expand the beam along graph
-    edges, exactly re-scoring every frontier node (codegen dot, 6dp) and
+    edges, exactly re-scoring every frontier node (cosine, 6dp) and
     re-cutting to the ``beam`` best per query; output is the final
     top-``k`` (self excluded, ranking key (csim DESC, node ASC) — the
     :func:`cosine_topk` total order).
@@ -3408,8 +3313,8 @@ def graph_beam_topk(
     # only the data-sized touches: one pushed-isin filter scan of the
     # standing EDGE table and one of the corpus table per superstep,
     # plus one tiny probe job. Every similarity stays the identical
-    # codegen arithmetic (_dot_expr/_norm_expr + HALF_UP round 6) the
-    # window version ran — the driver never does float math, it only
+    # Spark arithmetic (dot/l2_norm + HALF_UP round 6) the window
+    # version ran — the driver never does float math, it only
     # orders by values Spark already rounded (ties impossible: the cut
     # key (csim, node) is unique per pair), so results are value-equal
     # (oracle-gated at sf0.01/sf0.001).
@@ -3417,7 +3322,7 @@ def graph_beam_topk(
     ids = [int(i) for i in query_ids]
     q_rows = (
         base.filter(F.col("vec_id").isin(ids))
-        .select("vec_id", "v", _norm_expr("v").alias("nq"))
+        .select("vec_id", "v", l2_norm(F.col("v")).alias("nq"))
         .collect()
     )  # ≤ |query_ids| rows of dim doubles — model-scale
     out_schema = (
@@ -3430,12 +3335,14 @@ def graph_beam_topk(
     )
     cents = _model_df(spark, model)
     probe_rows = (
-        qdf.crossJoin(F.broadcast(cents.withColumn("nc", _norm_expr("cv"))))
+        qdf.crossJoin(
+            F.broadcast(cents.withColumn("nc", l2_norm(F.col("cv"))))
+        )
         .select(
             "query_id",
             "cent_id",
             F.round(
-                _dot_expr("qv", "cv") / (F.col("nq") * F.col("nc")), 6
+                dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc")), 6
             ).alias("qsim"),
         )
         .collect()
@@ -3445,7 +3352,7 @@ def graph_beam_topk(
         by_query.setdefault(r["query_id"], []).append(r)
     probed: set[tuple[int, int]] = set()
     for qid, rows in by_query.items():
-        rows.sort(key=lambda r: (-r["qsim"], r["cent_id"]))
+        rows.sort(key=lambda r: (*_desc_key(r["qsim"]), r["cent_id"]))
         probed.update((qid, r["cent_id"]) for r in rows[:entries])
     cells = sorted({c for _, c in probed})
     seed_rows = (
@@ -3487,7 +3394,7 @@ def graph_beam_topk(
             .select(
                 F.col("vec_id").alias("node"),
                 F.col("v").alias("nv"),
-                _norm_expr("v").alias("nn"),
+                l2_norm(F.col("v")).alias("nn"),
             )
             .join(F.broadcast(pair_df), "node")
             .join(F.broadcast(qdf), "query_id")
@@ -3496,7 +3403,7 @@ def graph_beam_topk(
                 "query_id",
                 "node",
                 F.round(
-                    _dot_expr("qv", "nv") / (F.col("nq") * F.col("nn")), 6
+                    dot(F.col("qv"), F.col("nv")) / (F.col("nq") * F.col("nn")), 6
                 ).alias("csim"),
             )
             .collect()
@@ -3508,8 +3415,8 @@ def graph_beam_topk(
             )
         cur = set()
         for qid, lst in by_q.items():
-            # the window version's (csim DESC NULLS LAST, node ASC)
-            lst.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+            # the window version's (csim DESC, node ASC)
+            lst.sort(key=lambda t: (*_desc_key(t[0]), t[1]))
             cur.update((qid, n) for _, n in lst[:beam])
         last_scored = by_q
     out = [

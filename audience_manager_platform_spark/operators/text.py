@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import l2_norm
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
@@ -1282,11 +1284,10 @@ def hash_embed_stats(
     materialized one) — the audit then skips re-vectorizing the corpus."""
     if emb is None:
         emb = hash_embed(docs, dim)
-    sq = " + ".join(f"embedding[{i}] * embedding[{i}]" for i in range(dim))
     return emb.select(
         "vec_id",
         F.expr("size(filter(embedding, x -> x != 0.0))").cast("long").alias("nnz"),
-        F.round(F.expr(f"sqrt({sq})"), 6).alias("l2_norm"),
+        F.round(l2_norm(F.col("embedding")), 6).alias("l2_norm"),
     )
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import dot
 from ..operators.analytics import windowed_funnel
 from ..operators.relational import (
     asof_join,
@@ -288,9 +289,7 @@ def _array_functions(spark, sf_dir):
     list_dot_product reproduces bit-for-bit)."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
-    ssq = F.aggregate(
-        F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    ssq = dot(v, v)
     return emb.select(
         "vec_id",
         F.size(v).cast("long").alias("n_dims"),

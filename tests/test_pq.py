@@ -261,3 +261,25 @@ def test_ivfpq_residual_topk_shape_and_no_self(spark, sf_dir):
     assert set(by_q) == {0, 1}
     for ranks in by_q.values():
         assert sorted(ranks) == [1, 2, 3]
+
+
+_IVFPQ_DTYPES = [
+    ("query_id", "bigint"),
+    ("neighbor_id", "bigint"),
+    ("approx_d2_micro", "bigint"),
+    ("rank", "int"),
+]
+
+
+def test_ivfpq_topk_without_a_known_query_is_typed_empty(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = PQ.ivfpq_topk(emb, [10**9], k=3)
+    assert out.dtypes == _IVFPQ_DTYPES
+    assert out.collect() == []
+
+
+def test_ivfpq_residual_topk_without_a_known_query_is_typed_empty(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = PQ.ivfpq_residual_topk(emb, [10**9], k=3)
+    assert out.dtypes == _IVFPQ_DTYPES
+    assert out.collect() == []

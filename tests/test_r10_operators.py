@@ -276,6 +276,40 @@ def test_graph_beam_topk_validates_steps_and_k(spark):
         S.graph_beam_topk(emb, [0], k=20, beam=8)
 
 
+def test_graph_beam_topk_zero_norm_query_without_ansi(spark, sf_dir):
+    # a zero-norm query scores NULL against every centroid when ANSI is
+    # off; the driver-side probe cut must order those NULLs like Spark
+    # (last), not fail on them
+    from audience_manager_platform_spark.operators import similarity as S
+    from audience_manager_platform_spark.sources import load_table
+
+    zero = S.KMEANS_K + 4
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb = emb.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == zero,
+            F.array_repeat(F.lit(0.0).cast("float"), S.EMBED_DIM),
+        ).otherwise(F.col("embedding")),
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        out = S.graph_beam_topk(emb, [zero], k=3).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r.rank for r in out] == [1, 2, 3]
+    assert all(r.query_id == zero and r.csim is None for r in out)
+
+
+def test_desc_key_orders_like_spark_desc():
+    from audience_manager_platform_spark.operators import similarity as S
+
+    vals = [0.5, None, float("nan"), -1.0, 2.0]
+    got = sorted(vals, key=S._desc_key)
+    assert repr(got) == repr([float("nan"), 2.0, 0.5, -1.0, None])
+
+
 def test_graph_beam_superstep_rows_stay_bounded(spark):
     from audience_manager_platform_spark.operators import similarity as S
     from audience_manager_platform_spark.sources import load_table

@@ -138,8 +138,10 @@ def test_kmeans_twin_comembership(emb):
     # the planted near-copy (0, 20) must land in the same learned cell
     padded = _padded_emb(emb)
     base = padded.select("vec_id", S._vec_double().alias("v"))
-    cents = S.kmeans_fit(padded, k=4, iters=2)
-    cells = {r.vec_id: r.cent_id for r in S._assign(base, cents).collect()}
+    model = S.kmeans_fit_model(padded, k=4, iters=2)
+    cells = {
+        r.vec_id: r.cent_id for r in S.assign_cells_arrow(base, model).collect()
+    }
     assert cells[0] == cells[20]
 
 

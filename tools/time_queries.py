@@ -61,7 +61,8 @@ def main() -> None:
             samples.append(round(time.perf_counter() - t0, 3))
         total += samples[0] if args.repeat == 1 else sorted(samples)[len(samples) // 2]
         print(f"{name}: {samples} ({n} rows)", flush=True)
-    print(f"TOTAL (first-sample sum): {round(total, 3)}s", flush=True)
+    summed = "first-sample" if args.repeat == 1 else "median"
+    print(f"TOTAL ({summed} sum): {round(total, 3)}s", flush=True)
     spark.stop()
     os._exit(0)
 
