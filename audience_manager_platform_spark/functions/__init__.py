@@ -60,6 +60,19 @@ def l2_norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def squared_l2(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two ``array<double>`` columns: the
+    left-to-right fold ``((0.0 + (a0-b0)²) + (a1-b1)²) + ...``. Adding
+    0.0 first is exact for the non-negative terms, so the double equals
+    the unrolled ``(a0-b0)*(a0-b0) + (a1-b1)*(a1-b1) + ...`` sum bit for
+    bit. NULL if any element is NULL."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity of two ``array<double>`` columns from the
     :func:`dot` and :func:`l2_norm` folds. Callers scoring one vector

@@ -17,11 +17,11 @@ for BM25, broadcast-query scan for cosine).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import dot, l2_norm
-from .similarity import cosine_topk, cosine_topk_sql
+from .similarity import cosine_topk, cosine_topk_sql, recall_at_k, topk
 from .text import bm25_topk, bm25_topk_sql
 
 RRF_C = 60  # Cormack's constant; dampens the head of each ranking
@@ -47,12 +47,14 @@ def hybrid_search_rrf(
 
     ``postings``: the standing term-postings table threaded through to
     the BM25 tower (r11 shared-intermediate discipline)."""
-    lex = bm25_topk(docs, query_terms, k=pool, postings=postings).select(
-        F.col("doc_id").alias("id"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("bm25"), F.asc("doc_id")))
-        .alias("rank_lex"),
-    )
+    lex = topk(
+        bm25_topk(docs, query_terms, k=pool, postings=postings),
+        pool,
+        "bm25",
+        key=None,
+        item="doc_id",
+        rank="rank_lex",
+    ).select(F.col("doc_id").alias("id"), "rank_lex")
     sem = cosine_topk(emb, [query_vec_id], k=pool).select(
         F.col("neighbor_id").alias("id"), F.col("rank").alias("rank_sem")
     )
@@ -103,6 +105,30 @@ def hybrid_search_rrf_sql(
 
 # --------------------------------------- late-interaction (MaxSim) search
 CHUNK_ID_BASE = 1_000_000  # composite chunk id = doc_id * BASE + chunk_idx
+
+
+def _maxsim_topk(scored: DataFrame, k: int) -> DataFrame:
+    """MaxSim pooling + top-k over (query_id, doc_id, chunk_idx, cos)
+    chunk scores: per (query, doc) the best chunk's cosine (ties to the
+    lowest chunk_idx, an argmax via struct-max in one combinable
+    aggregate), then the top-k docs per query by (maxsim DESC, doc_id
+    ASC)."""
+    pooled = scored.groupBy("query_id", "doc_id").agg(
+        F.max(F.struct(F.col("cos"), (-F.col("chunk_idx")).alias("nci"))).alias(
+            "best"
+        )
+    )
+    return topk(
+        pooled.select(
+            "query_id",
+            "doc_id",
+            F.col("best.cos").alias("maxsim"),
+            (-F.col("best.nci")).cast("bigint").alias("best_chunk_idx"),
+        ),
+        k,
+        "maxsim",
+        item="doc_id",
+    )
 
 
 def chunk_maxsim_topk(
@@ -185,24 +211,7 @@ def chunk_maxsim_topk(
             ).alias("cos"),
         )
     )
-    pooled = scored.groupBy("query_id", "doc_id").agg(
-        F.max(F.struct(F.col("cos"), (-F.col("chunk_idx")).alias("nci"))).alias(
-            "best"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim"), F.asc("doc_id")
-    )
-    return (
-        pooled.select(
-            "query_id",
-            "doc_id",
-            F.col("best.cos").alias("maxsim"),
-            (-F.col("best.nci")).cast("bigint").alias("best_chunk_idx"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _maxsim_topk(scored, k)
 
 
 def chunk_maxsim_topk_sql(
@@ -453,9 +462,11 @@ def chunk_maxsim_ivf_topk(
     # a single join whose cent_id filter pushes into the inverted-lists
     # scan instead of a lazy probe subplan re-run per action (r11,
     # guide §1/§7.2)
-    probe_rows = probe_cells(
-        qvec, _model_df(spark, cell_model), n_probes, vec="qv", norm="qn"
-    ).collect()
+    probe_rows = (
+        probe_cells(qvec, _model_df(spark, cell_model), n_probes, vec="qv", norm="qn")
+        .drop("probe_rank")
+        .collect()
+    )
     probes = local_table(
         spark,
         probe_rows,
@@ -479,24 +490,7 @@ def chunk_maxsim_ivf_topk(
             ).alias("cos"),
         )
     )
-    pooled = scored.groupBy("query_id", "doc_id").agg(
-        F.max(
-            F.struct(F.col("cos"), (-F.col("chunk_idx")).alias("nci"))
-        ).alias("best")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim"), F.asc("doc_id")
-    )
-    return (
-        pooled.select(
-            "query_id",
-            "doc_id",
-            F.col("best.cos").alias("maxsim"),
-            (-F.col("best.nci")).cast("bigint").alias("best_chunk_idx"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _maxsim_topk(scored, k)
 
 
 def chunk_maxsim_ivf_topk_sql(
@@ -613,21 +607,11 @@ def chunk_maxsim_recall_eval(
     PQ, binary, and now chunked maxsim). Output (query_id, hits,
     recall_at_k); compare joins are |queries| x k rows, driver-scale at
     any corpus size — the cost is the two retrieval plans under test."""
-    exact = chunk_maxsim_topk(docs, query_ids, k).select(
-        "query_id", "doc_id"
-    )
-    approx = chunk_maxsim_ivf_topk(docs, query_ids, k, index=index).select(
-        "query_id", "doc_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "doc_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.round(F.count("hit") / F.lit(float(k)), 4).alias(
-                "recall_at_k"
-            ),
-        )
+    return recall_at_k(
+        chunk_maxsim_topk(docs, query_ids, k),
+        chunk_maxsim_ivf_topk(docs, query_ids, k, index=index),
+        k,
+        item="doc_id",
     )
 
 

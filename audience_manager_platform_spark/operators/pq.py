@@ -24,7 +24,7 @@ Scale/architecture posture (mirrors the shuffle-free k-means,
   per-codeword structs);
 - ADC scoring is a narrow map too: the per-query LUTs are constant
   arrays indexed by the code columns (``lut[c_j]``), so the only wide
-  operation in the whole query is the final top-k window per query.
+  operation in the whole query is the final top-k step per query.
 
 Determinism contract with the DuckDB twin (:func:`pq_histogram_sql`,
 :func:`pq_adc_topk_sql`): every quantized distance in the PQ path is an
@@ -46,10 +46,21 @@ class, so the contract bans it outright.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _mean6, _mean6_sql_items, _sum12_agg, _vec_double
+from ..functions import squared_l2
+from .partitioning import local_table
+from .similarity import (
+    _mean6,
+    _mean6_sql_items,
+    _sum12_agg,
+    _vec_double,
+    query_frame,
+    recall_at_k,
+    seed_model,
+    topk,
+)
 
 PQ_M = 4  # subspaces
 SUB_DIM = 16  # dims per subspace (PQ_M * SUB_DIM == EMBED_DIM)
@@ -106,10 +117,8 @@ def pq_fit_model(emb: DataFrame, iters: int = PQ_ITERS) -> Model:
     (code = vec_id, deterministic, oracle-replicable); then ``iters``
     Lloyd refinements — assignment inline (narrow), centroid update as
     ONE stacked aggregate over (j, code) across all subspaces."""
-    base = emb.select("vec_id", _vec_double().alias("v"))
     seed_rows = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in base.filter(F.col("vec_id") < PQ_K).collect()
+        seed_model(emb.select("vec_id", _vec_double().alias("v")), PQ_K)
     )
     model: Model = [
         [(code, vec[j * SUB_DIM : (j + 1) * SUB_DIM]) for code, vec in seed_rows]
@@ -224,6 +233,23 @@ def _py_d2(q: list[float], cw: list[float]) -> float:
     return s
 
 
+# output of every ADC top-k, also its typed empty result when no query
+# id is in the corpus
+_ADC_SCHEMA = (
+    "query_id bigint, neighbor_id bigint, approx_d2_micro bigint, rank int"
+)
+
+
+def _query_vectors(emb: DataFrame, query_ids: list[int]) -> dict[int, list[float]]:
+    """Driver-side {query_id: vector} for the ADC LUTs (≤ |query_ids|
+    rows of dim doubles)."""
+    base = emb.select("vec_id", _vec_double().alias("v"))
+    return {
+        int(r["query_id"]): [float(x) for x in r["q"]]
+        for r in query_frame(base, query_ids).collect()
+    }
+
+
 def pq_adc_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -237,14 +263,13 @@ def pq_adc_topk(
     vector with 4 constant-array lookups and 3 adds. LUT entries are
     exact bigint micro-distances and the score is their exact integer
     sum (``approx_d2_micro``) — no floating point and no rounding
-    anywhere between the LUT and the rank decision, on either engine."""
+    anywhere between the LUT and the rank decision, on either engine.
+    Typed empty when no query id is in the corpus."""
+    qvecs = _query_vectors(emb, query_ids)
+    if not qvecs:
+        return local_table(emb.sparkSession, [], _ADC_SCHEMA)
     model = pq_fit_model(emb, iters) if model is None else model
     _check_dense(model)
-    base = emb.select("vec_id", _vec_double().alias("v"))
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["v"]]
-        for r in base.filter(F.col("vec_id").isin(query_ids)).collect()
-    }
     codes = pq_encode_arrow(emb, model).select(
         "vec_id", *[f"c{j}" for j in range(PQ_M)]
     )
@@ -263,13 +288,11 @@ def pq_adc_topk(
         "neighbor_id",
         F.col("x.approx_d2_micro").alias("approx_d2_micro"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return topk(
+        scored.filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
+        "approx_d2_micro",
+        ascending=True,
     )
 
 
@@ -422,13 +445,6 @@ def pq_adc_topk_sql(
 
 
 # --------------------------------------------------------------- IVF-PQ
-# output of both IVF-PQ operators, also their typed empty result when no
-# query id is in the corpus
-_IVFPQ_SCHEMA = (
-    "query_id bigint, neighbor_id bigint, approx_d2_micro bigint, rank int"
-)
-
-
 def ivfpq_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -457,8 +473,7 @@ def ivfpq_topk(
     the probe table is O(|queries| x n_probes) and broadcast into the
     candidate join; the ADC sum is a per-row CASE over the per-query
     constant LUTs; the only wide ops are the candidate equi-join keyed
-    on cent_id and the final top-k window."""
-    from .partitioning import local_table
+    on cent_id and the final top-k step."""
     from .similarity import (
         IVF_PROBES,
         KMEANS_K,
@@ -471,12 +486,9 @@ def ivfpq_topk(
     n_probes = IVF_PROBES if n_probes is None else n_probes
     n_cells = KMEANS_K if n_cells is None else n_cells
     base = emb.select("vec_id", _vec_double().alias("v"))
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["v"]]
-        for r in base.filter(F.col("vec_id").isin(query_ids)).collect()
-    }
+    qvecs = _query_vectors(emb, query_ids)
     if not qvecs:
-        return local_table(emb.sparkSession, [], _IVFPQ_SCHEMA)
+        return local_table(emb.sparkSession, [], _ADC_SCHEMA)
     if cell_model is None:
         cell_model = kmeans_fit_model(emb, n_cells, iters)
     assigned = assign_cells_arrow(base, cell_model).select("vec_id", "cent_id")
@@ -486,11 +498,10 @@ def ivfpq_topk(
     codes = pq_encode_arrow(emb, pq_model).select(
         "vec_id", *[f"c{j}" for j in range(PQ_M)]
     )
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
     probes = probe_cells(
-        queries, _model_df(emb.sparkSession, cell_model), n_probes
+        query_frame(base, query_ids),
+        _model_df(emb.sparkSession, cell_model),
+        n_probes,
     ).select("query_id", "cent_id")
     branches = []
     for qid in sorted(qvecs):
@@ -509,13 +520,7 @@ def ivfpq_topk(
         codes.select(F.col("vec_id").alias("neighbor_id"), *[f"c{j}" for j in range(PQ_M)]),
         "neighbor_id",
     ).select("query_id", "neighbor_id", adc.alias("approx_d2_micro"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k, "approx_d2_micro", ascending=True)
 
 
 def ivfpq_topk_sql(
@@ -847,8 +852,7 @@ def ivfpq_residual_topk(
     residual map, PQ fit over residuals (stacked aggregate), encode
     (narrow), then broadcast(probes) ⋈ assigned ⋈ codes and a top-k
     window — the only wide ops are the cent_id candidate join and the
-    final window, identical to the raw-vector layout."""
-    from .partitioning import local_table
+    final top-k step, identical to the raw-vector layout."""
     from .similarity import IVF_PROBES, KMEANS_K, _model_df, probe_cells
 
     n_probes = IVF_PROBES if n_probes is None else n_probes
@@ -859,19 +863,15 @@ def ivfpq_residual_topk(
             emb, n_cells=n_cells, iters=iters, cell_model=cell_model
         )
     cell_model, pq_model, assigned, codes = index
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
     probes = probe_cells(
-        queries, _model_df(emb.sparkSession, cell_model), n_probes
+        query_frame(base, query_ids),
+        _model_df(emb.sparkSession, cell_model),
+        n_probes,
     ).select("query_id", "cent_id")
     probe_rows = [(int(r["query_id"]), int(r["cent_id"])) for r in probes.collect()]
     if not probe_rows:
-        return local_table(emb.sparkSession, [], _IVFPQ_SCHEMA)
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["v"]]
-        for r in base.filter(F.col("vec_id").isin(query_ids)).collect()
-    }
+        return local_table(emb.sparkSession, [], _ADC_SCHEMA)
+    qvecs = _query_vectors(emb, query_ids)
     cent_vecs = dict(cell_model)
     branches = []
     for qid, cid in sorted(probe_rows):
@@ -897,13 +897,7 @@ def ivfpq_residual_topk(
         ),
         "neighbor_id",
     ).select("query_id", "neighbor_id", adc.alias("approx_d2_micro"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k, "approx_d2_micro", ascending=True)
 
 
 def ivfpq_residual_topk_sql(
@@ -1018,49 +1012,26 @@ def pq_recall_eval(
     recall, and the honest companion to the ADC top-k itself (recall <
     1 is the documented semantics, here it is MEASURED).
 
-    Exact side: brute-force squared-L2 with the distance UNROLLED as
-    the same left-associated per-dimension chain on both engines (the
-    join carries the query vector, so no driver-side literals); both
-    sides are |queries| x k after their rank windows, and the compare
+    Exact side: brute-force squared-L2 as the same left-associated
+    per-dimension sum on both engines (:func:`~..functions.squared_l2`;
+    the join carries the query vector, so no driver-side literals); both
+    sides are |queries| x k after their top-k steps, and the compare
     join is driver-scale at any corpus size."""
-    from .similarity import EMBED_DIM
-
     base = emb.select("vec_id", _vec_double().alias("v"))
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    d2 = F.expr(
-        " + ".join(
-            f"(v[{i}] - qv[{i}]) * (v[{i}] - qv[{i}])"
-            for i in range(EMBED_DIM)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("d2"), F.asc("neighbor_id")
-    )
-    exact = (
-        base.crossJoin(F.broadcast(q))
+    exact = topk(
+        base.crossJoin(F.broadcast(query_frame(base, query_ids, "qv")))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(d2, 6).alias("d2"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
+            F.round(squared_l2(F.col("v"), F.col("qv")), 6).alias("d2"),
+        ),
+        k,
+        "d2",
+        ascending=True,
     )
-    approx = pq_adc_topk(emb, query_ids, k, iters, model=model).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.round(F.count("hit") / F.lit(float(k)), 4).alias("recall_at_k"),
-        )
-    )
+    approx = pq_adc_topk(emb, query_ids, k, iters, model=model)
+    return recall_at_k(exact, approx, k)
 
 
 def pq_recall_eval_sql(
@@ -1124,23 +1095,17 @@ def adc_rerank_topk(
     |queries|·k·mult vectors instead of the corpus: the refinement join
     is keyed on neighbor_id and is model-scale.
 
-    Exact distances use the unrolled left-assoc squared-diff chain
-    (same IEEE order as the twins' 1-based expansion), quantized to the
-    exact bigint micro-distance ``floor(d2*1e6+0.5)`` for both ranking
-    and display — same no-round() contract as the ADC stage."""
-    from .similarity import EMBED_DIM
-
+    Exact distances use the left-assoc squared-diff sum
+    (:func:`~..functions.squared_l2`, the IEEE order of the twins'
+    1-based expansion), quantized to the exact bigint micro-distance
+    ``floor(d2*1e6+0.5)`` for both ranking and display — same no-round()
+    contract as the ADC stage."""
     short = pq_adc_topk(
         emb, query_ids, k=k * shortlist_mult, iters=iters, model=model
     ).select("query_id", "neighbor_id")
     base = emb.select("vec_id", _vec_double().alias("v"))
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    d2 = " + ".join(
-        f"(v[{i}] - qv[{i}]) * (v[{i}] - qv[{i}])"
-        for i in range(EMBED_DIM)
-    )
+    queries = query_frame(base, query_ids, "qv")
+    d2 = squared_l2(F.col("v"), F.col("qv"))
     scored = (
         short.join(
             base.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
@@ -1149,16 +1114,10 @@ def adc_rerank_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.expr(f"floor(({d2}) * 1e6 + 0.5d)").alias("exact_d2_micro"),
+            F.floor(d2 * 1e6 + 0.5).alias("exact_d2_micro"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("exact_d2_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k, "exact_d2_micro", ascending=True)
 
 
 def adc_rerank_topk_sql(

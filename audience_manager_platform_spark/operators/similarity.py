@@ -17,14 +17,18 @@ Two strategies:
 Vector math goes through the two shared folds in :mod:`..functions`,
 ``dot`` and ``l2_norm`` (left-to-right IEEE sums, so doubles match the
 DuckDB oracle's ``list_dot_product``/``list_cosine_similarity``), and
-IVF probing through :func:`probe_cells`. An earlier 64-term ``F.expr``
-string per dot product (``v[0]*u[0] + v[1]*u[1] + …``) was once
-measured faster than the fold; on PySpark 4.1.2 it is slower, although
-``aggregate``/``zip_with`` there are still interpreted
-(``CodegenFallback``). Swapping only the two string kernels for the
-folds kept every value (16/16 oracle entries at sf0.01 and sf0.001) and
-cut the summed warm medians of those 16 registry entries at sf0.1 from
-36.1 s to 23.8 s (4 vCPU).
+IVF probing through :func:`probe_cells`. Every ANN operator here and in
+``pq``, ``sq`` and ``hybrid`` is a thin composition over three shared
+serving steps:
+
+- :func:`query_frame` — the query rows as ``(query_id, vector)``;
+- :func:`topk` — per-key ranking by ``(score, item ASC)`` with the
+  ``rank <= k`` cut;
+- :func:`recall_at_k` (over :func:`recall_hits`) — the per-query recall
+  compare of an approximate top-k against the exact one.
+
+Scorers stay plain ``Column`` expressions built by each operator
+(cosine, ADC LUT sum, Hamming popcount, MaxSim).
 Hyperplanes are deterministic literals shared with the oracle.
 """
 
@@ -78,6 +82,72 @@ def _vec_double(col: str = "embedding") -> Column:
     return F.col(col).cast("array<double>")
 
 
+# ------------------------------------------------------------ serving steps
+def query_frame(
+    base: DataFrame, query_ids: list[int], vec: str = "q"
+) -> DataFrame:
+    """The query step: the rows of ``base`` (vec_id, v) whose vec_id is
+    in ``query_ids``, as (query_id, ``vec``)."""
+    return base.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias(vec)
+    )
+
+
+def topk(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    key: str | list[str] | None = "query_id",
+    item: str = "neighbor_id",
+    ascending: bool = False,
+    rank: str | None = "rank",
+) -> DataFrame:
+    """The top-k step: rank the rows of each ``key`` group by ``score``
+    (descending, or ascending when ``ascending``) then ``item`` ascending
+    — a total order wherever (key, item) is unique — and keep ranks
+    <= ``k``. The rank column is named ``rank``, or dropped when
+    ``rank`` is None. ``key=None`` ranks the whole frame, so the caller
+    must bound its size."""
+    order = F.asc(score) if ascending else F.desc(score)
+    spec = Window.partitionBy(key) if key else Window
+    w = spec.orderBy(order, F.asc(item))
+    col = rank or "_rank"
+    out = scored.withColumn(col, F.row_number().over(w)).filter(F.col(col) <= k)
+    return out if rank else out.drop(col)
+
+
+def recall_hits(
+    exact: DataFrame,
+    approx: DataFrame,
+    key: str | list[str] = "query_id",
+    item: str = "neighbor_id",
+) -> DataFrame:
+    """The recall compare: ``exact``'s (key, item) pairs left-joined with
+    ``approx``'s; ``hit`` is 1 where approx returned the pair too and
+    NULL where it missed it."""
+    on = ([key] if isinstance(key, str) else list(key)) + [item]
+    return exact.select(*on).join(
+        approx.select(*on, F.lit(1).alias("hit")), on, "left"
+    )
+
+
+def recall_at_k(
+    exact: DataFrame, approx: DataFrame, k: int, item: str = "neighbor_id"
+) -> DataFrame:
+    """The recall step: per query, the exact top-k pairs the approximate
+    top-k also returned — (query_id, hits, recall_at_k), recall at 4dp.
+    Both inputs are |queries| x k rows, so the compare is driver-scale
+    at any corpus size; the cost is the two retrieval plans."""
+    return (
+        recall_hits(exact, approx, item=item)
+        .groupBy("query_id")
+        .agg(
+            F.count("hit").alias("hits"),
+            F.round(F.count("hit") / F.lit(float(k)), 4).alias("recall_at_k"),
+        )
+    )
+
+
 # ------------------------------------------------------------ brute force
 def cosine_topk(
     emb: DataFrame, query_ids: list[int], k: int = 5
@@ -86,22 +156,15 @@ def cosine_topk(
     Ranking key is (rounded similarity desc, vec_id asc) — total order,
     deterministic across engines."""
     base = emb.select("vec_id", _vec_double().alias("v"))
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
+    queries = query_frame(base, query_ids)
+    scored = base.join(
+        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_similarity(F.col("q"), F.col("v")), 6).alias("cosine"),
     )
-    scored = (
-        base.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("q"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k, "cosine")
 
 
 def cosine_topk_sql(query_ids: list[int], k: int = 5, src: str = "embeddings") -> str:
@@ -228,17 +291,19 @@ def lsh_near_pairs(emb: DataFrame, threshold: float = 0.35) -> DataFrame:
         F.col("v").alias("vb"),
         l2_norm(F.col("v")).alias("nb"),
     )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    # the cosine is computed once and filtered inside one array: a plain
+    # filter on it is pushed into the join condition while the Project
+    # above the join evaluates the same fold again. NULL and NaN keep the
+    # semantics of ``cosine >= threshold`` (NULL dropped, NaN kept).
+    cosine = F.round(
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
+    )
+    return cand.join(va, "id_a").join(vb, "id_b").select(
+        "id_a",
+        "id_b",
+        F.explode(F.filter(F.array(cosine), lambda c: c >= threshold)).alias(
+            "cosine"
+        ),
     )
 
 
@@ -304,10 +369,7 @@ def ivf_topk(
     a neighbor assigned to a non-probed cell is missed.
     """
     base = emb.select("vec_id", _vec_double().alias("v"))
-    model = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in base.filter(F.col("vec_id") < IVF_CENTROIDS).collect()
-    ]
+    model = seed_model(base)
     return _ivf_probe(
         base,
         _model_df(emb.sparkSession, model),
@@ -315,6 +377,19 @@ def ivf_topk(
         query_ids,
         k,
     )
+
+
+def seed_model(
+    base: DataFrame, n: int = IVF_CENTROIDS
+) -> list[tuple[int, list[float]]]:
+    """The vectors of ``base`` (vec_id, v) with ``vec_id < n``, collected
+    as a driver-side ``(id, vector)`` model: the fixed IVF coarse
+    quantizer at the default ``n``, and the deterministic seed of every
+    k-means/PQ fit (the rule the SQL twins replicate)."""
+    return [
+        (int(r["vec_id"]), [float(x) for x in r["v"]])
+        for r in base.filter(F.col("vec_id") < n).collect()
+    ]
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -418,20 +493,40 @@ def probe_cells(
     broadcast into a cross join. Norms are taken once per query (kept
     as ``norm``) and once per centroid, the cosine is rounded to 6dp,
     and cells rank by (qsim DESC, cent_id ASC) — the order of the SQL
-    twins' probe CTEs. Returns the query columns plus ``norm`` and
-    ``cent_id``."""
+    twins' probe CTEs. Returns the query columns plus ``norm``,
+    ``cent_id`` and the cell's ``probe_rank`` (1 = nearest)."""
     q = queries.withColumn(norm, l2_norm(F.col(vec)))
     model = cents.select("cent_id", "cv", l2_norm(F.col("cv")).alias("_cn"))
-    w = Window.partitionBy(key).orderBy(F.desc("qsim"), F.asc("cent_id"))
+    scored = q.join(F.broadcast(model), how="cross").withColumn(
+        "qsim",
+        F.round(dot(F.col(vec), F.col("cv")) / (F.col(norm) * F.col("_cn")), 6),
+    )
+    return topk(
+        scored, n_probes, "qsim", key=key, item="cent_id", rank="probe_rank"
+    ).select(*q.columns, "cent_id", "probe_rank")
+
+
+def _ivf_candidates(
+    base: DataFrame,
+    cents: DataFrame,
+    assigned: DataFrame,
+    query_ids: list[int],
+    n_probes: int,
+) -> DataFrame:
+    """The IVF candidate set over a cell-assigned corpus (``assigned``:
+    vec_id, v, cent_id): every (query, neighbor) pair inside the query's
+    ``n_probes`` nearest cells, self excluded, with its exact 6dp cosine
+    and the ``probe_rank`` of the neighbor's cell."""
+    probes = probe_cells(query_frame(base, query_ids), cents, n_probes)
     return (
-        q.join(F.broadcast(model), how="cross")
-        .withColumn(
-            "qsim",
-            F.round(dot(F.col(vec), F.col("cv")) / (F.col(norm) * F.col("_cn")), 6),
+        probes.join(assigned, "cent_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(cosine_similarity(F.col("q"), F.col("v")), 6).alias("cosine"),
+            "probe_rank",
         )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_probes)
-        .select(*q.columns, "cent_id")
     )
 
 
@@ -443,26 +538,10 @@ def _ivf_probe(
     k: int,
     n_probes: int = IVF_PROBES,
 ) -> DataFrame:
-    """Shared IVF serving pipeline over a cell-assigned corpus
-    (``assigned``: vec_id, v, cent_id): queries probe their ``n_probes``
-    nearest cells -> exact scoring inside probed cells only. A caller
-    sweeping ``n_probes`` assigns the corpus once and passes the same
-    ``assigned`` to every sweep point."""
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    probes = probe_cells(queries, cents, n_probes).select("query_id", "q", "cent_id")
-    scored = (
-        probes.join(assigned, "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("q"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    """Shared IVF serving pipeline: queries probe their ``n_probes``
+    nearest cells -> exact scoring inside probed cells only -> top-k."""
+    cand = _ivf_candidates(base, cents, assigned, query_ids, n_probes)
+    return topk(cand.drop("probe_rank"), k, "cosine")
 
 
 def ivf_topk_sql(query_ids: list[int], k: int = 5, src: str = "embeddings") -> str:
@@ -651,12 +730,7 @@ def kmeans_fit_model(
     # pushed-down vec_id < k filter, and routing them through spread's
     # repartition paid a full scan+shuffle for a 16-row collect (r11;
     # same rows either way)
-    model = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in emb.select("vec_id", _vec_double().alias("v"))
-        .filter(F.col("vec_id") < k)
-        .collect()
-    ]
+    model = seed_model(emb.select("vec_id", _vec_double().alias("v")), k)
     # exact scaled-integer sums (order-free; see the contract block above
     # KMEANS_K) collected with the count; the single 6dp rounding happens
     # driver-side — the model is driver state already
@@ -1056,11 +1130,7 @@ def cosine_range_search(
     :func:`cosine_topk`; no window at all, so the whole query is one
     narrow scan over the corpus."""
     base = emb.select("vec_id", _vec_double().alias("v"))
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    from ..functions import cosine_similarity
-
+    queries = query_frame(base, query_ids)
     return (
         base.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1134,17 +1204,8 @@ def recall_eval(
     join and the per-query aggregate are driver-scale no matter the
     corpus size; the cost is the two retrieval plans themselves, which
     are the operators under test."""
-    exact = cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
-    approx = ivf_topk(emb, query_ids, k).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.round(F.count("hit") / F.lit(float(k)), 4).alias("recall_at_k"),
-        )
+    return recall_at_k(
+        cosine_topk(emb, query_ids, k), ivf_topk(emb, query_ids, k), k
     )
 
 
@@ -1746,22 +1807,37 @@ def ivf_probe_sweep(
 ) -> DataFrame:
     """Recall@k per probe count — the IVF TUNING CURVE (recall rises
     with probes, cost rises linearly; a deployment picks the knee).
-    One row per sweep point: (n_probes, n_queries, mean_recall).
+    One row per sweep point: (n_probes, n_queries, mean_recall). The
+    set-up is :func:`_sweep_hits`, shared with :func:`probe_recall_curve`."""
+    return (
+        _sweep_hits(emb, query_ids, k, probe_counts)
+        .groupBy("n_probes")
+        .agg(
+            F.countDistinct("query_id").cast("long").alias("n_queries"),
+            F.round(
+                F.count("hit") / (F.lit(float(k)) * F.countDistinct("query_id")),
+                4,
+            ).alias("mean_recall"),
+        )
+    )
 
-    The corpus is cell-assigned ONCE (the assignment table is
-    :func:`~.partitioning.materialize`'d and shared by every sweep
-    point — re-assigning per probe count would multiply the dominant
-    cost by |sweep|); each sweep point then only re-runs the
-    probe-selection + in-cell scoring, whose cost is the point being
-    measured. The exact top-k baseline is likewise computed once."""
-    from .partitioning import materialize
 
+def _sweep_hits(
+    emb: DataFrame, query_ids: list[int], k: int, probes: tuple[int, ...]
+) -> DataFrame:
+    """One candidate set for a whole IVF probe sweep. The corpus is
+    cell-assigned once and the exact top-k computed once (both
+    :func:`~.partitioning.materialize`'d); the probe -> inverted-list
+    join and the scoring run once, at ``max(probes)``, and every
+    candidate keeps the ``probe_rank`` of its cell. A sweep point ``p``
+    is then the candidates with ``probe_rank <= p`` followed by the
+    top-k step — the same top-k an ``n_probes=p`` search returns,
+    because probe order is total on (qsim DESC, cent_id ASC). Returns
+    :func:`recall_hits` of the exact top-k against every sweep point's,
+    keyed (n_probes, query_id, neighbor_id)."""
+    spark = emb.sparkSession
     base = emb.select("vec_id", _vec_double().alias("v"))
-    model = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in base.filter(F.col("vec_id") < IVF_CENTROIDS).collect()
-    ]
-    cents = _model_df(emb.sparkSession, model)
+    model = seed_model(base)
     assigned = materialize(
         assign_cells_arrow(base, model, keep_vec=True).select(
             "vec_id", "v", "cent_id"
@@ -1770,26 +1846,19 @@ def ivf_probe_sweep(
     exact = materialize(
         cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
     )
-    outs = []
-    for p in probe_counts:
-        approx = _ivf_probe(
-            base, cents, assigned, query_ids, k, n_probes=p
-        ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-        outs.append(
-            exact.join(approx, ["query_id", "neighbor_id"], "left").agg(
-                F.lit(p).cast("int").alias("n_probes"),
-                F.countDistinct("query_id").cast("long").alias("n_queries"),
-                F.round(
-                    F.count("hit")
-                    / (F.lit(float(k)) * F.countDistinct("query_id")),
-                    4,
-                ).alias("mean_recall"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    points = local_table(spark, [(int(p),) for p in probes], "n_probes int")
+    cand = _ivf_candidates(
+        base, _model_df(spark, model), assigned, query_ids, max(probes)
+    )
+    approx = topk(
+        cand.join(F.broadcast(points), F.col("probe_rank") <= F.col("n_probes")),
+        k,
+        "cosine",
+        key=["n_probes", "query_id"],
+    )
+    return recall_hits(
+        exact.crossJoin(points), approx, key=["n_probes", "query_id"]
+    )
 
 
 def ivf_probe_sweep_sql(
@@ -2063,9 +2132,7 @@ def hard_negatives(
     positive cut compares on the shared 6dp grid so both engines drop
     the same rows."""
     base = emb.select("vec_id", _vec_double().alias("v"))
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = query_frame(base, query_ids)
     scored = (
         base.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select(
@@ -2077,12 +2144,7 @@ def hard_negatives(
         )
         .filter(F.col("cosine") < pos_threshold)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return topk(scored, k, "cosine")
 
 
 def hard_negatives_sql(
@@ -2231,12 +2293,9 @@ def margin_mutual_knn(
         )
     )
     top_a = out.filter(F.col("side") == 0).select("a_id", "b_id", "csim")
-    wb = Window.partitionBy("b_id").orderBy(F.desc("csim"), F.asc("a_id"))
-    top_b = (
-        out.filter(F.col("side") == 1)
-        .withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= k)
-        .select("a_id", "b_id", "csim")
+    top_b = topk(
+        out.filter(F.col("side") == 1).select("a_id", "b_id", "csim"),
+        k, "csim", key="b_id", item="a_id", rank=None,
     )
     return _margin_tail(top_a, top_b, k, threshold)
 
@@ -2249,18 +2308,12 @@ def _margin_pipeline(
     csim) table, then the :func:`_margin_tail` margins/mutual-argmax.
     (The exact miner emits its per-side tops straight from the scoring
     kernel and enters at :func:`_margin_tail` — r10.)"""
-    wa = Window.partitionBy("a_id").orderBy(F.desc("csim"), F.asc("b_id"))
-    wb = Window.partitionBy("b_id").orderBy(F.desc("csim"), F.asc("a_id"))
     top_a = materialize(
-        scored.withColumn("rn", F.row_number().over(wa)).filter(
-            F.col("rn") <= k
-        )
-    ).drop("rn")
+        topk(scored, k, "csim", key="a_id", item="b_id", rank=None)
+    )
     top_b = materialize(
-        scored.withColumn("rn", F.row_number().over(wb)).filter(
-            F.col("rn") <= k
-        )
-    ).drop("rn")
+        topk(scored, k, "csim", key="b_id", item="a_id", rank=None)
+    )
     return _margin_tail(top_a, top_b, k, threshold)
 
 
@@ -2291,20 +2344,12 @@ def _margin_tail(
             )
         )
 
-    wma = Window.partitionBy("a_id").orderBy(F.desc("margin"), F.asc("b_id"))
-    wmb = Window.partitionBy("b_id").orderBy(F.desc("margin"), F.asc("a_id"))
-    best_a = (
-        margins(top_a)
-        .withColumn("mrn", F.row_number().over(wma))
-        .filter(F.col("mrn") == 1)
-        .drop("mrn")
+    best_a = topk(
+        margins(top_a), 1, "margin", key="a_id", item="b_id", rank=None
     )
-    best_b = (
-        margins(top_b)
-        .withColumn("mrn", F.row_number().over(wmb))
-        .filter(F.col("mrn") == 1)
-        .select("a_id", "b_id")
-    )
+    best_b = topk(
+        margins(top_b), 1, "margin", key="b_id", item="a_id", rank=None
+    ).select("a_id", "b_id")
     return (
         best_a.join(best_b, ["a_id", "b_id"])
         .filter(F.col("margin") >= threshold)
@@ -2532,8 +2577,8 @@ def margin_recall_eval(
             assigned=assigned,
         )
     exact = exact_df.select("a_id", "b_id")
-    gated = gated_df.select("a_id", "b_id", F.lit(1).alias("hit"))
-    common = exact.join(gated.drop("hit"), ["a_id", "b_id"]).agg(
+    gated = gated_df.select("a_id", "b_id")
+    common = exact.join(gated, ["a_id", "b_id"]).agg(
         F.count("*").cast("long").alias("n_common")
     )
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
@@ -2596,46 +2641,22 @@ def probe_recall_curve(
     each added probe widens the scanned fraction ~1/IVF_CENTROIDS and
     buys back the neighbors that landed in unprobed cells.
 
-    The corpus is cell-assigned ONCE (materialized) and every sweep
-    point reuses it — the sweep costs |probes| small probe-join plans,
-    not |probes| assignment passes. The exact baseline is likewise
-    materialized once. Mean recall is hits/(k·|queries|), an exact
+    The set-up is :func:`_sweep_hits`, shared with
+    :func:`ivf_probe_sweep`. Mean recall is hits/(k·|queries|), an exact
     small-integer ratio on both engines.
     """
-    spark = emb.sparkSession
-    base = emb.select("vec_id", _vec_double().alias("v"))
-    model = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in base.filter(F.col("vec_id") < IVF_CENTROIDS).collect()
-    ]
-    cents = _model_df(spark, model)
-    assigned = materialize(
-        assign_cells_arrow(base, model, keep_vec=True).select(
-            "vec_id", "v", "cent_id"
-        )
-    )
-    exact = materialize(
-        cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
-    )
     denom = float(k * len(query_ids))
-    out = None
-    for p in probes:
-        approx = _ivf_probe(
-            base, cents, assigned, query_ids, k, n_probes=p
-        ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-        row = (
-            exact.join(approx, ["query_id", "neighbor_id"], "left")
-            .agg(F.count("hit").cast("long").alias("hits"))
-            .select(
-                F.lit(p).cast("int").alias("n_probes"),
-                "hits",
-                F.round(F.col("hits") / F.lit(denom), 6).alias(
-                    "mean_recall"
-                ),
-            )
+    return (
+        _sweep_hits(emb, query_ids, k, probes)
+        .groupBy("n_probes")
+        .agg(F.count("hit").cast("long").alias("hits"))
+        .select(
+            "n_probes",
+            "hits",
+            F.round(F.col("hits") / F.lit(denom), 6).alias("mean_recall"),
         )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("n_probes")
+        .orderBy("n_probes")
+    )
 
 
 def probe_recall_curve_sql(
@@ -2688,10 +2709,8 @@ def filtered_cosine_topk(
     base = emb.select("vec_id", "label", _vec_double().alias("v")).filter(
         F.col("label").isin(allowed_labels)
     )
-    queries = (
-        emb.select("vec_id", _vec_double().alias("v"))
-        .filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q"))
+    queries = query_frame(
+        emb.select("vec_id", _vec_double().alias("v")), query_ids
     )
     scored = base.join(
         F.broadcast(queries), F.col("vec_id") != F.col("query_id")
@@ -2703,12 +2722,7 @@ def filtered_cosine_topk(
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return topk(scored, k, "cosine")
 
 
 def filtered_cosine_topk_sql(
@@ -2769,12 +2783,9 @@ def centroid_classifier_eval(emb: DataFrame) -> DataFrame:
             cosine_similarity(F.col("v"), F.col("cv")), 6
         ).alias("csim"),
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("pred"))
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("label", "pred")
-    )
+    assigned = topk(
+        scored, 1, "csim", key="vec_id", item="pred", rank=None
+    ).select("label", "pred")
     per = assigned.groupBy("label", "pred").agg(
         F.count("*").cast("long").alias("n_vecs")
     )
@@ -2867,15 +2878,11 @@ def hamming_topk(
     vectors-on-disk split a deployment runs. Integer Hamming distances
     and id tiebreaks make the shortlist engine-exact; the re-rank reuses
     the 6dp-rounded cosine contract of :func:`cosine_topk`."""
-    from ..functions import cosine_similarity
-
     r = shortlist if shortlist is not None else HAMMING_SHORTLIST * k
     base = emb.select("vec_id", _vec_double().alias("v"))
     codes = base.select("vec_id", _sign_code_expr("v").alias("code"))
-    queries = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _sign_code_expr("v").alias("qcode"),
+    queries = query_frame(base, query_ids, "qv").withColumn(
+        "qcode", _sign_code_expr("qv")
     )
     ham = codes.join(
         F.broadcast(queries), F.col("vec_id") != F.col("query_id")
@@ -2885,14 +2892,7 @@ def hamming_topk(
         F.expr("CAST(bit_count(code ^ qcode) AS INT)").alias("hamming"),
         "qv",
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    short = (
-        ham.withColumn("srank", F.row_number().over(w_short))
-        .filter(F.col("srank") <= r)
-        .drop("srank")
-    )
+    short = topk(ham, r, "hamming", ascending=True, rank=None)
     # re-fetch full vectors for the shortlist only (codes RAM-resident,
     # vectors cold storage); |short| = |queries| * shortlist -> broadcast
     scored = base.withColumnRenamed("vec_id", "neighbor_id").join(
@@ -2905,12 +2905,7 @@ def hamming_topk(
             "cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return topk(scored, k, "cosine")
 
 
 def _sign_code_sql(src_cte: str = "e") -> str:
@@ -2979,17 +2974,8 @@ def hamming_recall_eval(
     """Recall@k of the binary-code path against the exact scan — the QA
     number that prices the 64x compression (companion to
     :func:`recall_eval` for IVF). Output (query_id, hits, recall_at_k)."""
-    exact = cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
-    approx = hamming_topk(emb, query_ids, k).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.round(F.count("hit") / F.lit(float(k)), 4).alias("recall_at_k"),
-        )
+    return recall_at_k(
+        cosine_topk(emb, query_ids, k), hamming_topk(emb, query_ids, k), k
     )
 
 
@@ -3033,18 +3019,16 @@ def matryoshka_recall(
     joins are |queries| x k). The fixture's hashing-trick embeddings are
     not MRL-trained, so the curve here prices raw truncation — the
     operator is the eval harness, not a claim about the encoder."""
-    exact = cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
+    exact = cosine_topk(emb, query_ids, k)
     total = float(len(query_ids) * k)
     outs = []
     for m in dims:
         trunc = emb.select(
             "vec_id", F.slice(_vec_double(), 1, m).alias("embedding")
         )
-        approx = cosine_topk(trunc, query_ids, k).select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
+        approx = cosine_topk(trunc, query_ids, k)
         outs.append(
-            exact.join(approx, ["query_id", "neighbor_id"], "left").agg(
+            recall_hits(exact, approx).agg(
                 F.lit(m).cast("int").alias("dim_prefix"),
                 F.count("hit").alias("hits"),
                 F.round(F.count("hit") / F.lit(total), 4).alias(
@@ -3225,12 +3209,9 @@ def graph_knn_edges(
             ).alias("csim"),
         )
     )
-    w = Window.partitionBy("src").orderBy(F.desc("csim"), F.asc("dst"))
-    top = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= m)
-        .select("src", "dst")
-    )
+    top = topk(
+        scored, m, "csim", key="src", item="dst", rank=None
+    ).select("src", "dst")
     return materialize(
         top.union(
             top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -3321,8 +3302,8 @@ def graph_beam_topk(
     spark = emb.sparkSession
     ids = [int(i) for i in query_ids]
     q_rows = (
-        base.filter(F.col("vec_id").isin(ids))
-        .select("vec_id", "v", l2_norm(F.col("v")).alias("nq"))
+        query_frame(base, ids, "qv")
+        .withColumn("nq", l2_norm(F.col("qv")))
         .collect()
     )  # ≤ |query_ids| rows of dim doubles — model-scale
     out_schema = (
@@ -3522,17 +3503,10 @@ def graph_beam_recall_eval(
     measured-recall eval every approximate retrieval path in this module
     ships (:func:`recall_eval` discipline). The cost is the two
     retrieval plans; the compare join is |queries|·k rows."""
-    exact = cosine_topk(emb, query_ids, k).select("query_id", "neighbor_id")
-    approx = graph_beam_topk(emb, query_ids, k, **kw).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.round(F.count("hit") / F.lit(float(k)), 4).alias("recall_at_k"),
-        )
+    return recall_at_k(
+        cosine_topk(emb, query_ids, k),
+        graph_beam_topk(emb, query_ids, k, **kw),
+        k,
     )
 
 
@@ -3818,17 +3792,12 @@ def two_level_seed_assign(
     aggregate.  Zero corpus-sized shuffles, zero windows over the corpus
     (the seed-election window partitions by super-cell)."""
     base = emb.select("vec_id", _vec_double().alias("v"))
-    model1 = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in base.filter(F.col("vec_id") < int(k1)).collect()
-    ]
+    model1 = seed_model(base, int(k1))
     a1 = assign_cells_arrow(base, model1)
-    w = Window.partitionBy("cent_id").orderBy("vec_id")
-    seed_ids = (
-        a1.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k2))
-        .select(F.col("cent_id").alias("super_id"), "vec_id")
-    )
+    seed_ids = topk(
+        a1, int(k2), "vec_id", key="cent_id", item="vec_id", ascending=True,
+        rank=None,
+    ).select(F.col("cent_id").alias("super_id"), "vec_id")
     seeds = seed_ids.join(base, "vec_id").collect()  # ≤ k1·k2 rows
     model2: dict[int, list[tuple[int, list[float]]]] = {}
     for r in sorted(seeds, key=lambda r: (int(r["super_id"]), int(r["vec_id"]))):

@@ -16,7 +16,7 @@ Scale posture (100 TB):
 - encode and ADC scoring are single codegen'd projections over the scan
   (no shuffle, no Python); the int8 codes are 8x smaller than float64 at
   rest, which is the point of SQ at this scale;
-- top-k uses the same scan + window pattern as every other ANN entry.
+- top-k uses the same scan + shared top-k step as every other ANN entry.
 
 Determinism contract with the DuckDB oracle: min/max are exact, the
 scale division and half-up floor encode are identical double ops on both
@@ -26,10 +26,10 @@ tiebreaker — the same convention the cosine/PQ families use.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import EMBED_DIM, _vec_double
+from .similarity import EMBED_DIM, _vec_double, query_frame, topk
 
 SQ_LEVELS = 255  # int8 code range 0..255
 
@@ -170,9 +170,8 @@ def sq_adc_topk(
     column at deployment (codes are what a 100 TB index stores)."""
     model = sq_fit_model(emb)
     enc = sq_encode(emb, model)
-    queries = (
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), _vec_double().alias("q"))
+    queries = query_frame(
+        emb.select("vec_id", _vec_double().alias("v")), query_ids
     )
     # decode + dot as HOF loops (transform/zip_with/aggregate — the
     # cosine_similarity pattern): an unrolled 64-term "+"-chain is ONE
@@ -199,12 +198,7 @@ def sq_adc_topk(
         F.col("vec_id").alias("neighbor_id"),
         F.round(dot, 6).alias("adc_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return topk(scored, k, "adc_score")
 
 
 # ------------------------------------------------------------ SQL twins

@@ -59,3 +59,30 @@ def test_create_dataframe_only_inside_local_table():
             ):
                 offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_row_number_only_inside_topk():
+    """Every per-key ranking in the ANN serving modules goes through one
+    step, ``similarity.topk`` (per-key ``(score, item ASC)`` order and
+    the ``rank <= k`` cut). Any other ``row_number()`` call in them is a
+    second top-k path. The ``ROW_NUMBER()`` text inside the DuckDB twins'
+    SQL strings is not a call and is not scanned."""
+    offenders = []
+    for name in ("similarity", "pq", "sq", "hybrid"):
+        path = PKG / "operators" / f"{name}.py"
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if name == "similarity":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "topk":
+                    allowed = set(range(node.lineno, node.end_lineno + 1))
+            assert allowed, "similarity.topk is missing"
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "row_number"
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)

@@ -273,9 +273,13 @@ _IVFPQ_DTYPES = [
 
 def test_ivfpq_topk_without_a_known_query_is_typed_empty(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    out = PQ.ivfpq_topk(emb, [10**9], k=3)
-    assert out.dtypes == _IVFPQ_DTYPES
-    assert out.collect() == []
+    for adc_topk in (PQ.ivfpq_topk, PQ.pq_adc_topk):
+        out = adc_topk(emb, [10**9], k=3)
+        assert out.dtypes == _IVFPQ_DTYPES
+        assert out.collect() == []
+    # the flat ADC shortlist's consumers go through the same empty frame
+    assert PQ.adc_rerank_topk(emb, [10**9], k=3).collect() == []
+    assert PQ.pq_recall_eval(emb, [10**9], k=3).collect() == []
 
 
 def test_ivfpq_residual_topk_without_a_known_query_is_typed_empty(spark, sf_dir):
@@ -283,3 +287,4 @@ def test_ivfpq_residual_topk_without_a_known_query_is_typed_empty(spark, sf_dir)
     out = PQ.ivfpq_residual_topk(emb, [10**9], k=3)
     assert out.dtypes == _IVFPQ_DTYPES
     assert out.collect() == []
+

@@ -1,5 +1,5 @@
-"""The shared vector kernel in ``functions``: ``dot``, ``l2_norm`` and
-``cosine_similarity`` are exact left-to-right folds (the summation order
+"""The shared vector kernel in ``functions``: ``dot``, ``l2_norm``,
+``squared_l2`` and ``cosine_similarity`` are exact left-to-right folds (the summation order
 the DuckDB oracle's ``list_dot_product`` uses), NULL-propagating, and
 ``cosine_similarity`` is built from the other two."""
 
@@ -10,7 +10,12 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from audience_manager_platform_spark.functions import cosine_similarity, dot, l2_norm
+from audience_manager_platform_spark.functions import (
+    cosine_similarity,
+    dot,
+    l2_norm,
+    squared_l2,
+)
 
 
 def _py_dot(a, b):
@@ -36,15 +41,24 @@ def test_kernels_match_the_python_fold_bit_for_bit(spark, dim):
         for _ in range(20)
     ]
     df = spark.createDataFrame(pairs, "a array<double>, b array<double>")
+    # squared_l2 replaced unrolled "(a[i] - b[i]) * (a[i] - b[i]) + ..."
+    # strings; its leading 0.0 + is exact for non-negative terms
+    unrolled = " + ".join(
+        f"(a[{i}] - b[{i}]) * (a[{i}] - b[{i}])" for i in range(dim)
+    )
     got = df.select(
         dot(F.col("a"), F.col("b")).alias("d"),
         l2_norm(F.col("a")).alias("na"),
         cosine_similarity(F.col("a"), F.col("b")).alias("c"),
+        squared_l2(F.col("a"), F.col("b")).alias("s"),
+        F.expr(unrolled).alias("s_unrolled"),
     ).collect()
     for (a, b), r in zip(pairs, got):
         assert r.d == _py_dot(a, b)
         assert r.na == _py_norm(a)
         assert r.c == _py_dot(a, b) / (_py_norm(a) * _py_norm(b))
+        diff = [x - y for x, y in zip(a, b)]
+        assert r.s == r.s_unrolled == _py_dot(diff, diff)
 
 
 def test_kernels_are_null_when_an_element_is_null(spark):
@@ -75,3 +89,4 @@ def test_cosine_similarity_keeps_its_column_tree(spark):
         return re.sub(r"\b([xyz])_\d+\b", r"\1", str(c))
 
     assert tree(cosine_similarity(a, b)) == tree(literal)
+

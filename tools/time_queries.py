@@ -64,6 +64,11 @@ def main() -> None:
     summed = "first-sample" if args.repeat == 1 else "median"
     print(f"TOTAL ({summed} sum): {round(total, 3)}s", flush=True)
     spark.stop()
+    # os._exit skips atexit hooks, so sweep the materialize() scratch
+    # dirs (amp-mat-*) here or every timed query leaks them
+    from audience_manager_platform_spark.operators import partitioning
+
+    partitioning._sweep_materialized()
     os._exit(0)
 
 
