@@ -119,15 +119,13 @@ def topk(
 def recall_hits(
     exact: DataFrame,
     approx: DataFrame,
-    key: str | list[str] = "query_id",
-    item: str = "neighbor_id",
+    on: tuple[str, ...] = ("query_id", "neighbor_id"),
 ) -> DataFrame:
-    """The recall compare: ``exact``'s (key, item) pairs left-joined with
-    ``approx``'s; ``hit`` is 1 where approx returned the pair too and
+    """The recall compare: ``exact``'s ``on`` tuples left-joined with
+    ``approx``'s; ``hit`` is 1 where approx returned the tuple too and
     NULL where it missed it."""
-    on = ([key] if isinstance(key, str) else list(key)) + [item]
     return exact.select(*on).join(
-        approx.select(*on, F.lit(1).alias("hit")), on, "left"
+        approx.select(*on, F.lit(1).alias("hit")), list(on), "left"
     )
 
 
@@ -139,7 +137,7 @@ def recall_at_k(
     Both inputs are |queries| x k rows, so the compare is driver-scale
     at any corpus size; the cost is the two retrieval plans."""
     return (
-        recall_hits(exact, approx, item=item)
+        recall_hits(exact, approx, ("query_id", item))
         .groupBy("query_id")
         .agg(
             F.count("hit").alias("hits"),
@@ -1857,7 +1855,7 @@ def _sweep_hits(
         key=["n_probes", "query_id"],
     )
     return recall_hits(
-        exact.crossJoin(points), approx, key=["n_probes", "query_id"]
+        exact.crossJoin(points), approx, ("n_probes", "query_id", "neighbor_id")
     )
 
 
