@@ -575,15 +575,24 @@ BLOOM_M_BITS = 1 << 20
 BLOOM_K = 5
 
 
-def _bloom_positions(gram: str, m_bits: int, k: int) -> list[int]:
-    """k double-hashed bit positions (crc32 + odd adler32 stride) —
-    deterministic across processes, no PYTHONHASHSEED dependence."""
-    import zlib
+def _make_bloom_positions():
+    """Factory for the k double-hashed bit positions of a gram (crc32 +
+    odd adler32 stride) — deterministic across processes, no
+    PYTHONHASHSEED dependence. Nested, as :func:`pq._make_argmin` is, so
+    the Arrow kernels' closures capture it by value: a module-level
+    function is pickled by reference, and the Python worker then has to
+    import this package, which fails when the package is importable only
+    through the driver's ``sys.path``."""
 
-    b = gram.encode("utf-8")
-    h1 = zlib.crc32(b)
-    h2 = zlib.adler32(b) | 1  # odd stride so it cycles the whole table
-    return [(h1 + i * h2) % m_bits for i in range(k)]
+    def bloom_positions(gram: str, m_bits: int, k: int) -> list[int]:
+        import zlib
+
+        b = gram.encode("utf-8")
+        h1 = zlib.crc32(b)
+        h2 = zlib.adler32(b) | 1  # odd stride so it cycles the whole table
+        return [(h1 + i * h2) % m_bits for i in range(k)]
+
+    return bloom_positions
 
 
 def bloom_decontaminate(
@@ -625,6 +634,7 @@ def bloom_decontaminate(
 
     bench_grams = grams_of(benchmark).select("gram").distinct()
     corpus_grams = grams_of(docs)
+    bloom_positions = _make_bloom_positions()
 
     def build(batches):
         bm = np.zeros(m_bits // 8, dtype=np.uint8)
@@ -632,7 +642,7 @@ def bloom_decontaminate(
         for pdf in batches:
             for gram in pdf["gram"]:
                 any_rows = True
-                for pos in _bloom_positions(gram, m_bits, k_hashes):
+                for pos in bloom_positions(gram, m_bits, k_hashes):
                     bm[pos >> 3] |= np.uint8(1 << (pos & 7))
         if any_rows:
             yield pd.DataFrame({"bm": [bm.tobytes()]})
@@ -651,7 +661,7 @@ def bloom_decontaminate(
             keep = []
             for gram in pdf["gram"]:
                 hit = True
-                for pos in _bloom_positions(gram, m_bits, k_hashes):
+                for pos in bloom_positions(gram, m_bits, k_hashes):
                     if not (bm[pos >> 3] >> (pos & 7)) & 1:
                         hit = False
                         break

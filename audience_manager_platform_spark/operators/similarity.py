@@ -3577,36 +3577,54 @@ HIER_SAMPLE_ROWS = 20_000
 HIER_ID_STRIDE = 1 << 20  # global sub-cell id = super_id·STRIDE + local idx
 
 
-def _np_half_up6(x: "np.ndarray") -> "np.ndarray":
-    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+def _make_half_up6():
+    """Factory for the half-up 6dp rounding of numpy arrays. Nested, as
+    :func:`pq._make_argmin` is, so an Arrow kernel's closure captures it
+    by value: a module-level function is pickled by reference, and the
+    Python worker then has to import this package, which fails when the
+    package is importable only through the driver's ``sys.path``."""
+
+    def half_up6(x):
+        import numpy as np
+
+        return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+    return half_up6
 
 
-def _np_argmax_cosine(
-    X: "np.ndarray", nv: "np.ndarray", cents: list[tuple[int, "np.ndarray"]]
-) -> tuple["np.ndarray", "np.ndarray"]:
-    """Shared argmax-cosine inner loop for the two-level Arrow kernel:
-    identical operation order to :func:`assign_cells_arrow` (sequential
-    across dims, half-up 6dp, strict ``>`` so ties keep the LOWEST id in
-    the sorted ``cents`` list) — the established oracle-parity math."""
-    best_s = None
-    best_c = None
-    for cid, cv in cents:
-        ncv = 0.0
-        for x in cv:
-            ncv = ncv + x * x
-        ncv = float(np.sqrt(ncv))
-        dot = np.zeros(len(X))
-        for i in range(X.shape[1]):
-            dot = dot + X[:, i] * cv[i]
-        csim = _np_half_up6(dot / (nv * ncv))
-        if best_s is None:
-            best_s = csim
-            best_c = np.full(len(X), cid, dtype=np.int64)
-        else:
-            m = csim > best_s
-            best_s = np.where(m, csim, best_s)
-            best_c = np.where(m, np.int64(cid), best_c)
-    return best_c, best_s
+def _make_argmax_cosine():
+    """Factory for the argmax-cosine inner loop of the two-level Arrow
+    kernel: identical operation order to :func:`assign_cells_arrow`
+    (sequential across dims, half-up 6dp, strict ``>`` so ties keep the
+    LOWEST id in the sorted ``cents`` list) — the established
+    oracle-parity math. Nested for the reason :func:`_make_half_up6`
+    gives."""
+    half_up6 = _make_half_up6()
+
+    def argmax_cosine(X, nv, cents):
+        import numpy as np
+
+        best_s = None
+        best_c = None
+        for cid, cv in cents:
+            ncv = 0.0
+            for x in cv:
+                ncv = ncv + x * x
+            ncv = float(np.sqrt(ncv))
+            dot = np.zeros(len(X))
+            for i in range(X.shape[1]):
+                dot = dot + X[:, i] * cv[i]
+            csim = half_up6(dot / (nv * ncv))
+            if best_s is None:
+                best_s = csim
+                best_c = np.full(len(X), cid, dtype=np.int64)
+            else:
+                m = csim > best_s
+                best_s = np.where(m, csim, best_s)
+                best_c = np.where(m, np.int64(cid), best_c)
+        return best_c, best_s
+
+    return argmax_cosine
 
 
 def _np_lloyd(
@@ -3622,13 +3640,14 @@ def _np_lloyd(
     k = min(int(k), len(X))
     cents = [(j, X[j].astype(np.float64).copy()) for j in range(k)]
     nv = np.sqrt(np.einsum("ij,ij->i", X, X))
+    half_up6 = _make_half_up6()
     for _ in range(int(iters)):
         C = np.vstack([cv for _, cv in cents])
         sims = (X @ C.T) / (
             np.maximum(nv, 1e-300)[:, None]
             * np.maximum(np.sqrt(np.einsum("ij,ij->i", C, C)), 1e-300)[None, :]
         )
-        sims = _np_half_up6(sims)
+        sims = half_up6(sims)
         # argmax returns the FIRST maximal index = lowest centroid id
         best = np.argmax(sims, axis=1)
         nxt = []
@@ -3672,7 +3691,7 @@ def hier_fit_model(
     K1 = max(1, math.isqrt(max(0, K - 1)) + 1)  # ceil(sqrt(K))
     model1 = _np_lloyd(X, K1, iters)
     nv = np.sqrt(np.einsum("ij,ij->i", X, X))
-    sup, _ = _np_argmax_cosine(
+    sup, _ = _make_argmax_cosine()(
         X, nv, [(cid, np.asarray(cv)) for cid, cv in model1]
     )
     model2: dict[int, list[tuple[int, list[float]]]] = {}
@@ -3736,6 +3755,7 @@ def assign_cells_two_level(
         ]
         for sid, cells in model2.items()
     }
+    argmax_cosine = _make_argmax_cosine()
 
     def assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
@@ -3746,12 +3766,12 @@ def assign_cells_two_level(
             for i in range(X.shape[1]):
                 nv = nv + X[:, i] * X[:, i]
             nv = np.sqrt(nv)
-            sup, _ = _np_argmax_cosine(X, nv, supers)
+            sup, _ = argmax_cosine(X, nv, supers)
             cent = np.empty(len(X), dtype=np.int64)
             csim = np.empty(len(X), dtype=np.float64)
             for sid in np.unique(sup):
                 idx = np.where(sup == sid)[0]
-                bc, bs = _np_argmax_cosine(X[idx], nv[idx], subs[int(sid)])
+                bc, bs = argmax_cosine(X[idx], nv[idx], subs[int(sid)])
                 cent[idx] = bc
                 csim[idx] = bs
             out = {"vec_id": pdf["vec_id"]}

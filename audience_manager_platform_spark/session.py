@@ -20,6 +20,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """A quarter of the machine's memory, between 1 and 8 GiB: enough
+    heap for the local driver without letting it claim the whole box
+    (perfbench sizes its sessions by the same rule)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = int(next(line for line in fh if line.startswith("MemTotal")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+    return f"{max(1, min(8, kb // (4 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "audience_manager_platform_spark",
     master: str | None = None,
@@ -29,8 +41,9 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     In local mode the driver is the only JVM; ``spark.driver.memory`` is the
-    single memory knob. On a cluster the same configs apply unchanged —
-    nothing here assumes local execution.
+    single memory knob: ``SPARK_DRIVER_MEMORY`` when set, else
+    :func:`default_driver_memory`. On a cluster the same configs apply
+    unchanged — nothing here assumes local execution.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -53,7 +66,10 @@ def get_spark(
         # operators add explicit broadcast() hints where the small side is
         # known small at ANY scale (e.g. region: 5 rows).
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -7,6 +7,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -22,6 +24,7 @@ def test_compact_line_fits_driver_tail_capture():
         timings,
         0.1,
         bench.HEADLINE,
+        1.234,
     )
     assert len(line) <= 2000
     d = json.loads(line)
@@ -37,7 +40,7 @@ def test_compact_line_full_sweep_sized_names():
     # --all mode passes ~370 sorted registry names; the line must still fit
     names = sorted(f"family_operator_variant_{i:03d}" for i in range(370))
     timings = {n: 1.234 for n in names}
-    line = bench._compact_line("total wall-clock", 475.5, timings, 0.1, names)
+    line = bench._compact_line("total wall-clock", 475.5, timings, 0.1, names, 1.234)
     assert len(line) <= 2000
     assert json.loads(line)["detail"].startswith("bench_full.json")
 
@@ -56,6 +59,7 @@ def test_compact_line_guarantees_query_floor_with_realistic_values():
         timings,
         0.1,
         bench.HEADLINE,
+        1.234,
     )
     # the driver window is EXACTLY 2000 chars; line + newline must fit
     # whole, with margin for a stray '\r' in the capture
@@ -71,7 +75,9 @@ def test_compact_line_families_only_when_budget_remains():
     # few queries they fit and appear; with the full headline they must
     # never displace per-query entries below the floor.
     few = {n: 1.234 for n in bench.HEADLINE[:10]}
-    line = bench._compact_line("total wall-clock", 12.3, few, 0.1, bench.HEADLINE)
+    line = bench._compact_line(
+        "total wall-clock", 12.3, few, 0.1, bench.HEADLINE, 1.234
+    )
     d = json.loads(line)
     fams = d["families"]
     assert abs(sum(fams.values()) - sum(few.values())) < 0.5
@@ -86,8 +92,42 @@ def test_compact_line_families_only_when_budget_remains():
             full,
             0.1,
             bench.HEADLINE,
+            1.234,
         )
     )
     assert len(d2["queries"]) >= bench._QUERY_FLOOR
     if "families" in d2:  # only legal when the floor was already met
         assert len(d2["queries"]) >= bench._QUERY_FLOOR
+
+
+def test_compact_line_carries_the_calibration_probe():
+    # VERDICT r11 #1: every bench artifact carries a fixed-work probe
+    # reading, so box drift can be told apart from code changes; it must
+    # not push per-query entries below the floor of the captured tail
+    timings = {n: 0.17 + (i % 37) * 0.13 for i, n in enumerate(bench.HEADLINE)}
+    line = bench._compact_line(
+        "sum over %d headline queries of the per-query median (3 runs, "
+        "heavy families 2), one warm session, full-materialization timing"
+        % len(timings),
+        sum(timings.values()),
+        timings,
+        0.1,
+        bench.HEADLINE,
+        12.345,
+    )
+    assert len(line) <= bench._TAIL_BUDGET
+    d = json.loads(line)
+    assert d["probe_sec"] == 12.345
+    assert len(d["queries"]) >= bench._QUERY_FLOOR
+
+
+def test_force_evaluates_every_output_column(spark):
+    # the timed region must pay for every column a query returns: a bare
+    # count() prunes an unused projection, the hash-force cannot
+    from pyspark.sql import functions as F
+
+    df = spark.range(3).withColumn("boom", F.raise_error(F.lit("forced column")))
+    assert df.count() == 3
+    with pytest.raises(Exception, match="forced column"):
+        bench.force(df)
+    assert bench.force(spark.range(5)) == 5

@@ -86,3 +86,59 @@ def test_row_number_only_inside_topk():
             ):
                 offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     assert not offenders, "\n".join(offenders)
+
+
+def _is_hash_force(node: ast.AST) -> bool:
+    """``xxhash64(struct(*cols))``: the row hash that makes every column
+    of a timed frame load-bearing."""
+    if not (isinstance(node, ast.Call) and _called(node) == "xxhash64"):
+        return False
+    return any(
+        isinstance(arg, ast.Call)
+        and _called(arg) == "struct"
+        and any(isinstance(a, ast.Starred) for a in arg.args)
+        for arg in node.args
+    )
+
+
+def _is_udf_warm_up(node: ast.AST) -> bool:
+    """An identity ``pandas_udf``: the function that starts the Python
+    workers before anything is timed."""
+    if not isinstance(node, ast.FunctionDef) or len(node.args.args) != 1:
+        return False
+    decorated = any(
+        _called(d) == "pandas_udf" for d in node.decorator_list if isinstance(d, ast.Call)
+    )
+    body = node.body
+    return (
+        decorated
+        and len(body) == 1
+        and isinstance(body[0], ast.Return)
+        and isinstance(body[0].value, ast.Name)
+        and body[0].value.id == node.args.args[0].arg
+    )
+
+
+def _called(call: ast.Call) -> str | None:
+    func = call.func
+    return func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+
+
+def test_measurement_helpers_only_in_bench():
+    """The session warm-up and the hash-force live in ``bench.py``
+    (``start_session`` and ``force``); every other timing tool imports
+    them, so their copies cannot drift apart again. perfbench keeps its
+    own, because the benchmark is versioned apart from the program."""
+    root = PKG.parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] in ("perfbench", ".git") or rel == Path("bench.py"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if _is_hash_force(node) or _is_udf_warm_up(node):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)
+    bench = ast.parse((root / "bench.py").read_text())
+    assert sum(map(_is_hash_force, ast.walk(bench))) == 1
+    assert sum(map(_is_udf_warm_up, ast.walk(bench))) == 1

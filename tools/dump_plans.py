@@ -1,19 +1,42 @@
 #!/usr/bin/env python
-"""Write PLANS.md: the formatted physical plans of the flagship queries
-with the scale property each one is expected to exhibit — the human-
-readable companion to tests/test_plans.py's machine assertions.
+"""Capture physical plans.
 
-Usage: python tools/dump_plans.py [--sf-dir DIR]
+Usage:
+  python tools/dump_plans.py [--sf-dir DIR]
+      Write PLANS.md: the formatted physical plans of the flagship
+      queries with the scale property each one is expected to exhibit —
+      the human-readable companion to tests/test_plans.py's machine
+      assertions.
+  python tools/dump_plans.py --tag T --out DIR [--sf-dir DIR] NAME...
+      Write DIR/NAME_T.txt: each named registry query's
+      ``.explain("formatted")``, the before/after plan evidence of an
+      optimization.
+  python tools/dump_plans.py --tag T --out DIR [--sf-dir DIR] --refresh
+      Write DIR/refresh_base_T.txt and DIR/refresh_compound_T.txt: what
+      one segment refresh runs, for one base rule and one compound
+      (dependency-rewritten) rule — the number of Spark jobs and the
+      plan of every SQL execution it issued. Each rule is refreshed once
+      before the captured run, so the captured run is a warm refresh.
+      Plans are the final (adaptive) ones Spark recorded for each
+      execution, in ``spark.sql.ui.explainMode`` (formatted by default).
+
+``--sf-dir`` defaults to the sf0.01 fixtures. In every file written,
+the fixture directory reads ``<sf-dir>`` and the refresh's temporary
+catalog directory reads ``<catalog>``.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+import argparse
 import os
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+AMT = {"field": "transaction_amount", "operator": ">", "value": "120"}
+TIER = {"field": "city_tier", "operator": "=", "value": "1"}
 
 SHOWCASE = [
     (
@@ -250,14 +273,23 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
-    from audience_manager_platform_spark import registry
-    from audience_manager_platform_spark.session import get_spark
+def _explain(df, mode: str) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
-    sf_dir = "/root/testdata/sf0.01"
-    if "--sf-dir" in sys.argv:
-        sf_dir = sys.argv[sys.argv.index("--sf-dir") + 1]
-    spark = get_spark("plans")
+
+def _write(path: str, text: str, placeholders: dict[str, str]) -> None:
+    """Write ``text`` to ``path`` with every key of ``placeholders`` (a
+    machine path) replaced by its value."""
+    for real, placeholder in placeholders.items():
+        text = text.replace(real, placeholder)
+    with open(path, "w") as fh:
+        fh.write(text)
+    print(f"wrote {path}", file=sys.stderr)
+
+
+def plans_md(spark, sf_dir: str) -> str:
+    from audience_manager_platform_spark import registry
+
     queries = registry.queries()
     out = [
         "# PLANS — flagship physical plans (sf0.01, static/adaptive pre-run)",
@@ -267,15 +299,108 @@ def main() -> None:
         "",
     ]
     for name, note in SHOWCASE:
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("simple")
-        out += [f"## {name}", "", note, "", "```", buf.getvalue().strip(), "```", ""]
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+        plan = _explain(queries[name](spark, sf_dir), "simple").strip()
+        out += [f"## {name}", "", note, "", "```", plan, "```", ""]
+    return "\n".join(out)
+
+
+def capture_refresh(spark, engine, rule_id: int) -> str:
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = {e.executionId() for e in _executions(store)}
+    group = f"refresh-{rule_id}"
+    sc.setJobGroup(group, "captured refresh")
+    rows = engine.execute_rule(rule_id)
+    sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    new = [e for e in _executions(store) if e.executionId() not in seen]
+    out = [
+        f"rule {rule_id}: {rows} rows, {len(jobs)} Spark jobs, "
+        f"{len(new)} SQL executions",
+        "",
+    ]
+    for e in sorted(new, key=lambda e: e.executionId()):
+        out += [
+            f"== SQL execution {e.executionId()}: {e.description()} ==",
+            e.physicalPlanDescription(),
+            "",
+        ]
+    return "\n".join(out)
+
+
+def _executions(store) -> list:
+    it = store.executionsList().iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def dump_refresh(spark, sf_dir: str, out_dir: str, tag: str, placeholders) -> None:
+    from audience_manager_platform_spark.catalog import Catalog
+    from audience_manager_platform_spark.engine import AudienceEngine
+    from audience_manager_platform_spark.sources import (
+        load_table,
+        unified_transactions_from_events,
+    )
+
+    with tempfile.TemporaryDirectory() as work:
+        engine = AudienceEngine(
+            spark,
+            Catalog(work),
+            lambda: unified_transactions_from_events(load_table(spark, sf_dir, "events")),
+        )
+        base = engine.create_rule("amt", [AMT])
+        engine.create_rule("tier", [TIER])
+        compound = engine.create_rule("amt_and_tier", [AMT, TIER])
+        engine.execute_all()
+        catalog = {os.path.realpath(work): "<catalog>", work: "<catalog>"}
+        for kind, rule in (("base", base), ("compound", compound)):
+            _write(
+                os.path.join(out_dir, f"refresh_{kind}_{tag}.txt"),
+                capture_refresh(spark, engine, rule.rule_id),
+                {**catalog, **placeholders},
+            )
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Write PLANS.md, or capture plans with --tag/--out."
+    )
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+    ap.add_argument("--tag", help="suffix of the captured files' names")
+    ap.add_argument("--out", help="directory of the captured files")
+    ap.add_argument(
+        "--refresh",
+        action="store_true",
+        help="capture one base and one compound segment refresh",
+    )
+    ap.add_argument("names", nargs="*", help="registry queries to capture")
+    args = ap.parse_args()
+    capturing = bool(args.names or args.refresh)
+    if not capturing == bool(args.tag) == bool(args.out):
+        ap.error("--tag and --out go together, with NAME... or --refresh")
+
+    from audience_manager_platform_spark import registry
+    from audience_manager_platform_spark.session import get_spark
+
+    spark = get_spark("plans")
+    placeholders = {os.path.abspath(args.sf_dir): "<sf-dir>"}
+    if not capturing:
+        _write(os.path.join(ROOT, "PLANS.md"), plans_md(spark, args.sf_dir), placeholders)
+    else:
+        os.makedirs(args.out, exist_ok=True)
+        queries = registry.queries()
+        for name in args.names:
+            _write(
+                os.path.join(args.out, f"{name}_{args.tag}.txt"),
+                _explain(queries[name](spark, args.sf_dir), "formatted"),
+                placeholders,
+            )
+        if args.refresh:
+            dump_refresh(spark, args.sf_dir, args.out, args.tag, placeholders)
+    spark.stop()
 
 
 if __name__ == "__main__":

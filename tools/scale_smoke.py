@@ -23,7 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from audience_manager_platform_spark.operators import analytics as A  # noqa: E402
 from audience_manager_platform_spark.plans import RuleCompiler  # noqa: E402
-from audience_manager_platform_spark.session import get_spark  # noqa: E402
+from bench import force, shutdown, start_session  # noqa: E402
 
 ROWS = int(os.environ.get("SCALE_ROWS", 10_000_000))
 USERS = max(1000, ROWS // 1000)
@@ -51,13 +51,9 @@ def synthetic_stream(spark, n: int):
 
 
 def timed(label: str, df) -> None:
-    """Force FULL materialization of every output column. A bare
-    ``count()`` lets Catalyst prune unused projections — including
-    whole window operators (an attribution op whose credit column is
-    never consumed times as a purchase count) and even left joins
-    against aggregated (distinct-keyed) sides. Hashing the complete row
-    struct into the aggregate makes every column load-bearing, so the
-    number measures the operator, not its pruned skeleton.
+    """Force FULL materialization of every output column
+    (:func:`bench.force`), so the number measures the operator, not a
+    pruned skeleton of it.
 
     ``SCALE_ONLY`` (comma-separated, case-insensitive substrings) skips
     every non-matching label — so individual ops can be pushed to
@@ -73,12 +69,7 @@ def timed(label: str, df) -> None:
         # thunk form: operators with EAGER stages (materialize() builds)
         # must construct inside the timer or the build escapes the number
         df = df()
-    row = (
-        df.select(F.xxhash64(F.struct(*df.columns)).alias("_h"))
-        .agg(F.count("*").alias("n"), F.expr("bit_xor(_h)"))
-        .collect()[0]
-    )
-    n = row["n"]
+    n = force(df)
     dt = time.perf_counter() - t0
     print(
         f"{label:36s} {n:>12,} out-rows  {dt:7.2f}s  "
@@ -88,7 +79,7 @@ def timed(label: str, df) -> None:
 
 def main() -> None:
     global ROWS
-    spark = get_spark("scale_smoke")
+    spark = start_session("scale_smoke")
     txns = synthetic_stream(spark, ROWS)
     print(f"rows={ROWS:,} users={USERS:,} cores={spark.sparkContext.defaultParallelism}")
 
@@ -1130,8 +1121,7 @@ def main() -> None:
 
     only = os.environ.get("SCALE_ONLY")
     if only and "nsw" not in only.lower() and "hier" not in only.lower():
-        spark.stop()
-        return
+        shutdown(spark)
     n_vecs = int(os.environ.get("SCALE_VECS", 100_000))
     graph_cells = int(os.environ.get("SCALE_GRAPH_CELLS", 512))
     vec = F.array(
@@ -1276,11 +1266,7 @@ def main() -> None:
             f"flat assign over same {len(flat_model)} cells [hier]",
             SIM.assign_cells_arrow(hbase, flat_model),
         )
-    spark.stop()
-
-
-
-
+    shutdown(spark)
 
 
 if __name__ == "__main__":
