@@ -8,9 +8,9 @@ Usage: python bench.py                     # HEADLINE, 3 runs (2 for HEAVY)
        python bench.py --all [--repeat N]    # every registry query
 
 Each sample runs under its own job group; stderr gets its rows, seconds,
-plan-construction seconds and per-job lines. The session start, the
-hash-force and the shutdown below are the only copies in the repo; other
-tools import them.
+plan-construction seconds and per-job lines. Outside perfbench/, the
+session start, the hash-force and the shutdown below are the only copies;
+other tools import them.
 
 Baseline context (BASELINE.md): the reference runs each rule as a cold
 spark-submit subprocess at ~10-12 s per rule over 5k rows. This engine
