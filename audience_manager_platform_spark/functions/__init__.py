@@ -7,7 +7,7 @@ the reference leaves unspecified (SURVEY.md §4.3 quirks) in one place.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,6 +41,35 @@ def stable_long_hash(col: Column, salt: str = "") -> Column:
 # ``{x}`` is the already-salted string expression.
 HASH60_SPARK_SQL = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 HASH60_DUCK_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
+
+
+# The experiment policy: every A/B, uplift and drift readout rounds
+# money to integer cents, splits the data at its midpoint day and
+# assigns users to arms by hash, and does each in exactly one place.
+def cents(col: str = "value") -> Column:
+    """``col`` rounded half-up to integer cents, as BIGINT (NULL stays
+    NULL). The DuckDB twins spell the same expression inline."""
+    return F.expr(f"CAST(floor({col} * 100 + 0.5) AS BIGINT)")
+
+
+def with_midpoint(frame: DataFrame, day: str = "d") -> DataFrame:
+    """``frame`` plus a ``mid`` column: the day halfway between the
+    frame's first and last ``day`` (integer days, rounded down). The
+    first period is ``day <= mid``, the second ``day > mid``. One 1-row
+    aggregate, broadcast to every row; ``mid`` is NULL on an empty
+    frame."""
+    bounds = frame.agg(F.min(day).alias("lo"), F.max(day).alias("hi")).select(
+        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
+            "mid"
+        )
+    )
+    return frame.crossJoin(F.broadcast(bounds))
+
+
+def user_arm(salt: str, k: int = 2) -> Column:
+    """A user's experiment arm: the salted :func:`stable_long_hash` of
+    ``user_id`` modulo ``k``, replayable from the salt alone."""
+    return stable_long_hash(F.col("user_id").cast("string"), salt=salt) % k
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents, user_arm, with_midpoint
+
 
 def filter_transactions(
     txns: DataFrame,
@@ -1564,7 +1566,6 @@ def decayed_popularity(events: DataFrame, horizon_weeks: int = 20) -> DataFrame:
     Shape: one combinable |types|-row aggregate after a 1-row max-day
     broadcast; nothing corpus-sized shuffles."""
     bounds = events.agg(F.max(F.to_date("ts")).alias("_maxday"))
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     age_w = F.expr("least(datediff(_maxday, to_date(ts)) div 7, "
                    f"{horizon_weeks})")
     prod = F.expr(
@@ -1574,7 +1575,7 @@ def decayed_popularity(events: DataFrame, horizon_weeks: int = 20) -> DataFrame:
     den = float(100 * (1 << horizon_weeks))
     return (
         events.crossJoin(F.broadcast(bounds))
-        .withColumn("_cents", cents)
+        .withColumn("_cents", cents())
         .withColumn("_age_w", age_w)
         .withColumn("_prod", prod)
         .groupBy("event_type")
@@ -1749,9 +1750,7 @@ def pareto_coverage(events: DataFrame) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).alias(
-                "cents"
-            )
+            F.sum(cents()).alias("cents")
         )
     )
     tot = per_user.agg(F.sum("cents").alias("tot"))
@@ -1961,7 +1960,6 @@ def exposure_uplift(
     engine-identical pymod FLOOR form (Spark ``div`` truncates toward
     zero, DuckDB ``//`` floors)."""
     cut = F.lit(cutoff).cast("timestamp")
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     per_user = (
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
@@ -1979,14 +1977,14 @@ def exposure_uplift(
                 F.when(
                     (F.col("event_type") == "purchase")
                     & (F.col("ts") < cut),
-                    cents,
+                    cents(),
                 ).otherwise(F.lit(0))
             ).alias("pre_cents"),
             F.sum(
                 F.when(
                     (F.col("event_type") == "purchase")
                     & (F.col("ts") >= cut),
-                    cents,
+                    cents(),
                 ).otherwise(F.lit(0))
             ).alias("post_cents"),
         )
@@ -2482,11 +2480,8 @@ def ab_srm_check(
     users = events.select("user_id").filter(
         F.col("user_id").isNotNull()
     ).distinct()
-    from ..functions import stable_long_hash
-
-    arm = stable_long_hash(F.col("user_id").cast("string"), salt=salt) % 2
     return (
-        users.select(arm.alias("arm"))
+        users.select(user_arm(salt).alias("arm"))
         .agg(
             F.sum((F.col("arm") == 0).cast("long")).alias("n_a"),
             F.sum((F.col("arm") == 1).cast("long")).alias("n_b"),
@@ -2741,7 +2736,6 @@ def delta_attribution(events: DataFrame) -> DataFrame:
     join of two |types|-row slices."""
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     # materialized: |types| x |days| rows feeding THREE consumers —
     # without the boundary Catalyst re-expands the raw-stream aggregate
     # into each (10 scans -> 1; round-7 plan review)
@@ -2751,7 +2745,7 @@ def delta_attribution(events: DataFrame) -> DataFrame:
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
             "event_type",
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     daily = td.groupBy("day").agg(F.sum("cents").alias("tot"))
     wd = Window.orderBy("day")
@@ -2879,18 +2873,10 @@ def mix_rate_decomposition(events: DataFrame) -> DataFrame:
     product (< 1e6 x ~1e9 = 1e15, safely in range) and the three
     effects plus residual reconcile to the total by construction of
     the interaction term. Two period aggregates + a |types| join."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     base = events.filter(F.col("value").isNotNull()).select(
-        "event_type", cents.alias("cents"), F.to_date("ts").alias("d")
+        "event_type", cents().alias("cents"), F.to_date("ts").alias("d")
     )
-    bounds = base.agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    ).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    tagged = base.crossJoin(F.broadcast(bounds)).withColumn(
+    tagged = with_midpoint(base).withColumn(
         "period", F.expr("CASE WHEN d <= mid THEN 1 ELSE 2 END")
     )
     from .partitioning import materialize
@@ -3014,25 +3000,15 @@ def diff_in_diff(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
     so the estimate is a bigint difference both engines reproduce
     bit-for-bit. Empty cells CASE-guard to NULL (never an ANSI
     divide-by-zero)."""
-    from ..functions import stable_long_hash
-
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     base = events.filter(
         F.col("value").isNotNull() & F.col("user_id").isNotNull()
     ).select(
-        (
-            stable_long_hash(F.col("user_id").cast("string"), salt=salt) % 2
-        ).alias("arm"),
-        cents.alias("cents"),
+        user_arm(salt).alias("arm"),
+        cents().alias("cents"),
         F.to_date("ts").alias("d"),
     )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per = (
-        base.crossJoin(F.broadcast(bounds))
+        with_midpoint(base)
         .withColumn("period", F.expr("CASE WHEN d <= mid THEN 1 ELSE 2 END"))
         .groupBy("arm", "period")
         .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
@@ -3141,6 +3117,67 @@ def diff_in_diff_sql(src: str = "events", salt: str = "ab-v1") -> str:
     """
 
 
+# ------------------------------------------------ shared experiment steps
+def _user_periods(
+    events: DataFrame,
+    salt: str = "ab-v1",
+    k: int = 2,
+    drop_null_values: bool = False,
+) -> DataFrame:
+    """(user_id, arm, pre, post), one row per user: spend in integer
+    cents on or before the midpoint day (``pre``) and after it
+    (``post``). ``arm`` is the user's :func:`~..functions.user_arm` over
+    ``k`` arms. ``events`` needs only ``user_id``, ``value`` and ``ts``.
+
+    Rows without a user are dropped. A NULL value counts as 0 cents;
+    with ``drop_null_values`` its row is dropped instead, before the
+    midpoint is taken. One combinable per-user reduce after the 1-row
+    midpoint broadcast."""
+    keep = F.col("user_id").isNotNull()
+    value = cents()
+    if drop_null_values:
+        keep = F.col("value").isNotNull() & keep
+    else:
+        value = F.coalesce(value, F.lit(0))
+    rows = events.filter(keep).select(
+        "user_id", value.alias("cents"), F.to_date("ts").alias("d")
+    )
+    return (
+        with_midpoint(rows)
+        .groupBy("user_id")
+        .agg(
+            F.sum(F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")).alias(
+                "pre"
+            ),
+            F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias(
+                "post"
+            ),
+        )
+        .select("user_id", user_arm(salt, k).alias("arm"), "pre", "post")
+    )
+
+
+def _arm_moments(per_user: DataFrame) -> DataFrame:
+    """(arm, n_a, s_a, q_a): users, Σpost (BIGINT) and Σpost² per arm.
+    Σpost² is an exact DECIMAL(38,0): post² alone can pass 2^63."""
+    return per_user.groupBy("arm").agg(
+        F.count("*").alias("n_a"),
+        F.sum("post").alias("s_a"),
+        F.sum(
+            F.expr("CAST(post AS DECIMAL(19,0)) * CAST(post AS DECIMAL(19,0))")
+        ).alias("q_a"),
+    )
+
+
+def _arm_stats(side: str):
+    """(n, mean, var) as doubles for the ``side`` alias of an arm-pair
+    join over :func:`_arm_moments`; var is NULL when n <= 1."""
+    n = F.col(f"{side}.n_a").cast("double")
+    s = F.col(f"{side}.s_a").cast("double")
+    q = F.col(f"{side}.q_a").cast("double")
+    return n, s / n, F.when(n > 1, (q - s * s / n) / (n - 1))
+
+
 # ------------------------------------------------- CUPED variance reduction
 def cuped_adjustment(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
     """CUPED (Controlled-experiment Using Pre-Experiment Data, Deng et
@@ -3161,38 +3198,11 @@ def cuped_adjustment(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
     Var(pre) = 0 degenerates to theta = 0 (raw means), never a
     divide-by-zero. Two reduces over the materialized per-user table +
     1-row broadcasts; output is 2 arm rows."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(
-        F.col("value").isNotNull() & F.col("user_id").isNotNull()
-    ).select(
-        "user_id", cents.alias("cents"), F.to_date("ts").alias("d")
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per_user = materialize(
-        base.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")).alias(
-                "x"
-            ),
-            F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias(
-                "y"
-            ),
-        )
-        .select(
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % 2
-            ).alias("arm"),
-            "x",
-            "y",
+        _user_periods(events, salt, drop_null_values=True).select(
+            "arm", F.col("pre").alias("x"), F.col("post").alias("y")
         )
     )
     means = per_user.agg(
@@ -3419,32 +3429,27 @@ def qini_uplift_deciles(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
     (first ``n mod 10`` tiles take ``n div 10 + 1`` rows), never an
     unpartitioned |users|-row ntile window. One per-user reduce + the
     sharded rank + a 10-row rollup."""
-    from ..functions import stable_long_hash
     from .partitioning import (
         exact_ntile_expr,
         global_row_positions,
         materialize,
     )
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
+    # its own per-user reduce: the purchase flag reads event_type, which
+    # _user_periods does not require of its callers
+    rows = events.filter(F.col("user_id").isNotNull()).select(
         "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
+        F.coalesce(cents(), F.lit(0)).alias("cents"),
         F.to_date("ts").alias("d"),
         "event_type",
     )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per_user = materialize(
-        base.crossJoin(F.broadcast(bounds))
+        with_midpoint(rows)
         .groupBy("user_id")
         .agg(
-            F.sum(
-                F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")
-            ).alias("score"),
+            F.sum(F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")).alias(
+                "score"
+            ),
             F.max(
                 F.expr(
                     "CASE WHEN d > mid AND event_type = 'purchase'"
@@ -3452,15 +3457,7 @@ def qini_uplift_deciles(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
                 )
             ).alias("converted"),
         )
-        .select(
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % 2
-            ).alias("arm"),
-            "user_id",
-            "score",
-            "converted",
-        )
+        .select(user_arm(salt).alias("arm"), "user_id", "score", "converted")
     )
     n1 = per_user.agg(F.count("*").alias("_n"))
     deciled = (
@@ -3599,12 +3596,7 @@ def _modal_pre_feature(events: DataFrame):
     base = events.filter(F.col("user_id").isNotNull()).select(
         "user_id", F.to_date("ts").alias("d"), "event_type"
     )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    tagged = materialize(base.crossJoin(F.broadcast(bounds)))
+    tagged = materialize(with_midpoint(base))
     pre = (
         tagged.filter(F.col("d") <= F.col("mid"))
         .groupBy("user_id", "event_type")
@@ -3799,35 +3791,10 @@ def ab_smd_balance(events: DataFrame, salt: str = "ab-v1") -> DataFrame:
     DECIMAL(38,0) (bigint overflows at the 100M smoke scale; DuckDB side
     rides HUGEINT); the final SMD is a double built from the identical
     exact-integer operands and rounded 6dp."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per_user = materialize(
-        base.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")).alias(
-                "x"
-            )
-        )
-        .select(
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % 2
-            ).alias("arm"),
-            "x",
-        )
+        _user_periods(events, salt).select("arm", F.col("pre").alias("x"))
     )
     arm = per_user.groupBy("arm").agg(
         F.count("*").alias("n"),
@@ -3968,42 +3935,10 @@ def anova_oneway_arms(
     built from the identical exact operands on both engines (HUGEINT on
     DuckDB); F = (SSB/(k−1))/(SSW/(n−k)), 6dp, NULL-guarded when SSW=0
     or dof ≤ 0. Output: one row per arm (n, mean micro) + the shared F."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    per_user = materialize(
-        base.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias(
-                "y"
-            )
-        )
-        .select(
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % k_arms
-            ).alias("arm"),
-            "y",
-        )
-    )
-    arm = per_user.groupBy("arm").agg(
-        F.count("*").alias("n_a"),
-        F.sum("y").alias("s_a"),
-        F.sum(
-            F.expr("CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))")
-        ).alias("q_a"),
+    arm = _arm_moments(
+        materialize(_user_periods(events, salt, k_arms).select("arm", "post"))
     )
     tot = arm.agg(
         F.sum("n_a").alias("n"),
@@ -4115,34 +4050,11 @@ def kruskal_wallis_arms(
     exact halves, so ranks ride doubles losslessly. H = 12/(n(n+1)) ·
     Σ R_a²/n_a − 3(n+1), tie-corrected by C = 1 − Σ(c³−c)/(n³−n); all
     sums exact integers/decimals until the final divisions, 6dp."""
-    from ..functions import stable_long_hash
     from .partitioning import global_row_positions, materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per_user = materialize(
-        base.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias(
-                "y"
-            )
-        )
-        .select(
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % k_arms
-            ).alias("arm"),
-            "y",
+        _user_periods(events, salt, k_arms).select(
+            "arm", F.col("post").alias("y")
         )
     )
     vals = per_user.groupBy("y").agg(F.count("*").alias("c"))
@@ -4294,51 +4206,14 @@ def welch_pairwise_arms(
     zero or an arm has n <= 1. The pair join is |arms|² — model-sized
     at any data scale; everything data-sized is one combinable
     per-user reduce."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    per_user = base.crossJoin(F.broadcast(bounds)).groupBy("user_id").agg(
-        F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias("y")
-    ).select(
-        (
-            stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-            % k_arms
-        ).alias("arm"),
-        "y",
-    )
-    arm = materialize(
-        per_user.groupBy("arm").agg(
-            F.count("*").alias("n_a"),
-            F.sum("y").alias("s_a"),
-            F.sum(
-                F.expr("CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))")
-            ).alias("q_a"),
-        )
-    )
-
-    def _stats(side: str):
-        n = F.col(f"{side}.n_a").cast("double")
-        s = F.col(f"{side}.s_a").cast("double")
-        q = F.col(f"{side}.q_a").cast("double")
-        mean = s / n
-        var = F.when(n > 1, (q - s * s / n) / (n - 1))
-        return n, mean, var
+    arm = materialize(_arm_moments(_user_periods(events, salt, k_arms)))
 
     x, y = arm.alias("x"), arm.alias("y")
     pairs = x.join(y, F.col("x.arm") < F.col("y.arm"))
-    n1, m1, v1 = _stats("x")
-    n2, m2, v2 = _stats("y")
+    n1, m1, v1 = _arm_stats("x")
+    n2, m2, v2 = _arm_stats("y")
     se2 = v1 / n1 + v2 / n2
     t = F.when(se2 > 0, F.round((m1 - m2) / F.sqrt(se2), 6))
     dof_den = (v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (
@@ -4451,40 +4326,15 @@ def stratified_ate(
     date midpoint — the leak-free qini/CUPED discipline), then a
     |bands|-row aggregate.  Nothing data-sized is joined, windowed, or
     summed in doubles (means come from bigint sums via exact ``div``)."""
-    from ..functions import stable_long_hash
-
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
     per_user = (
-        base.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.expr("CASE WHEN d <= mid THEN cents ELSE 0 END")).alias(
-                "pre"
-            ),
-            F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias(
-                "y"
-            ),
-        )
+        _user_periods(events, salt, 100)
         .select(
-            "y",
+            F.col("post").alias("y"),
             F.expr(
                 "CASE WHEN pre = 0 THEN 0 WHEN pre < 10000 THEN 1 "
                 "WHEN pre < 30000 THEN 2 ELSE 3 END"
             ).alias("band"),
-            (
-                stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-                % 100
-            ).alias("h"),
+            F.col("arm").alias("h"),
         )
         .select(
             "band",
@@ -4600,49 +4450,14 @@ def mde_power_arms(
     Reuses the Welch arm reduce (exact bigint Σy / DECIMAL Σy²);
     everything after the per-user reduce is |arms|²-row model-scale.
     ``mde_rel_pct`` scales by the LOWER arm's mean (NULL-guarded)."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    per_user = base.crossJoin(F.broadcast(bounds)).groupBy("user_id").agg(
-        F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias("y")
-    ).select(
-        (
-            stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-            % k_arms
-        ).alias("arm"),
-        "y",
-    )
-    arm = materialize(
-        per_user.groupBy("arm").agg(
-            F.count("*").alias("n_a"),
-            F.sum("y").alias("s_a"),
-            F.sum(
-                F.expr("CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))")
-            ).alias("q_a"),
-        )
-    )
-
-    def _stats(side: str):
-        n = F.col(f"{side}.n_a").cast("double")
-        s = F.col(f"{side}.s_a").cast("double")
-        q = F.col(f"{side}.q_a").cast("double")
-        return n, s / n, F.when(n > 1, (q - s * s / n) / (n - 1))
+    arm = materialize(_arm_moments(_user_periods(events, salt, k_arms)))
 
     x, y = arm.alias("x"), arm.alias("y")
     pairs = x.join(y, F.col("x.arm") < F.col("y.arm"))
-    n1, m1, v1 = _stats("x")
-    n2, m2, v2 = _stats("y")
+    n1, m1, v1 = _arm_stats("x")
+    n2, m2, v2 = _arm_stats("y")
     se2 = v1 / n1 + v2 / n2
     se = F.when(se2 > 0, F.sqrt(se2))
     mde = se * F.lit(MDE_Z_ALPHA + MDE_Z_POWER)
@@ -4865,20 +4680,7 @@ def poisson_bootstrap_ci(
     micro-cent means, and the replicate count used."""
     from ..functions import stable_long_hash
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    per_user = base.crossJoin(F.broadcast(bounds)).groupBy("user_id").agg(
-        F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias("y")
-    )
+    per_user = _user_periods(events).select("user_id", F.col("post").alias("y"))
     rep = (
         per_user.select(
             "user_id",
@@ -5039,10 +4841,9 @@ def winsorized_mean(
     vs seconds materialized."""
     from .partitioning import global_row_positions, materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     per_user = (
         events.filter(F.col("user_id").isNotNull())
-        .select("user_id", F.coalesce(cents, F.lit(0)).alias("c"))
+        .select("user_id", F.coalesce(cents(), F.lit(0)).alias("c"))
         .groupBy("user_id")
         .agg(F.sum("c").alias("y"))
     )
@@ -5169,55 +4970,20 @@ def msprt_always_valid(
     engines, and Λ is reported in log form too so huge evidence stays
     finite.  Everything past the per-user reduce is |arms|²-row
     model-scale."""
-    from ..functions import stable_long_hash
     from .partitioning import materialize
 
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-    base = events.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.coalesce(cents, F.lit(0)).alias("cents"),
-        F.to_date("ts").alias("d"),
-    )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    per_user = base.crossJoin(F.broadcast(bounds)).groupBy("user_id").agg(
-        F.sum(F.expr("CASE WHEN d > mid THEN cents ELSE 0 END")).alias("y")
-    ).select(
-        (
-            stable_long_hash(F.col("user_id").cast("string"), salt=salt)
-            % k_arms
-        ).alias("arm"),
-        "y",
-    )
-    arm = materialize(
-        per_user.groupBy("arm").agg(
-            F.count("*").alias("n_a"),
-            F.sum("y").alias("s_a"),
-            F.sum(
-                F.expr("CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))")
-            ).alias("q_a"),
-        )
-    )
+    arm = materialize(_arm_moments(_user_periods(events, salt, k_arms)))
     tau2 = float(MSPRT_TAU2)
     x, y = arm.alias("x"), arm.alias("y")
+    n1, m1, v1 = _arm_stats("x")
+    n2, m2, v2 = _arm_stats("y")
     pairs = x.join(y, F.col("x.arm") < F.col("y.arm")).select(
         F.col("x.arm").cast("long").alias("arm_a"),
         F.col("y.arm").cast("long").alias("arm_b"),
         F.col("x.n_a").cast("long").alias("n_a"),
         F.col("y.n_a").cast("long").alias("n_b"),
-        F.expr(
-            "CAST(x.s_a AS DOUBLE) / x.n_a - CAST(y.s_a AS DOUBLE) / y.n_a"
-        ).alias("theta"),
-        F.expr(
-            "CASE WHEN x.n_a > 1 AND y.n_a > 1 THEN "
-            "((CAST(x.q_a AS DOUBLE) - CAST(x.s_a AS DOUBLE) "
-            "* CAST(x.s_a AS DOUBLE) / x.n_a) / (x.n_a - 1)) / x.n_a + "
-            "((CAST(y.q_a AS DOUBLE) - CAST(y.s_a AS DOUBLE) "
-            "* CAST(y.s_a AS DOUBLE) / y.n_a) / (y.n_a - 1)) / y.n_a END"
-        ).alias("v"),
+        (m1 - m2).alias("theta"),
+        (v1 / n1 + v2 / n2).alias("v"),
     )
     log_lam = (
         f"0.5 * ln(v / (v + {tau2!r})) + "

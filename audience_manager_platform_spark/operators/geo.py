@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from .maintenance import zorder_key, zorder_key_sql
 
 GEO_P = 2_147_483_647
@@ -94,12 +95,11 @@ def geo_neighbor_smoothing(events: DataFrame) -> DataFrame:
     simply have smaller neighborhoods (n_nbrs counts actual
     contributors). Exact arithmetic: cents in, neighborhood mean on the
     1e-6 grid via bigint division, verdict by integer compare."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     lat = F.expr(_cell_sql("user_id", GEO_A1, GEO_B1, GEO_LAT_CELLS))
     lon = F.expr(_cell_sql("user_id", GEO_A2, GEO_B2, GEO_LON_CELLS))
     cells = (
         events.filter(F.col("value").isNotNull())
-        .select(lat.alias("lat_cell"), lon.alias("lon_cell"), cents.alias("c"))
+        .select(lat.alias("lat_cell"), lon.alias("lon_cell"), cents().alias("c"))
         .groupBy("lat_cell", "lon_cell")
         .agg(F.sum("c").alias("cents"))
     )

@@ -15,6 +15,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents
+
 
 def pivot_counts(
     df: DataFrame, row_key, pivot_col: str, values: Sequence[str]
@@ -565,9 +567,7 @@ def pit_feature_leakage(events: DataFrame) -> DataFrame:
             "user_id", F.to_date("ts").alias("feature_day")
         )
         .agg(
-            F.sum(
-                F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-            ).alias("day_cents")
+            F.sum(cents()).alias("day_cents")
         )
         .select(
             "user_id",
@@ -1085,11 +1085,7 @@ def kendall_tau_brand_ranks(
         )
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
-            F.sum(
-                F.expr(
-                    "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                )
-            ).alias("rev_cents"),
+            F.sum(cents("l_extendedprice")).alias("rev_cents"),
             F.countDistinct("l_orderkey").alias("n_orders"),
         )
     )
@@ -1202,7 +1198,7 @@ def bucketized_range_join(
         ).alias("bucket"),
     )
     facts = events.filter(F.col("value").isNotNull()).select(
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents")
+        cents().alias("cents")
     ).withColumn("bucket", F.expr(f"cents div {grid_cents}"))
     joined = facts.join(cover, "bucket").filter(
         (F.col("cents") >= F.col("lo")) & (F.col("cents") < F.col("hi"))
@@ -1279,9 +1275,7 @@ def null_aware_anti_join(
     )
     tagged = orders.select(
         (F.col("o_custkey") % 25).alias("probe_key"),
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
-            "cents"
-        ),
+        cents("o_totalprice").alias("cents"),
     )
     # Both semantics expressed via SQL on temp views — the honest way
     # to get a genuine null-aware anti join plan out of Catalyst (the

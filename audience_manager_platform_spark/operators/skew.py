@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents, with_midpoint
 from .partitioning import local_table
 
 
@@ -588,10 +589,9 @@ def quantile_histogram(
     model-sized table. NULL and non-positive values are excluded (a log
     sketch is defined on positives).
     """
-    cents = F.expr(f"CAST(floor({value_col} * 100 + 0.5) AS BIGINT)")
     base_rel = (
         df.filter(F.col(value_col).isNotNull())
-        .select(cents.alias("cents"))
+        .select(cents(value_col).alias("cents"))
         .filter(F.col("cents") > 0)
     )
     bucketed = base_rel.select(
@@ -1002,11 +1002,10 @@ def salted_agg_by_plan(
     plan = salt_plan(df, key, target_rows).select(
         F.col("key").alias("_k"), "salt_factor"
     )
-    cents = F.expr(f"CAST(floor({value_col} * 100 + 0.5) AS BIGINT)")
     staged = (
         df.select(
             F.col(key).alias("_k"),
-            cents.alias("_cents"),
+            cents(value_col).alias("_cents"),
             F.col(row_key).alias("_rk"),
         )
         .join(F.broadcast(plan), "_k", "left")
@@ -1104,12 +1103,7 @@ def cms_heavy_change(
     base = df.select(
         F.col(key).alias("_k"), F.to_date(date_col).alias("d")
     )
-    bounds = base.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
-        F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
-            "mid"
-        )
-    )
-    tagged = base.crossJoin(F.broadcast(bounds)).select(
+    tagged = with_midpoint(base).select(
         "_k", F.expr("CASE WHEN d <= mid THEN 1 ELSE 2 END").alias("period")
     )
     counters = (

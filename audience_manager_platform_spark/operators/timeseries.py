@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents
+
 
 def _daily_obs(events: DataFrame) -> DataFrame:
     """One observation per (user_id, day): the value of the LAST event
@@ -854,9 +856,7 @@ def holt_linear_backtest(events: DataFrame) -> DataFrame:
             "event_type", F.to_date("ts").alias("day")
         )
         .agg(
-            F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).alias(
-                "cents"
-            )
+            F.sum(cents()).alias("cents")
         )
         .select("event_type", "day", F.col("cents").cast("double").alias("y"))
     )
@@ -1105,9 +1105,7 @@ def ewma_anomaly(events: DataFrame) -> DataFrame:
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         )
         .agg(
-            F.sum(
-                F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-            ).alias("cents")
+            F.sum(cents()).alias("cents")
         )
     )
     w = W.partitionBy("event_type").orderBy("day")
@@ -1209,11 +1207,10 @@ def seasonal_decompose(events: DataFrame) -> DataFrame:
     (the single-partition window is the documented monitor pattern).
     Micro-grid ceiling: cents/day must stay under ~9.2e12 (92 G$/day)
     for the 1e6 scale — far past any real tenant; pre-scale if not."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     w7 = Window.orderBy("d").rowsBetween(-3, 3)
     trended = daily.select(
@@ -1327,14 +1324,13 @@ def conformal_interval_backtest(
     everything after rides the |types| x |days| daily table (lag +
     row_number inside tiny type partitions, |types|-row percentile and
     rollup). The raw stream is touched exactly once."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     w = Window.partitionBy("event_type").orderBy("day")
     scored = (
@@ -1468,14 +1464,13 @@ def cusum_alarm(
     the closed form S_i - min(S_0..S_i) — associative-scan friendly,
     NOT a per-row loop). One raw-stream aggregate, day-table windows.
     """
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     return cusum_from_daily(daily, k_ppm, h_ppm, baseline_days)
 
@@ -1636,14 +1631,13 @@ def max_drawdown(events: DataFrame) -> DataFrame:
     day table (one window pass), argmax by (drawdown desc, day asc)
     for a deterministic trough day. The raw stream contributes ONE
     aggregate."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     wcum = (
         Window.partitionBy("event_type")
@@ -1720,14 +1714,13 @@ def theilsen_trend(events: DataFrame) -> DataFrame:
     AGGREGATED day table (30 days -> 435 pairs), never the raw stream;
     the raw stream contributes ONE aggregate. For multi-year series,
     window the pairs (classic Theil-Sen windowing) — documented swap."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
             F.to_date("ts").alias("d"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
         .withColumn(
             "dn", F.expr("datediff(d, DATE '1970-01-01')").cast("long")
         )
@@ -1913,11 +1906,10 @@ def mann_kendall_trend(events: DataFrame) -> DataFrame:
     pairwise stage is |days|²/2 per series on the AGGREGATED day table
     (the theilsen bound — never the raw stream); classification uses
     the two-sided 5% z literal."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy("event_type", F.to_date("ts").alias("d"))
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
         .withColumn(
             "dn", F.expr("datediff(d, DATE '1970-01-01')").cast("long")
         )

@@ -34,6 +34,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents, with_midpoint
 from .partitioning import local_table
 
 
@@ -811,9 +812,7 @@ def psi_buckets(
         df.filter(F.col(value_col).isNotNull())
         .select(
             *keep,
-            F.expr(f"CAST(floor({value_col} * 100 + 0.5) AS BIGINT)").alias(
-                "cents"
-            ),
+            cents(value_col).alias("cents"),
         )
         .filter(F.col("cents") > 0)
         .select(*keep, "cents", F.length(F.expr("bin(cents)")).alias("blen"))
@@ -846,16 +845,9 @@ def psi_value_drift(events: "DataFrame", value_col: str = "value") -> "DataFrame
     Shape: two combinable histogram aggregates (one per half) full-outer
     joined on the |buckets|-row grid — nothing data-sized after the
     scans."""
-    bounds = events.agg(
-        F.min(F.to_date("ts")).alias("_lo"), F.max(F.to_date("ts")).alias("_hi")
-    )
     staged = psi_buckets(
-        events.crossJoin(F.broadcast(bounds)).select(
-            F.expr(
-                "CASE WHEN to_date(ts) <= date_add(_lo,"
-                " CAST(datediff(_hi, _lo) div 2 AS INT)) THEN 'old'"
-                " ELSE 'new' END"
-            ).alias("side"),
+        with_midpoint(events.withColumn("d", F.to_date("ts"))).select(
+            F.expr("CASE WHEN d <= mid THEN 'old' ELSE 'new' END").alias("side"),
             F.col(value_col),
         ),
         value_col,
@@ -988,21 +980,12 @@ def ks_value_drift(events: "DataFrame", value_col: str = "value") -> "DataFrame"
     drift question is the same; the ECDF just steps coarser)."""
     from pyspark.sql import Window
 
-    bounds = events.agg(
-        F.min(F.to_date("ts")).alias("_lo"), F.max(F.to_date("ts")).alias("_hi")
-    )
     staged = (
-        events.crossJoin(F.broadcast(bounds))
+        with_midpoint(events.withColumn("d", F.to_date("ts")))
         .filter(F.col(value_col).isNotNull())
         .select(
-            F.expr(
-                "CASE WHEN to_date(ts) <= date_add(_lo,"
-                " CAST(datediff(_hi, _lo) div 2 AS INT)) THEN 'old'"
-                " ELSE 'new' END"
-            ).alias("side"),
-            F.expr(f"CAST(floor({value_col} * 100 + 0.5) AS BIGINT)").alias(
-                "cents"
-            ),
+            F.expr("CASE WHEN d <= mid THEN 'old' ELSE 'new' END").alias("side"),
+            cents(value_col).alias("cents"),
         )
     )
     per_val = staged.groupBy("cents").agg(
@@ -1308,19 +1291,12 @@ def mix_drift(events: "DataFrame", cat_col: str = "event_type") -> "DataFrame":
 
     Shape: one combinable (category) aggregate + a 1-row totals
     broadcast — state is the category set."""
-    bounds = events.agg(
-        F.min(F.to_date("ts")).alias("_lo"), F.max(F.to_date("ts")).alias("_hi")
-    )
     hist = (
-        events.crossJoin(F.broadcast(bounds))
+        with_midpoint(events.withColumn("d", F.to_date("ts")))
         .filter(F.col(cat_col).isNotNull())
         .select(
             F.col(cat_col).alias("category"),
-            F.expr(
-                "CASE WHEN to_date(ts) <= date_add(_lo,"
-                " CAST(datediff(_hi, _lo) div 2 AS INT)) THEN 1"
-                " ELSE 0 END"
-            ).alias("is_old"),
+            F.expr("CASE WHEN d <= mid THEN 1 ELSE 0 END").alias("is_old"),
         )
         .groupBy("category")
         .agg(
@@ -1926,9 +1902,8 @@ def target_encode_loo(
     event_id % ``sample_mod`` == 0 audit slice — the encode itself is a
     per-row projection against two broadcast tables (|classes| rows and
     1 row), zero extra shuffles at any scale."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     rows = events.filter(F.col("value").isNotNull()).select(
-        "event_id", "event_type", cents.alias("cents")
+        "event_id", "event_type", cents().alias("cents")
     )
     per_class = rows.groupBy("event_type").agg(
         F.count("*").alias("n_class"), F.sum("cents").alias("sum_class")
@@ -2088,14 +2063,13 @@ def duplicate_charge_audit(
     |suspects| table IS the case queue). Shape at scale: one shuffle
     on (user_id, cents) — the narrowest key that makes the lag
     meaningful — then a filter."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     m = F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
     p = events.filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select(
         "user_id",
         "event_id",
-        cents.alias("cents"),
+        cents().alias("cents"),
         m.alias("_m"),
     )
     w = Window.partitionBy("user_id", "cents").orderBy("_m", "event_id")
@@ -2177,7 +2151,7 @@ def order_balance_audit(
     )
     hdr = orders.select(
         "o_orderkey",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
+        cents("o_totalprice").alias(
             "header_cents"
         ),
     )
@@ -2561,10 +2535,9 @@ def benford_price_audit(df: "DataFrame", value_col: str) -> "DataFrame":
     BM25/Zipf cross-engine ln discipline — with one 6dp rounding at the
     edge. One map-side-combinable GROUP BY digit (9 groups), one 1-row
     totals broadcast: nothing data-sized crosses a window at any scale."""
-    cents = F.expr(f"CAST(floor({value_col} * 100 + 0.5) AS BIGINT)")
     digits = (
         df.filter(F.col(value_col).isNotNull())
-        .select(cents.alias("cents"))
+        .select(cents(value_col).alias("cents"))
         .filter(F.col("cents") > 0)
         .select(
             F.substring(F.col("cents").cast("string"), 1, 1)

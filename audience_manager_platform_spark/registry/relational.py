@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dot
+from ..functions import cents, dot
 from ..operators.analytics import windowed_funnel
 from ..operators.relational import (
     asof_join,
@@ -565,10 +565,7 @@ QUERIES = {
     .groupBy("c_mktsegment")
     .agg(
         F.count("*").alias("n_events"),
-        (
-            F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-            / F.lit(100.0)
-        ).alias("total_value"),
+        (F.sum(cents()) / F.lit(100.0)).alias("total_value"),
     )
     .orderBy("c_mktsegment"),
     # r5 wave 12: mergeable log-bucket quantile sketch (DDSketch-style)

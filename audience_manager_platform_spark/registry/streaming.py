@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from ..sources import load_table
 from ..streaming.jobs import (
     sprt_monitor_stream,
@@ -70,24 +71,7 @@ def _stateful_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_events(spark, sf_dir).select("user_id", "value")
     monitored = running_spend_monitor(events, threshold=1000.0)
     name = f"stream_stateful_{next(_counter)}"
-    # Each shuffle partition of a stateful query spins up its own state
-    # store; at fixture scale (~1.5k users) 8 partitions cuts cold-start
-    # several-fold vs 32+ with no semantic change. Production would size
-    # this to the cluster. Restore the session value afterwards.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            monitored.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_available_now(monitored, name, "update")
     # update-mode sink appends one row per user per batch; the final state
     # per user is the max-count row (robust to multi-batch splits)
     return (
@@ -144,7 +128,7 @@ def _quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = (
         batch.filter(F.col("value").isNotNull())
         .select(
-            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents")
+            cents().alias("cents")
         )
         .filter(F.col("cents") > 0)
     )

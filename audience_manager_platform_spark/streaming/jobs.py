@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import cents
+
+
 def _event_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -111,37 +114,42 @@ def windowed_event_counts(
     )
 
 
+# Shuffle partitions for a stateful streaming query: each one opens its
+# own state store, so the per-trigger fixed cost follows this count.
+STATE_PARTITIONS = 8
+
+
 def run_available_now(
-    result: DataFrame, query_name: str, timeout_sec: int = 300
+    result: DataFrame,
+    query_name: str,
+    output_mode: str = "complete",
+    timeout_sec: int = 300,
 ) -> None:
     """Drive a streaming plan over everything currently available and stop
     (micro-batch replay of the backlog) — results land in the in-memory
-    table ``query_name``.
+    table ``query_name``, written in ``output_mode``.
 
-    State-store sizing (r11, guide §2/§5): every shuffle partition of a
+    State-store sizing: every shuffle partition of a
     stateful streaming query opens its OWN state store — provider init,
     per-trigger commit, snapshot bookkeeping — so the per-trigger fixed
     cost scales with the partition count, not the state size. The gates
     here maintain hundreds-to-thousands of keys, where 32+ stores cost
     several times the actual fold (measured on the windowed-counts gate:
     5.96 s cold / 1.69 s warm at 32 partitions vs 1.26 / 0.93 s at 8 —
-    identical 150-row result). ``spark.amp.streaming.statePartitions``
-    (default 8, the r8 ``_stateful_spend`` precedent) sizes the stores
-    for the state actually kept; a production deployment sets it to its
-    key volume / cluster, exactly like ``spark.sql.shuffle.partitions``
-    itself. Per-group values are unchanged: hash partitioning keeps each
-    group in one store, and the map-side partial aggregation (whose
-    grouping follows the SOURCE partitioning, untouched here) is where
-    float sums are formed."""
+    identical 150-row result). The query runs with at most
+    :data:`STATE_PARTITIONS` shuffle partitions, and the session value
+    is restored afterwards. Per-group values are unchanged: hash
+    partitioning keeps each group in one store, and the map-side partial
+    aggregation (whose grouping follows the SOURCE partitioning,
+    untouched here) is where float sums are formed."""
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    parts = spark.conf.get("spark.amp.streaming.statePartitions", "8")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(parts), int(prev)))
+        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
     )
     try:
         q = (
-            result.writeStream.outputMode("complete")
+            result.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(query_name)
             .trigger(availableNow=True)
@@ -576,10 +584,9 @@ def quantile_sketch_stream(events: DataFrame) -> DataFrame:
     serving layer prices p50/p90/p99 off the settled table at read time
     (:func:`..operators.skew.quantile_from_histogram`), the same
     rank-at-read split as the trending top-k."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     base = (
         events.filter(F.col("value").isNotNull())
-        .select(cents.alias("cents"))
+        .select(cents().alias("cents"))
         .filter(F.col("cents") > 0)
     )
     return (
@@ -817,14 +824,13 @@ def daily_cents_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     equals the one-shot daily table for ANY ingest chunking (the
     checksum-fold contract). This is the ADDITIVE half of the streaming
     CUSUM monitor; the sequential half lives in the serving read."""
-    cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         batch.filter(F.col("value").isNotNull())
         .groupBy(
             "event_type",
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(cents()).alias("cents"))
     )
     if state is None:
         return daily

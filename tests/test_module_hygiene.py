@@ -10,6 +10,7 @@ the collision is impossible to reintroduce.
 """
 
 import ast
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "audience_manager_platform_spark"
@@ -142,3 +143,81 @@ def test_measurement_helpers_only_in_bench():
     bench = ast.parse((root / "bench.py").read_text())
     assert sum(map(_is_hash_force, ast.walk(bench))) == 1
     assert sum(map(_is_udf_warm_up, ast.walk(bench))) == 1
+
+
+_CENTS = re.compile(r"CAST\(floor\(\{?\w+\}? \* 100 \+ 0\.5\) AS BIGINT\)")
+_MIDPOINT = ("datediff(hi, lo) div 2", "datediff(_hi, _lo) div 2")
+
+
+def _literal(node: ast.AST) -> str | None:
+    """A string constant, or an f-string with each field shown as ``{x}``."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{x}" for v in node.values
+        )
+    return None
+
+
+def _enclosing_functions(tree: ast.AST):
+    """``lineno -> name`` of the innermost function holding that line."""
+    spans = sorted(
+        (n.lineno, n.end_lineno, n.name)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef)
+    )
+
+    def at(lineno: int) -> str | None:
+        inner = [name for lo, hi, name in spans if lo <= lineno <= hi]
+        return inner[-1] if inner else None
+
+    return at
+
+
+def test_experiment_policy_only_in_helpers():
+    """The experiment policy behind the A/B, uplift and drift readouts
+    has one home each: cents rounding (``functions.cents``), the
+    midpoint-day split (``functions.with_midpoint``), the user arm
+    (``functions.user_arm``), the per-arm moments
+    (``analytics._arm_moments``) and the arm-pair statistics
+    (``analytics._arm_stats``). A second copy anywhere in the package is
+    a policy that can drift apart. The DuckDB twins' SQL strings spell
+    the policy in DuckDB's own syntax and are not matched."""
+    found = {k: [] for k in ("cents", "midpoint", "arm", "moments", "stats")}
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(PKG.parent)
+        at = _enclosing_functions(tree)
+
+        def hit(kind: str, node: ast.AST) -> None:
+            found[kind].append((f"{rel}:{node.lineno}", at(node.lineno)))
+
+        for node in ast.walk(tree):
+            text = _literal(node)
+            if text and any(m in text for m in _MIDPOINT):
+                hit("midpoint", node)
+            if text == "{x}.q_a":
+                hit("stats", node)
+            if not isinstance(node, ast.Call):
+                continue
+            arg = _literal(node.args[0]) if node.args else None
+            if _called(node) == "expr" and arg and _CENTS.fullmatch(arg.strip()):
+                hit("cents", node)
+            if (
+                _called(node) == "stable_long_hash"
+                and node.args
+                and ast.unparse(node.args[0]).startswith("F.col('user_id')")
+            ):
+                hit("arm", node)
+            if _called(node) == "alias" and arg == "q_a":
+                hit("moments", node)
+    homes = {
+        "cents": "cents",
+        "midpoint": "with_midpoint",
+        "arm": "user_arm",
+        "moments": "_arm_moments",
+        "stats": "_arm_stats",
+    }
+    for kind, home in homes.items():
+        assert [fn for _, fn in found[kind]] == [home], (kind, found[kind])

@@ -21,8 +21,10 @@ Usage:
       execution, in ``spark.sql.ui.explainMode`` (formatted by default).
 
 ``--sf-dir`` defaults to the sf0.01 fixtures. In every file written,
-the fixture directory reads ``<sf-dir>`` and the refresh's temporary
-catalog directory reads ``<catalog>``.
+the fixture directory reads ``<sf-dir>``, the session's warehouse
+directory ``<warehouse>``, the refresh's temporary catalog directory
+``<catalog>`` and the shuffle partition count ``<shuffle-partitions>``,
+so a capture does not depend on the box it ran on.
 """
 
 from __future__ import annotations
@@ -277,11 +279,40 @@ def _explain(df, mode: str) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+def _mask_shuffle_partitions(text: str, n: str) -> str:
+    """``text`` with the partition count ``n`` of every hash, range or
+    round-robin partitioning replaced by ``<shuffle-partitions>``: the
+    count follows the session's ``spark.sql.shuffle.partitions``, which
+    follows the box's cores."""
+    out, i = [], 0
+    lowered = text.lower()
+    while (j := lowered.find("partitioning(", i)) != -1:
+        start = j + len("partitioning(")
+        depth, k = 1, start
+        while depth and k < len(text):
+            depth += {"(": 1, ")": -1}.get(text[k], 0)
+            k += 1
+        if depth:
+            break
+        inner = text[start : k - 1]
+        head, sep, last = inner.rpartition(",")
+        if last.strip() == n:
+            inner = f"{head}, <shuffle-partitions>" if sep else "<shuffle-partitions>"
+        out.append(text[i:start] + inner + ")")
+        i = k
+    return "".join(out) + text[i:]
+
+
 def _write(path: str, text: str, placeholders: dict[str, str]) -> None:
     """Write ``text`` to ``path`` with every key of ``placeholders`` (a
-    machine path) replaced by its value."""
+    machine path) replaced by its value, and the shuffle partition
+    count masked (:func:`_mask_shuffle_partitions`)."""
+    from pyspark.sql import SparkSession
+
     for real, placeholder in placeholders.items():
         text = text.replace(real, placeholder)
+    n = SparkSession.active().conf.get("spark.sql.shuffle.partitions")
+    text = _mask_shuffle_partitions(text, n)
     with open(path, "w") as fh:
         fh.write(text)
     print(f"wrote {path}", file=sys.stderr)
@@ -386,7 +417,8 @@ def main() -> None:
     from audience_manager_platform_spark.session import get_spark
 
     spark = get_spark("plans")
-    placeholders = {os.path.abspath(args.sf_dir): "<sf-dir>"}
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    placeholders = {os.path.abspath(args.sf_dir): "<sf-dir>", warehouse: "<warehouse>"}
     if not capturing:
         _write(os.path.join(ROOT, "PLANS.md"), plans_md(spark, args.sf_dir), placeholders)
     else:
