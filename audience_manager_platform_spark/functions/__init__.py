@@ -52,13 +52,13 @@ def cents(col: str = "value") -> Column:
     return F.expr(f"CAST(floor({col} * 100 + 0.5) AS BIGINT)")
 
 
-def with_midpoint(frame: DataFrame, day: str = "d") -> DataFrame:
+def with_midpoint(frame: DataFrame) -> DataFrame:
     """``frame`` plus a ``mid`` column: the day halfway between the
-    frame's first and last ``day`` (integer days, rounded down). The
-    first period is ``day <= mid``, the second ``day > mid``. One 1-row
+    frame's first and last day ``d`` (integer days, rounded down). The
+    first period is ``d <= mid``, the second ``d > mid``. One 1-row
     aggregate, broadcast to every row; ``mid`` is NULL on an empty
     frame."""
-    bounds = frame.agg(F.min(day).alias("lo"), F.max(day).alias("hi")).select(
+    bounds = frame.agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
         F.expr("date_add(lo, CAST(datediff(hi, lo) div 2 AS INT))").alias(
             "mid"
         )

@@ -760,12 +760,11 @@ def quantile_rollup(
     EXACT quantile (audit side, from raw — dropped at 100 TB), and the
     integer-exact ``within_bound`` verdict (|est16 − exact·16| <= base,
     the <= 1/16 relative-error contract)."""
-    cents_expr = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
     base_day = (
         events.filter(F.col("value").isNotNull())
         .select(
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-            F.expr(cents_expr).alias("cents"),
+            cents().alias("cents"),
         )
         .filter(F.col("cents") > 0)
     )

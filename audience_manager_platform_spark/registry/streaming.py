@@ -127,9 +127,7 @@ def _quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = _lt(spark, sf_dir, "events")
     audit = (
         batch.filter(F.col("value").isNotNull())
-        .select(
-            cents().alias("cents")
-        )
+        .select(cents().alias("cents"))
         .filter(F.col("cents") > 0)
     )
     return quantile_from_histogram(spark.table(name), audit)

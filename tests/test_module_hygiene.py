@@ -182,8 +182,10 @@ def test_experiment_policy_only_in_helpers():
     (``functions.user_arm``), the per-arm moments
     (``analytics._arm_moments``) and the arm-pair statistics
     (``analytics._arm_stats``). A second copy anywhere in the package is
-    a policy that can drift apart. The DuckDB twins' SQL strings spell
-    the policy in DuckDB's own syntax and are not matched."""
+    a policy that can drift apart. A cents string counts wherever it
+    sits, in an ``F.expr`` call or held in a variable first. The DuckDB
+    twins (``*_sql``) spell the policy in DuckDB's own syntax and are
+    not matched."""
     found = {k: [] for k in ("cents", "midpoint", "arm", "moments", "stats")}
     for path in sorted(PKG.rglob("*.py")):
         tree = ast.parse(path.read_text())
@@ -197,13 +199,17 @@ def test_experiment_policy_only_in_helpers():
             text = _literal(node)
             if text and any(m in text for m in _MIDPOINT):
                 hit("midpoint", node)
+            if (
+                text
+                and _CENTS.fullmatch(text.strip())
+                and not (at(node.lineno) or "").endswith("_sql")
+            ):
+                hit("cents", node)
             if text == "{x}.q_a":
                 hit("stats", node)
             if not isinstance(node, ast.Call):
                 continue
             arg = _literal(node.args[0]) if node.args else None
-            if _called(node) == "expr" and arg and _CENTS.fullmatch(arg.strip()):
-                hit("cents", node)
             if (
                 _called(node) == "stable_long_hash"
                 and node.args
