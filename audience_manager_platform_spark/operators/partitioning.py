@@ -191,40 +191,6 @@ def tracked_tempdir(prefix: str) -> str:
     return path
 
 
-def chunked_landing(df: DataFrame, id_col: str, work: str, n: int = 3) -> str:
-    """Write ``df`` as ``n`` deterministic landing files (``id_col % n``)
-    under ``work/land`` in ONE pass — the replay harness the streaming
-    maintenance gates use. The former per-chunk
-    ``filter(...).coalesce(1).write`` loop scanned the source n times
-    (n jobs); one ``partitionBy`` write over a chunk-keyed repartition
-    lands the identical chunk SETS in a single job (r10 optimization).
-    Row order within a chunk follows the shuffle and is NOT pinned —
-    every consumer fold is a commutative monoid / set-semantics stage,
-    which is exactly the property those gates exist to prove.
-
-    Returns the landing directory (files named ``00.parquet`` ..), so
-    ``maxFilesPerTrigger=1`` replays chunks in id order."""
-    import glob
-    import os
-    import shutil
-
-    land = os.path.join(work, "land")
-    os.makedirs(land, exist_ok=True)
-    chunks = os.path.join(work, "chunks")
-    (
-        df.withColumn("_chunk", F.col(id_col) % n)
-        .repartition(n, "_chunk")
-        .write.partitionBy("_chunk")
-        .mode("overwrite")
-        .parquet(chunks)
-    )
-    for i in range(n):
-        part = glob.glob(os.path.join(chunks, f"_chunk={i}", "*.parquet"))
-        assert len(part) == 1, part  # one task per chunk value
-        shutil.copy(part[0], os.path.join(land, f"{i:02d}.parquet"))
-    return land
-
-
 def _sweep_materialized() -> None:
     import os
     import shutil

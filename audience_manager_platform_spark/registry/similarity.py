@@ -160,26 +160,20 @@ def _ivf_ingest_streaming(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from ..operators.partitioning import chunked_landing, tracked_tempdir
-    from ..streaming.jobs import ivf_ingest_stream
+    from functools import partial
 
-    emb = _emb(spark, sf_dir)
+    from ..operators.partitioning import tracked_tempdir
+    from ..streaming.jobs import chunked_replay, fold_stream, ivf_ingest_fold
+
     model = _kmeans_model(spark, sf_dir, iters=1)
     work = tracked_tempdir("amps_ivf_ingest_")
-    land = chunked_landing(emb, "vec_id", work)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = ivf_ingest_stream(
-        stream,
-        model,
+    fold_stream(
+        chunked_replay(_emb(spark, sf_dir), "vec_id", work),
+        partial(ivf_ingest_fold, model=model),
         os.path.join(work, "lists"),
         os.path.join(work, "ckpt"),
+        append=True,
     )
-    q.awaitTermination(400)
-    q.stop()
     lists = spark.read.parquet(os.path.join(work, "lists"))
     return lists.groupBy("cent_id").agg(
         F.count("*").alias("n_vecs"),

@@ -10,7 +10,7 @@ shape batch/streaming) with a gaps-and-islands SQL oracle.
 
 from __future__ import annotations
 
-import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 from ..functions import cents
 from ..sources import load_table
 from ..streaming.jobs import (
-    sprt_monitor_stream,
-    checksum_maintenance_stream,
-    cusum_maintenance_stream,
-    growth_ledger_stream,
+    checksum_fold,
+    chunked_replay,
+    daily_cents_fold,
     enriched_segment_counts,
+    fold_stream,
     late_arrival_audit,
     late_arrival_audit_sql,
     mix_histogram_stream,
@@ -31,7 +31,9 @@ from ..streaming.jobs import (
     quantile_sketch_stream,
     run_available_now,
     sessionize,
+    sprt_counts_fold,
     stream_events,
+    userweek_fold,
     windowed_event_counts,
 )
 from ..operators.skew import quantile_histogram_sql
@@ -40,26 +42,20 @@ from ..operators.analytics import growth_accounting_sql
 from ..operators.analytics import sprt_monitor_sql
 from ..operators.timeseries import cusum_alarm_sql
 from ..operators.validation import mix_drift_sql, psi_value_drift_sql
+from ..operators.partitioning import tracked_tempdir
 from ..streaming.stateful import running_spend_monitor
-
-_counter = itertools.count()
 
 
 def _window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_events(spark, sf_dir)
     result = windowed_event_counts(events, window="1 day", watermark="1 hour")
-    name = f"stream_window_counts_{next(_counter)}"
-    run_available_now(result, name)
-    return spark.table(name)
+    return run_available_now(result)
 
 
 def _static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_events(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer")
-    result = enriched_segment_counts(events, dim)
-    name = f"stream_static_join_{next(_counter)}"
-    run_available_now(result, name)
-    return spark.table(name)
+    return run_available_now(enriched_segment_counts(events, dim))
 
 
 def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,12 +66,10 @@ def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stateful_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_events(spark, sf_dir).select("user_id", "value")
     monitored = running_spend_monitor(events, threshold=1000.0)
-    name = f"stream_stateful_{next(_counter)}"
-    run_available_now(monitored, name, "update")
     # update-mode sink appends one row per user per batch; the final state
     # per user is the max-count row (robust to multi-batch splits)
     return (
-        spark.table(name)
+        run_available_now(monitored, "update")
         .groupBy("user_id")
         .agg(
             F.max("event_count").alias("event_count"),
@@ -83,8 +77,6 @@ def _stateful_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("crossed_threshold").alias("crossed_threshold"),
         )
     )
-
-
 
 
 def _trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,15 +89,14 @@ def _trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     events = stream_events(spark, sf_dir)
-    result = windowed_event_counts(events, window="1 day", watermark="1 hour")
-    name = f"stream_trending_{next(_counter)}"
-    run_available_now(result, name)
+    settled = run_available_now(
+        windowed_event_counts(events, window="1 day", watermark="1 hour")
+    )
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
     return (
-        spark.table(name)
-        .withColumn("rank", F.row_number().over(w))
+        settled.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("window_start", "rank", "event_type", "n_events")
     )
@@ -118,19 +109,25 @@ def _quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE-SHOT batch sketch SQL — the streaming fold equals batch because
     the bucket counts are combinable."""
     from ..operators.skew import quantile_from_histogram
-    from ..sources import load_table as _lt
 
-    events = stream_events(spark, sf_dir)
-    hist = quantile_sketch_stream(events)
-    name = f"stream_qsketch_{next(_counter)}"
-    run_available_now(hist, name)
-    batch = _lt(spark, sf_dir, "events")
+    hist = run_available_now(quantile_sketch_stream(stream_events(spark, sf_dir)))
+    batch = load_table(spark, sf_dir, "events")
     audit = (
         batch.filter(F.col("value").isNotNull())
         .select(cents().alias("cents"))
         .filter(F.col("cents") > 0)
     )
-    return quantile_from_histogram(spark.table(name), audit)
+    return quantile_from_histogram(hist, audit)
+
+
+def _split_day(batch: DataFrame) -> str:
+    """The drift monitors' fixed baseline cut: the middle day of the
+    events' date span. Days up to it form the baseline, later days the
+    live side."""
+    from datetime import timedelta
+
+    lo, hi = batch.agg(F.min(F.to_date("ts")), F.max(F.to_date("ts"))).collect()[0]
+    return str(lo + timedelta(days=(hi - lo).days // 2))
 
 
 def _psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,27 +138,16 @@ def _psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prices PSI through the SHARED ``psi_report`` arithmetic. Oracle
     = the one-shot batch ``psi_value_drift`` SQL — streamed counts equal
     batch counts because the histogram is combinable."""
-    from datetime import timedelta
-
     from ..operators.validation import psi_buckets, psi_report
 
     batch = load_table(spark, sf_dir, "events")
-    lo, hi = (
-        batch.agg(
-            F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-        ).collect()[0]
-    )
-    split = lo + timedelta(days=(hi - lo).days // 2)
+    split = _split_day(batch)
     ref = (
-        psi_buckets(batch.filter(F.to_date("ts") <= F.lit(str(split))), "value")
+        psi_buckets(batch.filter(F.to_date("ts") <= F.lit(split)), "value")
         .groupBy("blen", "sub")
         .agg(F.count("*").alias("old_n"))
     )
-    name = f"stream_psi_{next(_counter)}"
-    run_available_now(
-        psi_histogram_stream(stream_events(spark, sf_dir), str(split)), name
-    )
-    live = spark.table(name)
+    live = run_available_now(psi_histogram_stream(stream_events(spark, sf_dir), split))
     hist = (
         ref.join(live, ["blen", "sub"], "full_outer")
         .select(
@@ -180,29 +166,19 @@ def _mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     side; the serving read prices chi-square through the SHARED
     ``mix_report`` arithmetic. Oracle = the one-shot batch mix_drift
     SQL (combinable counts => stream == batch)."""
-    from datetime import timedelta
-
     from ..operators.validation import mix_report
 
     batch = load_table(spark, sf_dir, "events")
-    lo, hi = (
-        batch.agg(
-            F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-        ).collect()[0]
-    )
-    split = lo + timedelta(days=(hi - lo).days // 2)
+    split = _split_day(batch)
     ref = (
-        batch.filter(F.to_date("ts") <= F.lit(str(split)))
+        batch.filter(F.to_date("ts") <= F.lit(split))
         .filter(F.col("event_type").isNotNull())
         .groupBy(F.col("event_type").alias("category"))
         .agg(F.count("*").alias("old_n"))
     )
-    name = f"stream_mix_{next(_counter)}"
-    run_available_now(
-        mix_histogram_stream(stream_events(spark, sf_dir), str(split)), name
-    )
+    live = run_available_now(mix_histogram_stream(stream_events(spark, sf_dir), split))
     hist = (
-        ref.join(spark.table(name), ["category"], "full_outer")
+        ref.join(live, ["category"], "full_outer")
         .select(
             "category",
             F.coalesce(F.col("old_n"), F.lit(0)).alias("old_n"),
@@ -212,32 +188,23 @@ def _mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mix_report(hist)
 
 
+def _settled_state(stream: DataFrame, fold, work: str) -> DataFrame:
+    """Drive ``fold`` over ``stream`` to completion (whole-state
+    overwrite) under the scratch dir ``work``; return the settled state."""
+    state = os.path.join(work, "state")
+    fold_stream(stream, fold, state, os.path.join(work, "ckpt"), append=False)
+    return stream.sparkSession.read.parquet(state)
+
+
 def _checksum_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL 3-chunk replay of the events fixture through the
     foreachBatch checksum fold; the settled state table must equal the
     ONE-SHOT batch checksum table exactly (counts add, checksums xor —
     both monoids), which is also the oracle. This is the ingestion-time
     migration-verify: any replica chunking yields the same table."""
-    import os
-
-    from ..operators.partitioning import chunked_landing, tracked_tempdir
-
-    events = load_table(spark, sf_dir, "events")
     work = tracked_tempdir("amps_cksum_gate_")
-    land = chunked_landing(events, "event_id", work)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = checksum_maintenance_stream(
-        stream,
-        os.path.join(work, "state"),
-        os.path.join(work, "ckpt"),
-    )
-    q.awaitTermination(400)
-    q.stop()
-    return spark.read.parquet(os.path.join(work, "state")).orderBy("day")
+    stream = chunked_replay(load_table(spark, sf_dir, "events"), "event_id", work)
+    return _settled_state(stream, checksum_fold, work).orderBy("day")
 
 
 def _cusum_maintenance(spark, sf_dir):
@@ -245,73 +212,41 @@ def _cusum_maintenance(spark, sf_dir):
     the sequential CUSUM derivation as the serving read. Oracle = the
     one-shot batch cusum_alarm SQL — hard evidence that additive
     maintenance + read-time recurrence reproduces batch semantics."""
-    import os
-
-    from ..operators.partitioning import tracked_tempdir
     from ..operators.timeseries import cusum_from_daily
 
     work = tracked_tempdir("amps_cusum_gate_")
-    stream = stream_events(spark, sf_dir)
-    q = cusum_maintenance_stream(
-        stream,
-        os.path.join(work, "state"),
-        os.path.join(work, "ckpt"),
+    return cusum_from_daily(
+        _settled_state(stream_events(spark, sf_dir), daily_cents_fold, work)
     )
-    q.awaitTermination(400)
-    q.stop()
-    daily = spark.read.parquet(os.path.join(work, "state"))
-    return cusum_from_daily(daily)
 
 
 def _sprt_maintenance(spark, sf_dir):
     """Drive the additive per-day (n, k) fold to completion, then apply
     the sequential LLR derivation as the serving read. Oracle = the
     one-shot batch sprt_monitor SQL."""
-    import os
-
     from ..operators.analytics import sprt_from_daily
-    from ..operators.partitioning import tracked_tempdir
 
     work = tracked_tempdir("amps_sprt_gate_")
-    stream = stream_events(spark, sf_dir)
-    q = sprt_monitor_stream(
-        stream,
-        os.path.join(work, "state"),
-        os.path.join(work, "ckpt"),
+    return sprt_from_daily(
+        _settled_state(stream_events(spark, sf_dir), sprt_counts_fold, work)
     )
-    q.awaitTermination(400)
-    q.stop()
-    daily = spark.read.parquet(os.path.join(work, "state"))
-    return sprt_from_daily(daily)
 
 
 def _growth_ledger(spark, sf_dir):
     """Drive the idempotent (user, week) set fold to completion, then
     apply the order-dependent growth classification as the serving
     read. Oracle = the one-shot batch growth_accounting SQL."""
-    import os
-
     from ..operators.analytics import growth_from_userweeks
-    from ..operators.partitioning import tracked_tempdir
 
     work = tracked_tempdir("amps_growth_gate_")
-    q = growth_ledger_stream(
-        stream_events(spark, sf_dir),
-        os.path.join(work, "state"),
-        os.path.join(work, "ckpt"),
+    return growth_from_userweeks(
+        _settled_state(stream_events(spark, sf_dir), userweek_fold, work)
     )
-    q.awaitTermination(400)
-    q.stop()
-    uw = spark.read.parquet(os.path.join(work, "state"))
-    return growth_from_userweeks(uw)
 
 
 def _late_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_events(spark, sf_dir)
-    result = late_arrival_audit(events)
-    name = f"stream_late_arrival_{next(_counter)}"
-    run_available_now(result, name)
-    return spark.table(name)
+    return run_available_now(late_arrival_audit(events))
 
 
 QUERIES = {

@@ -116,26 +116,17 @@ def _lsh_dedup_streaming(spark, sf_dir):
     surfaces in the batch its second member arrives)."""
     import os
 
-    from ..operators.partitioning import chunked_landing, tracked_tempdir
-    from ..streaming.jobs import lsh_dedup_stream
+    from ..operators.partitioning import tracked_tempdir
+    from ..streaming.jobs import chunked_replay, lsh_dedup_stream
 
-    docs = _docs(spark, sf_dir)
     work = tracked_tempdir("amps_lsh_gate_")
-    land = chunked_landing(docs, "doc_id", work)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = lsh_dedup_stream(
-        stream,
+    lsh_dedup_stream(
+        chunked_replay(_docs(spark, sf_dir), "doc_id", work),
         os.path.join(work, "sigs"),
         os.path.join(work, "pairs"),
         os.path.join(work, "ckpt"),
         est_threshold=0.5,
     )
-    q.awaitTermination(400)
-    q.stop()
     return spark.read.parquet(os.path.join(work, "pairs"))
 
 

@@ -231,14 +231,16 @@ def _scd2_incremental(spark, sf_dir):
     log. Checked against the ONE-SHOT SCD2 oracle — the hard evidence
     that the incremental fold reproduces batch semantics exactly."""
     from ..operators.partitioning import tracked_tempdir
-    from ..streaming.jobs import scd2_maintenance_stream, stream_events
+    from ..streaming.jobs import fold_stream, stream_events
 
     work = tracked_tempdir("amps_scd2_gate_")
-    q = scd2_maintenance_stream(
-        stream_events(spark, sf_dir), f"{work}/log", f"{work}/ckpt"
+    fold_stream(
+        stream_events(spark, sf_dir),
+        MG.scd2_merge_batch,
+        f"{work}/log",
+        f"{work}/ckpt",
+        append=True,
     )
-    q.awaitTermination(240)
-    q.stop()
     return MG.scd2_intervals_view(spark.read.parquet(f"{work}/log")).select(
         "user_id", "state", "valid_from", "valid_to", "is_current"
     )

@@ -44,6 +44,11 @@ def get_spark(
     single memory knob: ``SPARK_DRIVER_MEMORY`` when set, else
     :func:`default_driver_memory`. On a cluster the same configs apply
     unchanged — nothing here assumes local execution.
+
+    The console progress bar is off: its carriage-return redraws land on
+    stderr mid-line, so they would share a line with whatever a caller
+    prints there (a tool's per-query result lines, a bench's per-sample
+    records) and corrupt it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -66,6 +71,7 @@ def get_spark(
         # operators add explicit broadcast() hints where the small side is
         # known small at ANY scale (e.g. region: 5 rows).
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.showConsoleProgress", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),

@@ -12,16 +12,23 @@ capability seam onto real Structured Streaming:
 - late data (reference: silently lands in the next refresh)  →  explicit
   watermark: events later than the watermark are dropped, bounded state.
 
-Local testing uses ``trigger(availableNow=True)`` + memory sink so a
-parquet fixture drives the stream to completion synchronously; in
-production the same plans run against a landing directory / Kafka source
-unchanged.
+Local testing uses ``trigger(availableNow=True)`` so a parquet fixture
+drives the stream to completion synchronously; in production the same
+plans run against a landing directory / Kafka source unchanged. Every
+stream is driven by one of two steps here: :func:`run_available_now`
+(memory sink, for streaming aggregates) or the foreachBatch starter
+behind :func:`fold_stream` (parquet state maintained per micro-batch),
+and both wait through one settle step that fails on a stream that did
+not drain.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,16 +125,32 @@ def windowed_event_counts(
 # own state store, so the per-trigger fixed cost follows this count.
 STATE_PARTITIONS = 8
 
+# Longest wait for an availableNow query to drain its backlog.
+SETTLE_TIMEOUT_S = 400
 
-def run_available_now(
-    result: DataFrame,
-    query_name: str,
-    output_mode: str = "complete",
-    timeout_sec: int = 300,
-) -> None:
+# Landing files, hence micro-batches, of a chunked replay.
+REPLAY_CHUNKS = 3
+
+
+def _settle(q: "StreamingQuery") -> None:  # noqa: F821
+    """Wait for an availableNow query to drain its backlog, then stop it.
+    Raises ``TimeoutError`` if the backlog did not drain within
+    :data:`SETTLE_TIMEOUT_S`: what the query has written by then is
+    partial state, which must never be read as settled."""
+    try:
+        drained = q.awaitTermination(SETTLE_TIMEOUT_S)
+    finally:
+        q.stop()
+    if not drained:
+        raise TimeoutError(
+            f"streaming query did not drain its backlog in {SETTLE_TIMEOUT_S} s"
+        )
+
+
+def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drive a streaming plan over everything currently available and stop
-    (micro-batch replay of the backlog) — results land in the in-memory
-    table ``query_name``, written in ``output_mode``.
+    (micro-batch replay of the backlog); returns the settled in-memory
+    table the query wrote in ``output_mode``, under a name of its own.
 
     State-store sizing: every shuffle partition of a
     stateful streaming query opens its OWN state store — provider init,
@@ -143,46 +166,109 @@ def run_available_now(
     aggregation (whose grouping follows the SOURCE partitioning,
     untouched here) is where float sums are formed."""
     spark = result.sparkSession
+    name = f"available_now_{uuid.uuid4().hex}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
     )
     try:
-        q = (
+        _settle(
             result.writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(query_name)
+            .queryName(name)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_sec)
-        q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(name)
 
 
-def segment_refresh_stream(
-    events: DataFrame,
-    engine,
-    rule_id: int,
-    checkpoint_dir: str,
-) -> "StreamingQuery":  # noqa: F821
-    """M4 as streaming: re-materialize a rule's segment on every
-    micro-batch of new events via foreachBatch (exactly-once per batch via
-    the checkpoint). The batch handler reuses the SAME batch engine — one
-    code path for batch and streaming refresh."""
+def _drive(stream: DataFrame, handle, checkpoint_dir: str) -> None:
+    """Call ``handle(batch)`` on every non-empty micro-batch of ``stream``
+    until the backlog is drained; the checkpoint makes each batch's
+    effect exactly-once across restarts."""
 
-    def refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        engine.execute_rule(rule_id)
+    def each(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            handle(batch)
 
-    return (
-        events.writeStream.foreachBatch(refresh)
+    _settle(
+        stream.writeStream.foreachBatch(each)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def fold_stream(
+    stream: DataFrame, fold, state_dir: str, checkpoint_dir: str, append: bool
+) -> None:
+    """Maintain the parquet state table at ``state_dir`` from ``stream``:
+    per micro-batch, ``fold(state, batch)`` gets the committed state (None
+    before the first write) and returns a DataFrame.
+
+    With ``append`` the result is the delta to append to an append-only
+    log; the fold anti-joins against the log, so a replayed batch adds
+    nothing. Without it the result is the whole new state, which replaces
+    the old: it is written to ``state_dir + "_next"`` first (the new state
+    is read from the old one, so the old cannot be overwritten in the
+    same job) and copied back, and a replayed epoch re-folds from the
+    same committed state."""
+
+    def step(batch: DataFrame) -> None:
+        spark = batch.sparkSession
+        out = fold(_read_state_or_none(spark, state_dir), batch)
+        if append:
+            out.write.mode("append").parquet(state_dir)
+            return
+        out.write.mode("overwrite").parquet(state_dir + "_next")
+        spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(
+            state_dir
+        )
+
+    _drive(stream, step, checkpoint_dir)
+
+
+def chunked_replay(df: DataFrame, id_col: str, work: str) -> DataFrame:
+    """``df`` as a stream of :data:`REPLAY_CHUNKS` micro-batches, the
+    replay harness of the streaming maintenance gates. ``df`` is written
+    in ONE pass as deterministic landing files (``id_col % REPLAY_CHUNKS``)
+    under ``work/land``, named ``00.parquet`` .., and read back one file
+    per trigger in chunk order. One ``partitionBy`` write over a
+    chunk-keyed repartition lands the chunk SETS in a single job. Row
+    order within a chunk follows the shuffle and is NOT pinned — every
+    consumer fold is a commutative monoid / set-semantics stage, which
+    is exactly the property those gates exist to prove."""
+    land = os.path.join(work, "land")
+    os.makedirs(land, exist_ok=True)
+    chunks = os.path.join(work, "chunks")
+    (
+        df.withColumn("_chunk", F.col(id_col) % REPLAY_CHUNKS)
+        .repartition(REPLAY_CHUNKS, "_chunk")
+        .write.partitionBy("_chunk")
+        .mode("overwrite")
+        .parquet(chunks)
+    )
+    for i in range(REPLAY_CHUNKS):
+        part = glob.glob(os.path.join(chunks, f"_chunk={i}", "*.parquet"))
+        assert len(part) == 1, part  # one task per chunk value
+        shutil.copy(part[0], os.path.join(land, f"{i:02d}.parquet"))
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(land)
+    )
+
+
+def segment_refresh_stream(
+    events: DataFrame, engine, rule_id: int, checkpoint_dir: str
+) -> None:
+    """M4 as streaming: re-materialize a rule's segment on every
+    micro-batch of new events (exactly-once per batch via the
+    checkpoint). The batch handler reuses the SAME batch engine — one
+    code path for batch and streaming refresh."""
+    _drive(events, lambda batch: engine.execute_rule(rule_id), checkpoint_dir)
 
 
 def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -317,35 +403,6 @@ def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def scd2_maintenance_stream(
-    events: DataFrame, history_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Incremental SCD2 dimension maintenance as a stream: every
-    micro-batch folds its change events into the append-only change-point
-    log via :func:`..operators.merge.scd2_merge_batch` (exactly-once
-    effect: the checkpoint replays a crashed batch, and the merge's
-    anti-join against stored (key, valid_from, tiebreak) points drops
-    everything the replay re-derives — an append-only log plus an
-    idempotent fold).
-    Read the current dimension with
-    :func:`..operators.merge.scd2_intervals_view` over ``history_dir``."""
-    from ..operators.merge import scd2_merge_batch
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = _read_state_or_none(batch_df.sparkSession, history_dir)
-        delta = scd2_merge_batch(hist, batch_df)
-        delta.write.mode("append").parquet(history_dir)
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -385,36 +442,13 @@ def corpus_dedup_fold(seen: DataFrame | None, batch: DataFrame) -> DataFrame:
     return canon.join(seen.select("fingerprint"), "fingerprint", "left_anti")
 
 
-def corpus_dedup_stream(
-    docs: DataFrame, log_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Exactly-once corpus ingestion: per micro-batch keep only docs whose
-    normalized-content fingerprint has never been admitted, appending the
-    survivors to the fingerprint log (the streaming front door of the
-    curation pipeline; in-stream event dedup with bounded state is
-    :func:`dedup_stream` — this one's state is the corpus itself)."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        seen = _read_state_or_none(batch_df.sparkSession, log_dir)
-        corpus_dedup_fold(seen, batch_df).write.mode("append").parquet(log_dir)
-
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def lsh_dedup_stream(
     docs: DataFrame,
     sig_dir: str,
     pairs_dir: str,
     checkpoint_dir: str,
     est_threshold: float = 0.5,
-) -> "StreamingQuery":  # noqa: f821
+) -> None:
     """Incremental MinHash-LSH near-duplicate detection at ingestion
     time: every micro-batch signatures its NEW documents, joins their
     band keys against the bands of everything admitted so far, and
@@ -440,9 +474,7 @@ def lsh_dedup_stream(
         score_candidates,
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
         state = _read_state_or_none(spark, sig_dir)
         new_sigs = minhash_signatures(batch_df)
@@ -476,12 +508,7 @@ def lsh_dedup_stream(
         pairs.write.mode("append").parquet(pairs_dir)
         new_sigs.write.mode("append").parquet(sig_dir)
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drive(docs, fold, checkpoint_dir)
 
 
 def enriched_segment_counts(
@@ -538,40 +565,6 @@ def hll_rollup_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
         state.unionByName(daily)
         .groupBy("day")
         .agg(F.hll_union_agg("sk").alias("sk"))
-    )
-
-
-def hll_rollup_stream(
-    events: DataFrame, state_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Maintain the per-day HLL sketch table from the event stream via
-    foreachBatch: read committed state, fold the batch in, OVERWRITE the
-    state table (tiny — |days| rows). Estimates for any day range are a
-    scan of this table, never of raw history."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        state = _read_state_or_none(spark, state_dir)
-        new_state = hll_rollup_fold(state, batch_df)
-        # state is day-keyed and tiny: collect-free rewrite via staging
-        # dir + atomic-enough rename is overkill; overwrite mode suffices
-        # for the foreachBatch exactly-once contract (epoch replays
-        # rewrite the same rows)
-        new_state.persist()
-        new_state.count()
-        new_state.write.mode("overwrite").parquet(state_dir + "_next")
-        spark.read.parquet(state_dir + "_next").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        new_state.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -642,17 +635,17 @@ def mix_histogram_stream(
     )
 
 
-def ivf_ingest_stream(
-    vecs: DataFrame,
+def ivf_ingest_fold(
+    lists: DataFrame | None,
+    batch: DataFrame,
     model: list[tuple[int, list[float]]],
-    lists_dir: str,
-    checkpoint_dir: str,
-) -> "StreamingQuery":  # noqa: F821
+) -> DataFrame:
     """Incremental IVF index maintenance — the freshness half of the ANN
     serving story: vectors arriving on a stream are assigned to the
     FROZEN coarse cells (the broadcast driver-side model; re-training is
     a batch concern, same split FAISS deployments use) and appended to
     the inverted-lists log that the ``ann_ivf*`` serving queries read.
+    Folded with :func:`fold_stream` in append mode, ``model`` bound.
 
     Per micro-batch: one shuffle-free Arrow argmax assignment
     (:func:`~..operators.similarity.assign_cells_arrow`, the batch
@@ -665,26 +658,12 @@ def ivf_ingest_stream(
     O(corpus) like every index, never re-derived."""
     from ..operators.similarity import _vec_double, assign_cells_arrow
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        assigned = assign_cells_arrow(
-            batch_df.select("vec_id", _vec_double().alias("v")), model
-        ).select("vec_id", "cent_id", "csim")
-        state = _read_state_or_none(spark, lists_dir)
-        if state is not None:
-            assigned = assigned.join(
-                state.select("vec_id"), "vec_id", "left_anti"
-            )
-        assigned.write.mode("append").parquet(lists_dir)
-
-    return (
-        vecs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    assigned = assign_cells_arrow(
+        batch.select("vec_id", _vec_double().alias("v")), model
+    ).select("vec_id", "cent_id", "csim")
+    if lists is None:
+        return assigned
+    return assigned.join(lists.select("vec_id"), "vec_id", "left_anti")
 
 
 def checksum_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -699,7 +678,7 @@ def checksum_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     Epoch-replay safety comes from the read-fold-overwrite discipline
     (a replayed epoch re-folds from the same committed state — xor is
     NOT idempotent, so the discipline, not the operator, carries
-    exactly-once; identical to :func:`hll_rollup_stream`'s contract)."""
+    exactly-once; the :func:`fold_stream` overwrite contract)."""
     from ..operators.validation import partition_checksums
 
     daily = partition_checksums(batch)
@@ -712,37 +691,6 @@ def checksum_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
             F.sum("n_rows").alias("n_rows"),
             F.expr("bit_xor(checksum)").alias("checksum"),
         )
-    )
-
-
-def checksum_maintenance_stream(
-    events: DataFrame, state_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Maintain the per-day replication-checksum table from the event
-    stream via foreachBatch (read committed state, fold, overwrite —
-    state is |days| rows): the ingestion-time form of the migration
-    verify, so a replica can be diffed against the source WITHOUT ever
-    re-scanning raw history."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        state = _read_state_or_none(spark, state_dir)
-        new_state = checksum_fold(state, batch_df)
-        new_state.persist()
-        new_state.count()
-        new_state.write.mode("overwrite").parquet(state_dir + "_next")
-        spark.read.parquet(state_dir + "_next").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        new_state.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -841,40 +789,6 @@ def daily_cents_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     )
 
 
-def cusum_maintenance_stream(
-    events: DataFrame, state_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Maintain the per-(type, day) cents table from the stream via
-    foreachBatch read-fold-overwrite; the CUSUM drift statistics are
-    NOT maintained incrementally — they are a sequential recurrence,
-    exactly what the serving read derives from the settled |days|
-    state (the trending-topk architecture: additive state in the
-    stream, order-dependent stats at read time). A restated day
-    (late data) therefore re-enters the CUSUM correctly instead of
-    corrupting a folded sequential state."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        state = _read_state_or_none(spark, state_dir)
-        new_state = daily_cents_fold(state, batch_df)
-        new_state.persist()
-        new_state.count()
-        new_state.write.mode("overwrite").parquet(state_dir + "_next")
-        spark.read.parquet(state_dir + "_next").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        new_state.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # ----------------------------------------------- streaming growth ledger
 def userweek_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """One micro-batch of (user, week) activity-set maintenance: the
@@ -896,38 +810,6 @@ def userweek_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     return state.unionByName(pairs).distinct()
 
 
-def growth_ledger_stream(
-    events: DataFrame, state_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Maintain the (user, week) activity set from the stream via
-    foreachBatch; the growth-accounting classification (new/retained/
-    resurrected/churned) is ORDER-dependent, so it derives at read
-    time from the settled set (the CUSUM-monitor architecture:
-    idempotent additive state in the stream, sequential stats at
-    read)."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        state = _read_state_or_none(spark, state_dir)
-        new_state = userweek_fold(state, batch_df)
-        new_state.persist()
-        new_state.count()
-        new_state.write.mode("overwrite").parquet(state_dir + "_next")
-        spark.read.parquet(state_dir + "_next").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        new_state.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # ------------------------------------------------- streaming SPRT monitor
 def sprt_counts_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """One micro-batch of per-day (trials, successes) maintenance for
@@ -947,34 +829,3 @@ def sprt_counts_fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
         .agg(F.sum("n").alias("n"), F.sum("k").alias("k"))
     )
 
-
-def sprt_monitor_stream(
-    events: DataFrame, state_dir: str, checkpoint_dir: str
-) -> "StreamingQuery":  # noqa: F821
-    """Maintain the per-day (n, k) trial table from the stream via
-    foreachBatch read-fold-overwrite; serving reads derive the
-    cumulative log-likelihood ratio and the accept/reject verdict from
-    the settled state (``analytics.sprt_from_daily``). Late or restated
-    days re-enter the LLR correctly because nothing sequential is
-    folded."""
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        state = _read_state_or_none(spark, state_dir)
-        new_state = sprt_counts_fold(state, batch_df)
-        new_state.persist()
-        new_state.count()
-        new_state.write.mode("overwrite").parquet(state_dir + "_next")
-        spark.read.parquet(state_dir + "_next").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-        new_state.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

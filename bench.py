@@ -189,9 +189,7 @@ def start_session(app_name: str = "bench"):
     exits right after: a 1-hour interval guarantees the maintenance
     thread never wakes up mid-shutdown and dumps a WARN stack trace into
     the captured output (the r7/r8 bench artifacts were corrupted by
-    exactly that trace landing after the JSON line). The console
-    progress bar is off: its carriage-return redraws would otherwise
-    share a line with the per-sample stderr records."""
+    exactly that trace landing after the JSON line)."""
     from pyspark.sql import functions as F
 
     from audience_manager_platform_spark.session import get_spark
@@ -200,7 +198,6 @@ def start_session(app_name: str = "bench"):
         app_name,
         extra_conf={
             "spark.sql.streaming.stateStore.maintenanceInterval": "3600s",
-            "spark.ui.showConsoleProgress": "false",
         },
     )
     # warm the JVM/codegen paths once with a trivial job ...

@@ -227,3 +227,48 @@ def test_experiment_policy_only_in_helpers():
     }
     for kind, home in homes.items():
         assert [fn for _, fn in found[kind]] == [home], (kind, found[kind])
+
+
+def _stream_driving_calls(tree: ast.AST):
+    """``(kind, lineno)`` of each call that drives a stream: an
+    availableNow trigger, an ``awaitTermination`` or a
+    ``maxFilesPerTrigger`` option."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = _called(node)
+        if name == "trigger" and any(k.arg == "availableNow" for k in node.keywords):
+            yield "trigger", node.lineno
+        elif name == "awaitTermination":
+            yield "await", node.lineno
+        elif (
+            name == "option"
+            and node.args
+            and _literal(node.args[0]) == "maxFilesPerTrigger"
+        ):
+            yield "replay", node.lineno
+
+
+def test_streams_driven_only_by_jobs_drivers():
+    """Every availableNow stream of the package runs through the drivers
+    in ``streaming/jobs.py``: the memory-sink driver
+    (``run_available_now``) and the foreachBatch starter (``_drive``)
+    hold the only two availableNow triggers, ``_settle`` the only
+    ``awaitTermination`` (it raises when a backlog did not drain), and
+    ``chunked_replay`` the only ``maxFilesPerTrigger`` source. A copy
+    elsewhere is a stream whose partial state can pass as settled.
+    Docstrings and comments are not calls and are not scanned."""
+    found = {"trigger": [], "await": [], "replay": []}
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        at = _enclosing_functions(tree)
+        rel = path.relative_to(PKG).as_posix()
+        for kind, lineno in _stream_driving_calls(tree):
+            found[kind].append(f"{rel}::{at(lineno)}")
+    jobs = "streaming/jobs.py::"
+    assert sorted(found["trigger"]) == [
+        jobs + "_drive",
+        jobs + "run_available_now",
+    ], found["trigger"]
+    assert found["await"] == [jobs + "_settle"], found["await"]
+    assert found["replay"] == [jobs + "chunked_replay"], found["replay"]

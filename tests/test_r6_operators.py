@@ -173,6 +173,7 @@ def test_ivf_ingest_stream_matches_batch_and_replays_idempotently(
     checkpoint (worst-case replay) must not change the log."""
     import glob
     import shutil
+    from functools import partial
 
     from pyspark.sql import functions as F
 
@@ -182,7 +183,8 @@ def test_ivf_ingest_stream_matches_batch_and_replays_idempotently(
         kmeans_fit_model,
     )
     from audience_manager_platform_spark.streaming.jobs import (
-        ivf_ingest_stream,
+        fold_stream,
+        ivf_ingest_fold,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -202,11 +204,13 @@ def test_ivf_ingest_stream_matches_batch_and_replays_idempotently(
             .option("maxFilesPerTrigger", 1)
             .parquet(str(land))
         )
-        q = ivf_ingest_stream(
-            stream, model, str(tmp_path / "lists"), str(tmp_path / ckpt)
+        fold_stream(
+            stream,
+            partial(ivf_ingest_fold, model=model),
+            str(tmp_path / "lists"),
+            str(tmp_path / ckpt),
+            append=True,
         )
-        q.awaitTermination(400)
-        q.stop()
 
     run("ckpt1")
     log = {

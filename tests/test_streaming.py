@@ -17,10 +17,9 @@ from audience_manager_platform_spark.streaming.jobs import (
 def test_streaming_window_counts_equal_batch(spark, sf_dir):
     events = stream_events(spark, sf_dir)
     result = windowed_event_counts(events, window="1 day", watermark="1 hour")
-    run_available_now(result, "t_stream_counts")
     streamed = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.table("t_stream_counts").collect()
+        for r in run_available_now(result).collect()
     }
     batch = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
@@ -44,8 +43,7 @@ def test_streaming_window_counts_equal_batch(spark, sf_dir):
 def test_sliding_window(spark, sf_dir):
     events = stream_events(spark, sf_dir)
     result = windowed_event_counts(events, window="2 days", slide="1 day")
-    run_available_now(result, "t_stream_sliding")
-    rows = spark.table("t_stream_sliding").collect()
+    rows = run_available_now(result).collect()
     # sliding: every event lands in 2 windows -> total count doubles
     total = sum(r.n_events for r in rows)
     assert total == load_table(spark, sf_dir, "events").count() * 2
@@ -72,6 +70,34 @@ def test_sessionize_gap_semantics(spark):
     assert per_user[2] == [("2024-01-01 10:00:00", 1)]
 
 
+class _StubQuery:
+    """A streaming query whose ``awaitTermination`` returns ``drained``."""
+
+    def __init__(self, drained):
+        self.drained, self.timeout, self.stopped = drained, None, False
+
+    def awaitTermination(self, timeout=None):
+        self.timeout = timeout
+        return self.drained
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_settle_stops_and_raises_when_backlog_does_not_drain():
+    """A query still running at the timeout has written partial state:
+    ``_settle`` stops it and raises rather than return as if settled."""
+    from audience_manager_platform_spark.streaming import jobs
+
+    q = _StubQuery(drained=False)
+    with pytest.raises(TimeoutError):
+        jobs._settle(q)
+    assert q.stopped and q.timeout == jobs.SETTLE_TIMEOUT_S
+    q = _StubQuery(drained=True)
+    jobs._settle(q)
+    assert q.stopped
+
+
 def test_foreach_batch_segment_refresh(spark, sf_dir, tmp_path):
     from audience_manager_platform_spark.catalog import Catalog
     from audience_manager_platform_spark.engine import AudienceEngine
@@ -85,10 +111,9 @@ def test_foreach_batch_segment_refresh(spark, sf_dir, tmp_path):
         "stream_refresh", [{"field": "transaction_amount", "operator": ">", "value": "120"}]
     )
     events = stream_events(spark, sf_dir)
-    q = segment_refresh_stream(
+    segment_refresh_stream(
         events, engine, rule.rule_id, checkpoint_dir=str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
     meta = engine.catalog.get_segment(rule.rule_id)
     assert meta.row_count and meta.row_count > 0
     assert engine.read_segment(rule.rule_id).count() == meta.row_count
@@ -308,14 +333,16 @@ def test_hll_rollup_stream_matches_batch_sketches(spark, sf_dir, tmp_path):
 
     from audience_manager_platform_spark.sources import load_table
     from audience_manager_platform_spark.streaming.jobs import (
-        hll_rollup_stream,
+        fold_stream,
+        hll_rollup_fold,
         stream_events,
     )
 
     state = str(tmp_path / "hll_state")
     ckpt = str(tmp_path / "ckpt")
-    q = hll_rollup_stream(stream_events(spark, sf_dir), state, ckpt)
-    q.awaitTermination(120)
+    fold_stream(
+        stream_events(spark, sf_dir), hll_rollup_fold, state, ckpt, append=False
+    )
 
     got = (
         spark.read.parquet(state)
@@ -472,15 +499,13 @@ def test_lsh_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(land))
     )
-    q = lsh_dedup_stream(
+    lsh_dedup_stream(
         stream,
         str(tmp_path / "sigs"),
         str(tmp_path / "pairs"),
         str(tmp_path / "ckpt_lsh"),
         est_threshold=0.5,
     )
-    q.awaitTermination(600)
-    q.stop()
 
     got_rows = spark.read.parquet(str(tmp_path / "pairs")).collect()
     got = {(r.doc_a, r.doc_b) for r in got_rows}
@@ -523,8 +548,10 @@ def test_quantile_sketch_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    run_available_now(quantile_sketch_stream(stream), "qsketch_test")
-    settled = {(r.blen, r.sub): r.cnt for r in spark.table("qsketch_test").collect()}
+    settled = {
+        (r.blen, r.sub): r.cnt
+        for r in run_available_now(quantile_sketch_stream(stream)).collect()
+    }
     cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     expected = {
         (r.blen, r.sub): r.cnt

@@ -205,17 +205,15 @@ def test_scd2_incremental_merge_equals_batch(spark):
 def test_scd2_maintenance_stream_end_to_end(spark, sf_dir, tmp_path):
     from audience_manager_platform_spark.sources import load_table
     from audience_manager_platform_spark.streaming.jobs import (
-        scd2_maintenance_stream,
+        fold_stream,
         stream_events,
     )
 
     events = stream_events(spark, sf_dir)
     hist_dir = str(tmp_path / "scd2_log")
-    q = scd2_maintenance_stream(
-        events, hist_dir, str(tmp_path / "ckpt")
+    fold_stream(
+        events, MG.scd2_merge_batch, hist_dir, str(tmp_path / "ckpt"), append=True
     )
-    q.awaitTermination(240)
-    q.stop()
     got = {
         (r.user_id, r.state, r.valid_from, r.valid_to)
         for r in MG.scd2_intervals_view(spark.read.parquet(hist_dir)).collect()
@@ -265,7 +263,7 @@ def test_corpus_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
     from audience_manager_platform_spark.sources import load_table
     from audience_manager_platform_spark.streaming.jobs import (
         corpus_dedup_fold,
-        corpus_dedup_stream,
+        fold_stream,
         stream_docs,
     )
 
@@ -283,11 +281,13 @@ def test_corpus_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
 
     # end-to-end stream over the fixture == batch exact_dedup canonicals
     log_dir = str(tmp_path / "fp_log")
-    q = corpus_dedup_stream(
-        stream_docs(spark, sf_dir), log_dir, str(tmp_path / "ckpt2")
+    fold_stream(
+        stream_docs(spark, sf_dir),
+        corpus_dedup_fold,
+        log_dir,
+        str(tmp_path / "ckpt2"),
+        append=True,
     )
-    q.awaitTermination(240)
-    q.stop()
     got = {(r.fingerprint, r.doc_id) for r in spark.read.parquet(log_dir).collect()}
     docs = load_table(spark, sf_dir, "documents")
     want = {

@@ -23,14 +23,18 @@ Usage:
 ``--sf-dir`` defaults to the sf0.01 fixtures. In every file written,
 the fixture directory reads ``<sf-dir>``, the session's warehouse
 directory ``<warehouse>``, the refresh's temporary catalog directory
-``<catalog>`` and the shuffle partition count ``<shuffle-partitions>``,
-so a capture does not depend on the box it ran on.
+``<catalog>``, each ``materialize()`` scratch directory
+``<materialized>`` and the shuffle partition count
+``<shuffle-partitions>``, and exchange plan ids count from 1 in order of
+appearance, so a capture does not depend on the box or the run it came
+from.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import tempfile
 
@@ -303,14 +307,34 @@ def _mask_shuffle_partitions(text: str, n: str) -> str:
     return "".join(out) + text[i:]
 
 
+# A ``partitioning.materialize`` scratch directory: a random name under
+# the temp root, new on every run.
+_MATERIALIZED_DIR = re.compile(r"[^\s\[\],]*amp-mat-[0-9a-z_]+")
+_PLAN_ID = re.compile(r"plan_id=(\d+)")
+
+
+def _renumber_plan_ids(text: str) -> str:
+    """``text`` with every exchange ``plan_id`` renumbered 1, 2, .. in
+    order of first appearance. The session counter behind them also
+    counts adaptive re-plans, whose number varies from run to run;
+    renumbering keeps each id's references to one exchange intact."""
+    ids: dict[str, int] = {}
+    return _PLAN_ID.sub(
+        lambda m: f"plan_id={ids.setdefault(m.group(1), len(ids) + 1)}", text
+    )
+
+
 def _write(path: str, text: str, placeholders: dict[str, str]) -> None:
     """Write ``text`` to ``path`` with every key of ``placeholders`` (a
-    machine path) replaced by its value, and the shuffle partition
-    count masked (:func:`_mask_shuffle_partitions`)."""
+    machine path) replaced by its value, every ``materialize()`` scratch
+    directory by ``<materialized>``, exchange plan ids renumbered
+    (:func:`_renumber_plan_ids`) and the shuffle partition count masked
+    (:func:`_mask_shuffle_partitions`)."""
     from pyspark.sql import SparkSession
 
     for real, placeholder in placeholders.items():
         text = text.replace(real, placeholder)
+    text = _renumber_plan_ids(_MATERIALIZED_DIR.sub("<materialized>", text))
     n = SparkSession.active().conf.get("spark.sql.shuffle.partitions")
     text = _mask_shuffle_partitions(text, n)
     with open(path, "w") as fh:
