@@ -49,6 +49,19 @@ def get_spark(
     stderr mid-line, so they would share a line with whatever a caller
     prints there (a tool's per-query result lines, a bench's per-sample
     records) and corrupt it.
+
+    The driver JVM gets a fixed JIT budget of two compiler threads
+    (``-XX:CICompilerCount=2``, one C1 and one C2). HotSpot otherwise
+    sizes that pool from the core count (3 threads at 4 cores, 15 at 32),
+    and in a session that lives for minutes most of that compiling never
+    pays back: it is the bulk of a cold pass's CPU. The budget is a
+    constant, not a function of the cores, because the code to compile
+    does not grow with them. It goes in through
+    ``spark.driver.defaultJavaOptions``, which the launcher puts in front
+    of ``spark.driver.extraJavaOptions``, so a caller's extra options add
+    to it instead of replacing it. Like every JVM option it takes effect
+    only at launch: a JVM started before ``get_spark`` (a ``pyspark``
+    shell, an earlier session in this process) keeps its own flags.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -72,6 +85,7 @@ def get_spark(
         # known small at ANY scale (e.g. region: 5 rows).
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),

@@ -385,20 +385,25 @@ def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     present but with no footers to infer from) map to None — any other
     read failure (permissions, corrupt footer) propagates so the
     streaming query fails and retries instead of silently re-admitting
-    duplicates into an idempotent fold."""
+    duplicates into an idempotent fold.
+
+    An absent dir is checked through the Hadoop ``FileSystem`` of the
+    path's own scheme before any read: ``spark.read`` of a missing path
+    logs a WARN with a full Java stack trace before it fails, once per
+    fold's first batch."""
     from pyspark.errors import AnalysisException
 
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+        return None
     try:
         state = spark.read.parquet(path)
         _ = state.schema  # force resolution; raises if dir is empty
         return state
-    except FileNotFoundError:
-        return None
     except AnalysisException as ex:
-        cls = ex.getErrorClass() or ""
-        if cls in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
-            not cls and ("PATH_NOT_FOUND" in str(ex) or "UNABLE_TO_INFER" in str(ex))
-        ):
+        cls = ex.getCondition() or ""
+        if cls == "UNABLE_TO_INFER_SCHEMA" or (not cls and "UNABLE_TO_INFER" in str(ex)):
             return None
         raise
 

@@ -246,6 +246,15 @@ def probe_seconds(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def driver_jvm_flags(spark) -> list[str]:
+    """The driver JVM's ``-XX:`` and ``-Xmx`` launch flags, so an artifact
+    shows which heap and JIT compile budget its timings ran under."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return [
+        a for a in mx.getRuntimeMXBean().getInputArguments() if a.startswith(("-XX:", "-Xmx"))
+    ]
+
+
 def shutdown(spark, line: str | None = None) -> None:
     """Quiet, ordered exit: stop any streaming queries, drop the log level
     so stop() itself can't emit WARNs, stop the session, sweep the
@@ -339,6 +348,11 @@ def main() -> None:
     probe_sec = probe_seconds(spark)
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    # with 4+ samples of named queries, also report the steady state: the
+    # median of samples 3..N, once the first two have paid for the JIT and
+    # any one-time asset builds
+    steady = bool(args.names) and (args.repeat or 0) >= 4
+    warm: dict[str, float] = {}
     for name in names:
         # --all (the full sweep) stays single-shot for runtime; otherwise
         # each query reports the MEDIAN of repeated runs
@@ -362,6 +376,18 @@ def main() -> None:
         timings[name] = round(statistics.median(samples), 3)
         print(
             f"# {name}: {n} rows; median {timings[name]}s of {samples}",
+            file=sys.stderr,
+        )
+        if steady:
+            warm[name] = round(statistics.median(samples[2:]), 3)
+            print(
+                f"# {name}: warm median (samples 3..{n_rep}) {warm[name]}s",
+                file=sys.stderr,
+            )
+    if steady:
+        print(
+            f"# warm median (samples 3..{args.repeat}) summed over "
+            f"{len(warm)} queries: {round(sum(warm.values()), 3)}s",
             file=sys.stderr,
         )
 
@@ -399,6 +425,7 @@ def main() -> None:
         "families": _families(timings),
         "sf": float(sf),
         "probe_sec": probe_sec,
+        "driver_jvm": driver_jvm_flags(spark),
         "runs": runs,
     }
     detail_path = os.path.join(

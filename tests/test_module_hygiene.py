@@ -272,3 +272,22 @@ def test_streams_driven_only_by_jobs_drivers():
     ], found["trigger"]
     assert found["await"] == [jobs + "_settle"], found["await"]
     assert found["replay"] == [jobs + "chunked_replay"], found["replay"]
+
+
+def test_driver_java_options_only_in_get_spark():
+    """The driver JVM's default options (its JIT compile budget) are set
+    in one place, ``session.get_spark``. A second site in ``bench.py`` or
+    a tool would time or check a JVM other than the engine's. perfbench
+    is versioned apart from the program and is not scanned."""
+    root = PKG.parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] in ("perfbench", "tests", ".git"):
+            continue
+        tree = ast.parse(path.read_text())
+        at = _enclosing_functions(tree)
+        for node in ast.walk(tree):
+            if _literal(node) == "spark.driver.defaultJavaOptions":
+                found.append(f"{rel.as_posix()}::{at(node.lineno)}")
+    assert found == ["audience_manager_platform_spark/session.py::get_spark"], found

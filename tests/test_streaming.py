@@ -98,6 +98,32 @@ def test_settle_stops_and_raises_when_backlog_does_not_drain():
     assert q.stopped
 
 
+def test_read_state_or_none_skips_reading_a_missing_dir(spark, tmp_path, monkeypatch):
+    """A state dir that no batch has written yet is None before any read:
+    reading a missing path logs a WARN with a Java stack trace first. It
+    starts no job to find out. An empty dir is None too, and a written
+    one reads back."""
+    from audience_manager_platform_spark.streaming import jobs
+
+    sc = spark.sparkContext
+    group = "test:read_state_missing"
+    sc.setJobGroup(group, None)
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(
+                type(spark), "read", property(lambda s: pytest.fail("read a missing dir"))
+            )
+            assert jobs._read_state_or_none(spark, str(tmp_path / "state")) is None
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    (tmp_path / "empty").mkdir()
+    assert jobs._read_state_or_none(spark, str(tmp_path / "empty")) is None
+    spark.range(3).write.parquet(str(tmp_path / "written"))
+    assert jobs._read_state_or_none(spark, str(tmp_path / "written")).count() == 3
+
+
 def test_foreach_batch_segment_refresh(spark, sf_dir, tmp_path):
     from audience_manager_platform_spark.catalog import Catalog
     from audience_manager_platform_spark.engine import AudienceEngine
