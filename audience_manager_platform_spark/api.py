@@ -21,7 +21,7 @@ import math
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .engine import AudienceEngine
@@ -199,22 +199,15 @@ def create_app(
 
     @app.get("/api/v1/segments/<int:rule_id>/sample_data")
     def sample_data(rule_id: int):
-        from pyspark.errors import AnalysisException
-
         # only a genuinely MISSING segment maps to the reference's
         # empty-sample response (unknown rule → KeyError, unmaterialized
-        # rule → parquet path not found); real engine/Spark failures must
+        # rule → FileNotFoundError); real engine/Spark failures must
         # surface as errors, not masquerade as a healthy empty segment
         try:
             rows = engine.sample_segment(rule_id, n=10)
         except (KeyError, FileNotFoundError) as ex:
             return ok({"data": {"sample_data": [], "note": str(ex)}})
-        except AnalysisException as ex:
-            # pin the error CLASS (stable across Spark versions), with the
-            # message substring only as a fallback for classless errors
-            cls = ex.getErrorClass() or ""
-            if cls == "PATH_NOT_FOUND" or (not cls and "PATH_NOT_FOUND" in str(ex)):
-                return ok({"data": {"sample_data": [], "note": str(ex)}})
+        except Exception as ex:
             return err(str(ex), 500)
         return ok({"data": {"sample_data": [r.asDict() for r in rows]}})
 
@@ -247,14 +240,41 @@ def create_app(
             out.append(d)
         return out
 
+    def _sorted_small(df: DataFrame, key: str) -> DataFrame:
+        """``df`` sorted by ``key`` inside one partition. Only for results
+        of bounded size (one row per category or per day): a global
+        ``orderBy`` would add a range-partition sample job and a second
+        exchange, which cost more than sorting a few rows in one task."""
+        return df.coalesce(1).sortWithinPartitions(key)
+
+    def _page(df: DataFrame, key: str, page: int, per_page: int):
+        """One page of ``df`` in ``key`` order and the row count before
+        pagination, from one job chain: an :class:`Observation` below the
+        sort, offset and limit counts every input row (the top-k step
+        reads all of them), so no second ``count()`` replays the plan."""
+        if page < 1 or per_page < 1:
+            # a zero limit would plan the observed count away
+            raise ValueError("page and per_page must be positive")
+        seen = Observation()
+        rows = _rows(
+            df.observe(seen, F.count(F.lit(1)).alias("rows"))
+            .orderBy(key)
+            .offset((page - 1) * per_page)
+            .limit(per_page)
+        )
+        return rows, seen.get["rows"]
+
     @app.get("/api/v1/analytics/category-totals")
     def category_totals():
         start = request.args.get("start_date")
         end = request.args.get("end_date")
         try:
-            df = A.category_totals(
-                A.filter_transactions(engine.transactions(), start=start, end=end)
-            ).orderBy("category")
+            df = _sorted_small(
+                A.category_totals(
+                    A.filter_transactions(engine.transactions(), start=start, end=end)
+                ),
+                "category",
+            )
             return ok(
                 {
                     "data": _rows(df),
@@ -270,9 +290,7 @@ def create_app(
             days = request.args.get("days", default=30, type=int)
             if days is None or days <= 0:
                 raise ValueError("Days must be a positive number")
-            df = A.daily_totals(
-                A.filter_transactions(engine.transactions(), days=days)
-            ).orderBy("day")
+            df = _sorted_small(A.daily_totals(engine.transactions(), days=days), "day")
             return ok({"data": _rows(df), "filters": {"days": days}})
         except ValueError as ex:
             return err(str(ex), 400)
@@ -296,8 +314,6 @@ def create_app(
             days = args.get("days", type=int)
             page = args.get("page", default=1, type=int)
             per_page = args.get("per_page", default=20, type=int)
-            if page < 1 or per_page < 1:
-                raise ValueError("page and per_page must be positive")
             filters = dict(
                 min_amount=min_amount,
                 city_tier=city_tier,
@@ -305,24 +321,22 @@ def create_app(
                 transaction_type=transaction_type,
                 days=days,
             )
-            items = A.user_search(
-                engine.transactions(),
-                min_transactions=min_transactions,
-                page=page,
-                per_page=per_page,
-                **filters,
+            # the page and the matching-user total before pagination (the
+            # COUNT(*) flask-sqlalchemy's paginate issues) from one plan
+            items, total = _page(
+                A.user_search(
+                    engine.transactions(),
+                    min_transactions=min_transactions,
+                    page=None,
+                    **filters,
+                ),
+                "user_id",
+                page,
+                per_page,
             )
-            # total = matching users BEFORE pagination (one count job —
-            # the same COUNT(*) flask-sqlalchemy's paginate issues)
-            total = A.user_search(
-                engine.transactions(),
-                min_transactions=min_transactions,
-                page=None,
-                **filters,
-            ).count()
             return ok(
                 {
-                    "data": _rows(items),
+                    "data": items,
                     "pagination": {
                         "total": total,
                         "pages": math.ceil(total / per_page),
@@ -344,12 +358,7 @@ def create_app(
         return transactions_detail() if transactions_detail else None
 
     def _paginated(df: DataFrame, page: int, per_page: int):
-        total = df.count()
-        rows = _rows(
-            df.orderBy("transaction_id")
-            .offset((page - 1) * per_page)
-            .limit(per_page)
-        )
+        rows, total = _page(df, "transaction_id", page, per_page)
         return {
             "items": rows,
             "total": total,
@@ -366,7 +375,10 @@ def create_app(
         df = _txn_source().filter(
             F.col("transaction_type") == transaction_type
         )
-        return jsonify(_paginated(df, page, per_page))
+        try:
+            return jsonify(_paginated(df, page, per_page))
+        except ValueError as ex:
+            return err(str(ex), 400)
 
     def _txn_detail(transaction_type: str, transaction_id: int):
         if transactions_detail is None:

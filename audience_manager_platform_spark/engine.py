@@ -33,6 +33,7 @@ from .catalog import Catalog, Rule, SegmentMeta
 from .operators.segments import combine_segments
 from .plans.dependency_finder import conditions_to_set, find_best_dependency
 from .plans.rule_compiler import RuleCompiler
+from .sources.tables import path_exists
 from .sources.transactions import TRANSACTION_COLUMNS  # noqa: F401 (re-export)
 
 
@@ -315,5 +316,11 @@ class AudienceEngine:
         return reader.parquet(self.catalog.segment_path(rule_id))
 
     def sample_segment(self, rule_id: int, n: int = 10):
-        """S10: bounded preview for API display."""
+        """S10: bounded preview for API display. Raises FileNotFoundError
+        when the segment has not been materialized: the path is checked
+        with :func:`sources.tables.path_exists` before any read, so a
+        missing segment runs no Spark job and logs no read failure."""
+        path = self.catalog.segment_path(rule_id)
+        if not path_exists(self.spark, path):
+            raise FileNotFoundError(f"segment {rule_id} is not materialized: {path}")
         return self.read_segment(rule_id).limit(n).collect()

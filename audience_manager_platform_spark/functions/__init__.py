@@ -107,11 +107,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     :func:`dot` and :func:`l2_norm` folds. Callers scoring one vector
     against many precompute its norm and divide ``dot`` themselves."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def money_round(col: Column, scale: int = 2) -> Column:
-    """2dp rounding for money display (reference
-    ``backend/app/utils/aggregates.py:45,104,118``; quirk Q3 — we compute
-    in double and round at the edge, documenting the divergence from the
-    reference's FLOAT-vs-DECIMAL inconsistency)."""
-    return F.round(col, scale)

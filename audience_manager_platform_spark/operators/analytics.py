@@ -4,8 +4,12 @@ The reference serves these from SQLAlchemy against SQLite, computing each
 source separately and merging/zero-filling/sorting in Python
 (``backend/app/utils/aggregates.py``). Every Python-side merge loop
 disappears here: the unified transaction view is one DataFrame, so each
-endpoint is a single declarative plan — one shuffle where the semantics
-demand a grouping, nothing driver-side in the data path.
+endpoint is one declarative plan: one scan of the source, a shuffle
+where the semantics demand a grouping, a second reduce only where a
+bounded result folds to one row (:func:`daily_totals`' day spine), and
+nothing driver-side in the data path. The one second scan is
+:func:`filter_transactions`' trailing ``days`` anchor, a one-row
+max-date aggregate broadcast into the filter of source rows.
 
 All functions take the unified-transactions DataFrame (``user_id, amount,
 transaction_date, category, city_tier, transaction_type``) and return
@@ -79,14 +83,22 @@ def category_totals(txns: DataFrame) -> DataFrame:
     )
 
 
-def daily_totals(txns: DataFrame) -> DataFrame:
+def daily_totals(txns: DataFrame, *, days: int | None = None) -> DataFrame:
     """A4: per-calendar-day totals, zero-filled over the observed date
-    range. Zero-fill is ``sequence()`` + explode + left join (the
-    reference zero-fills in a Python loop, ``aggregates.py:91-104``).
+    range (the reference zero-fills in a Python loop,
+    ``aggregates.py:91-104``).
 
     The day spine is derived from the data's own min/max so the operator
-    is deterministic without wall-clock input. The spine aggregate is two
-    scalar values -> the per-day join side is a broadcast.
+    is deterministic without wall-clock input, and it is built from the
+    per-day aggregate, not from a second pass over ``txns``: the per-day
+    rows (one per observed day) reduce to ONE row, ``max(day)`` plus the
+    list of day entries, and ``sequence(lo, hi)`` is exploded against a
+    day -> entry map of that list. The source is scanned once.
+
+    ``days`` keeps the trailing N calendar days, anchored on the data's
+    max date, as ``filter_transactions(days=N)`` does: the result equals
+    ``daily_totals(filter_transactions(txns, days=N))``, with the window
+    applied to the day entries instead of to the source rows.
     """
     daily = (
         txns.filter(F.col("transaction_date").isNotNull())
@@ -96,20 +108,25 @@ def daily_totals(txns: DataFrame) -> DataFrame:
             F.round(F.sum("amount"), 2).alias("total_amount"),
         )
     )
-    spine = (
-        txns.select(
-            F.min(F.to_date("transaction_date")).alias("lo"),
-            F.max(F.to_date("transaction_date")).alias("hi"),
-        )
-        .select(F.explode(F.sequence("lo", "hi")).alias("day"))
+    span = daily.agg(
+        F.max("day").alias("hi"),
+        F.collect_list(F.struct("day", "transaction_count", "total_amount")).alias("entries"),
     )
-    return (
-        spine.join(daily, "day", "left")
-        .select(
-            "day",
-            F.coalesce("transaction_count", F.lit(0)).alias("transaction_count"),
-            F.coalesce("total_amount", F.lit(0.0)).alias("total_amount"),
+    if days is not None:
+        span = span.withColumn(
+            "entries",
+            F.filter("entries", lambda e: e["day"] >= F.date_sub(F.col("hi"), days - 1)),
         )
+    lo = F.array_min(F.transform("entries", lambda e: e["day"]))
+    entry = F.col("by_day")[F.col("day")]
+    # the map is built below the explode, once, not once per output day
+    return span.select(
+        F.sequence(lo, F.col("hi")).alias("spine"),
+        F.map_from_entries(F.transform("entries", lambda e: F.struct(e["day"], e))).alias("by_day"),
+    ).select(F.explode("spine").alias("day"), "by_day").select(
+        "day",
+        F.coalesce(entry["transaction_count"], F.lit(0)).alias("transaction_count"),
+        F.coalesce(entry["total_amount"], F.lit(0.0)).alias("total_amount"),
     )
 
 
@@ -149,8 +166,9 @@ def user_search(
     LIMIT/OFFSET pagination (ordered by user_id — pagination without a
     total order is undefined under distributed execution).
 
-    ``page=None`` skips pagination (the REST route's pre-pagination
-    total count reuses the identical aggregate plan)."""
+    ``page=None`` skips pagination and returns the whole filtered
+    aggregate: the REST route pages it itself, counting the matching
+    users with an Observation in the same job chain as the page."""
     filtered = filter_transactions(
         txns,
         min_amount=min_amount,

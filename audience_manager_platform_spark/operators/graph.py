@@ -37,19 +37,6 @@ CHECKPOINT_EVERY = 8  # truncate the linear iteration chain periodically
 BROADCAST_STATE_MAX_NODES = 5_000_000
 
 
-def customer_supplier_edges(
-    orders: DataFrame, lineitem: DataFrame
-) -> DataFrame:
-    """Distinct undirected customer—supplier trade edges (both
-    directions materialized: PageRank walks an undirected relation as a
-    symmetric directed graph). Node ids are prefixed ('c123' / 's7') so
-    the two key spaces can't collide."""
-    fwd = _edges_encoded(orders, lineitem).select(
-        decode_node("src").alias("src"), decode_node("dst").alias("dst")
-    )
-    return fwd
-
-
 def _pairs_encoded(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """The distinct customer—supplier pairs on ENCODED bigint node ids —
     the compute representation (`2*custkey` / `2*suppkey+1`, bijective
@@ -122,10 +109,6 @@ def _pairs_state(pairs: DataFrame) -> DataFrame:
             .agg(F.count("*").alias("deg"))
         )
     )
-
-
-def _edges_encoded(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    return _sym_edges(_pairs_encoded(orders, lineitem))
 
 
 def decode_node(col: str):

@@ -58,6 +58,15 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop ``FileSystem`` of its
+    own scheme. Runs no Spark job; ``spark.read`` of a missing path logs a
+    WARN with a full Java stack trace before it fails."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath)
+
+
 # Session confs that change the schema parquet inference produces.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cents
+from ..sources.tables import path_exists
 
 
 def _event_schema(ts_type: T.DataType) -> T.StructType:
@@ -387,15 +388,12 @@ def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     streaming query fails and retries instead of silently re-admitting
     duplicates into an idempotent fold.
 
-    An absent dir is checked through the Hadoop ``FileSystem`` of the
-    path's own scheme before any read: ``spark.read`` of a missing path
-    logs a WARN with a full Java stack trace before it fails, once per
-    fold's first batch."""
+    An absent dir is checked with :func:`sources.tables.path_exists`
+    before any read, which would log a stack trace once per fold's first
+    batch."""
     from pyspark.errors import AnalysisException
 
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+    if not path_exists(spark, path):
         return None
     try:
         state = spark.read.parquet(path)

@@ -139,3 +139,29 @@ def test_sample_data_of_unmaterialized_rule_is_empty_with_note(engine):
     assert body["status"] == "success"
     assert body["data"]["sample_data"] == []
     assert body["data"]["note"]
+
+
+def test_sample_segment_of_unmaterialized_rule_raises_without_a_job(engine, spark):
+    rule = engine.create_rule("amt", [AMT])
+
+    def sample():
+        with pytest.raises(FileNotFoundError, match="not materialized"):
+            engine.sample_segment(rule.rule_id)
+
+    assert jobs_run(spark, sample)[1] == 0
+
+
+def test_sample_data_answers_500_on_any_other_failure(engine, monkeypatch):
+    pytest.importorskip("flask")
+    from audience_manager_platform_spark.api import create_app
+
+    rule = engine.create_rule("amt", [AMT])
+    engine.execute_rule(rule.rule_id)
+
+    def broken(rule_id, n=10):
+        raise RuntimeError("scan failed")
+
+    monkeypatch.setattr(engine, "sample_segment", broken)
+    reply = create_app(engine).test_client().get(f"/api/v1/segments/{rule.rule_id}/sample_data")
+    assert reply.status_code == 500
+    assert reply.json == {"status": "error", "message": "scan failed"}

@@ -19,6 +19,12 @@ Usage:
       before the captured run, so the captured run is a warm refresh.
       Plans are the final (adaptive) ones Spark recorded for each
       execution, in ``spark.sql.ui.explainMode`` (formatted by default).
+  python tools/dump_plans.py --tag T --out DIR [--sf-dir DIR] --api
+      Write DIR/api_ROUTE_T.txt for each REST analytics read in
+      ``API_ROUTES``: the number of Spark jobs and the plan of every SQL
+      execution one warm request ran, captured as ``--refresh`` captures
+      a refresh. The service runs over a catalog with one materialized
+      base rule.
 
 ``--sf-dir`` defaults to the sf0.01 fixtures. In every file written,
 the fixture directory reads ``<sf-dir>``, the session's warehouse
@@ -359,22 +365,23 @@ def plans_md(spark, sf_dir: str) -> str:
     return "\n".join(out)
 
 
-def capture_refresh(spark, engine, rule_id: int) -> str:
+def _captured(spark, group: str, action, head) -> str:
+    """Run ``action()`` inside the job group ``group``, and return its
+    report: ``head(result, jobs, executions)`` — the number of Spark jobs
+    it ran and of SQL executions it issued — then every execution's
+    plan."""
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
     seen = {e.executionId() for e in _executions(store)}
-    group = f"refresh-{rule_id}"
-    sc.setJobGroup(group, "captured refresh")
-    rows = engine.execute_rule(rule_id)
-    sc._jsc.clearJobGroup()
+    sc.setJobGroup(group, "captured run")
+    try:
+        result = action()
+    finally:
+        sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     new = [e for e in _executions(store) if e.executionId() not in seen]
-    out = [
-        f"rule {rule_id}: {rows} rows, {len(jobs)} Spark jobs, "
-        f"{len(new)} SQL executions",
-        "",
-    ]
+    out = [head(result, jobs, len(new)), ""]
     for e in sorted(new, key=lambda e: e.executionId()):
         out += [
             f"== SQL execution {e.executionId()}: {e.description()} ==",
@@ -382,6 +389,15 @@ def capture_refresh(spark, engine, rule_id: int) -> str:
             "",
         ]
     return "\n".join(out)
+
+
+def capture_refresh(spark, engine, rule_id: int) -> str:
+    return _captured(
+        spark,
+        f"refresh-{rule_id}",
+        lambda: engine.execute_rule(rule_id),
+        lambda rows, jobs, n: f"rule {rule_id}: {rows} rows, {jobs} Spark jobs, {n} SQL executions",
+    )
 
 
 def _executions(store) -> list:
@@ -419,6 +435,58 @@ def dump_refresh(spark, sf_dir: str, out_dir: str, tag: str, placeholders) -> No
             )
 
 
+# (name, url) of each analytics read the REST facade serves, with the
+# request parameters of the api_reads benchmark; ``{rule_id}`` is a
+# materialized segment.
+API_ROUTES = (
+    ("category_totals", "/api/v1/analytics/category-totals?start_date=2024-01-03&end_date=2024-01-20"),
+    ("daily_totals", "/api/v1/analytics/daily-totals?days=14"),
+    ("summary", "/api/v1/analytics/summary"),
+    ("users", "/api/v1/analytics/users?page=2&min_amount=50"),
+    ("users_days", "/api/v1/analytics/users?page=1&transaction_type=UPI&days=14"),
+    ("transactions", "/api/v1/transactions/upi?page=2&per_page=5"),
+    ("sample", "/api/v1/segments/{rule_id}/sample_data"),
+)
+
+
+def dump_api(spark, sf_dir: str, out_dir: str, tag: str, placeholders) -> None:
+    from audience_manager_platform_spark.api import create_app
+    from audience_manager_platform_spark.catalog import Catalog
+    from audience_manager_platform_spark.engine import AudienceEngine
+    from audience_manager_platform_spark.sources import (
+        load_table,
+        unified_transactions_from_events,
+    )
+    from audience_manager_platform_spark.sources.transactions import (
+        transactions_with_id,
+    )
+
+    with tempfile.TemporaryDirectory() as work:
+        events = load_table(spark, sf_dir, "events")
+        txns = unified_transactions_from_events(events)
+        engine = AudienceEngine(spark, Catalog(work), lambda: txns)
+        rule = engine.create_rule("amt", [AMT])
+        engine.execute_rule(rule.rule_id)
+        client = create_app(
+            engine, transactions_detail=lambda: transactions_with_id(events)
+        ).test_client()
+        catalog = {os.path.realpath(work): "<catalog>", work: "<catalog>"}
+        for name, url in API_ROUTES:
+            url = url.format(rule_id=rule.rule_id)
+            client.get(url)  # warm: the captured request is a warm read
+            _write(
+                os.path.join(out_dir, f"api_{name}_{tag}.txt"),
+                _captured(
+                    spark,
+                    f"api-{name}",
+                    lambda: client.get(url),
+                    lambda reply, jobs, n: f"GET {url}: HTTP {reply.status_code}, "
+                    f"{jobs} Spark jobs, {n} SQL executions",
+                ),
+                {**catalog, **placeholders},
+            )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(
         description="Write PLANS.md, or capture plans with --tag/--out."
@@ -431,11 +499,16 @@ def main() -> None:
         action="store_true",
         help="capture one base and one compound segment refresh",
     )
+    ap.add_argument(
+        "--api",
+        action="store_true",
+        help="capture one warm request of each REST analytics read",
+    )
     ap.add_argument("names", nargs="*", help="registry queries to capture")
     args = ap.parse_args()
-    capturing = bool(args.names or args.refresh)
+    capturing = bool(args.names or args.refresh or args.api)
     if not capturing == bool(args.tag) == bool(args.out):
-        ap.error("--tag and --out go together, with NAME... or --refresh")
+        ap.error("--tag and --out go together, with NAME..., --refresh or --api")
 
     from audience_manager_platform_spark import registry
     from audience_manager_platform_spark.session import get_spark
@@ -456,6 +529,8 @@ def main() -> None:
             )
         if args.refresh:
             dump_refresh(spark, args.sf_dir, args.out, args.tag, placeholders)
+        if args.api:
+            dump_api(spark, args.sf_dir, args.out, args.tag, placeholders)
     spark.stop()
 
 
